@@ -228,6 +228,10 @@ object Bench {
       detail.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     catch { case scala.util.control.NonFatal(_) => }
     println(s"""{"queries":$qs,"errors":$errJson,"metric":"total","value":${r3(total)},"unit":"sec","index_build_sec":${r3(indexBuild)},"iterations":$iters,"mode":"$mode","run_totals":$runTotalsJson,"cache_state":$cacheJson,"sf":"$sfDir"}""")
+    // scalars-only summary AFTER the contract line: a consumer that keeps
+    // only a ~2000-char stdout tail parses the totals from this one line
+    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec",""" +
+      s""""index_build_sec":${r3(indexBuild)},"iterations":$iters,"errors":${errors.size}}""")
     spark.stop()
     if (errors.nonEmpty) sys.exit(1)
   }

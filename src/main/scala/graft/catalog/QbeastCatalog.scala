@@ -571,25 +571,14 @@ object QbeastCatalog {
     }
     val spark = org.apache.spark.sql.SparkSession.active
     val conf = spark.sparkContext.hadoopConfiguration
-    // metadata-only commit: on a concurrent-writer conflict, re-snapshot
-    // and re-apply the same sets/unsets (they commute with data commits)
-    var attempts = 0
-    var committed = false
-    while (!committed) {
-      val snapshot = graft.log.QbeastLog.snapshot(location, conf)
-      if (snapshot.isEmpty) return // nothing written yet; catalog entry rules
-      val config = (snapshot.configuration ++ sets) -- unsets
-      val schemaJson = snapshot.schema.map(_.json).getOrElse(return)
-      try {
-        graft.log.QbeastLog.commit(location, conf, snapshot.version,
-          Seq(graft.log.MetaDataAction(schemaJson, config)),
-          operation = "SET TBLPROPERTIES")
-        committed = true
-      } catch {
-        case e: graft.log.ConcurrentCommitException =>
-          attempts += 1
-          if (attempts > 3) throw e
-      }
+    // metadata-only commit: on a concurrent-writer conflict, re-apply
+    // the same sets/unsets to the new head (they commute with data
+    // commits)
+    val start = graft.log.QbeastLog.snapshot(location, conf)
+    if (start.isEmpty) return // nothing written yet; catalog entry rules
+    graft.log.QbeastLog.commitOptimistic(start, conf, "SET TBLPROPERTIES") { base =>
+      base.schema.map(schema => Seq(graft.log.MetaDataAction(schema.json,
+        (base.configuration ++ sets) -- unsets)))
     }
   }
 
@@ -707,29 +696,20 @@ object QbeastCatalog {
       location: String, adds: Seq[TableChange.AddColumn]): Unit = {
     val spark = org.apache.spark.sql.SparkSession.active
     val conf = spark.sparkContext.hadoopConfiguration
-    var attempts = 0
-    var committed = false
-    while (!committed) {
-      val snapshot = graft.log.QbeastLog.snapshot(location, conf)
-      if (snapshot.isEmpty) return // nothing written yet; catalog entry rules
-      val schema = snapshot.schema.getOrElse(return)
-      val fields0 = newFieldsFor(schema, adds)
-      if (fields0.isEmpty) return // retried ALTER: already applied
-      // mapped table: new columns mint a FRESH physical name — re-adding
-      // a dropped/renamed logical name can never resurrect old data
-      val fields =
-        if (!graft.core.model.ColumnMapping.isEnabled(schema)) fields0
-        else fields0.map(graft.core.model.ColumnMapping.mintedField)
-      val widened = StructType(schema.fields ++ fields)
-      try {
-        graft.log.QbeastLog.commit(location, conf, snapshot.version,
-          Seq(graft.log.MetaDataAction(widened.json, snapshot.configuration)),
-          operation = "ADD COLUMNS")
-        committed = true
-      } catch {
-        case e: graft.log.ConcurrentCommitException =>
-          attempts += 1
-          if (attempts > 3) throw e
+    val start = graft.log.QbeastLog.snapshot(location, conf)
+    if (start.isEmpty) return // nothing written yet; catalog entry rules
+    graft.log.QbeastLog.commitOptimistic(start, conf, "ADD COLUMNS") { base =>
+      base.schema.flatMap { schema =>
+        val fields0 = newFieldsFor(schema, adds)
+        // mapped table: new columns mint a FRESH physical name — re-adding
+        // a dropped/renamed logical name can never resurrect old data
+        val fields =
+          if (!graft.core.model.ColumnMapping.isEnabled(schema)) fields0
+          else fields0.map(graft.core.model.ColumnMapping.mintedField)
+        // a retried ALTER that is already applied commits nothing
+        if (fields.isEmpty) None
+        else Some(Seq(graft.log.MetaDataAction(
+          StructType(schema.fields ++ fields).json, base.configuration)))
       }
     }
   }

@@ -1,7 +1,7 @@
 package graft.catalog
 
 import graft.core.model.{QbeastOptions, RemoveFile}
-import graft.log.{ConcurrentCommitException, MetaDataAction, QbeastLog, RemoveFileAction}
+import graft.log.{MetaDataAction, QbeastLog, RemoveFileAction}
 import graft.write.QbeastWriter
 
 import org.apache.spark.sql.connector.catalog._
@@ -92,27 +92,15 @@ final class QbeastStagedTable(
         // all current data files in one commit, record the new schema and
         // the new definition's OPTIONS
         val conf = spark.sparkContext.hadoopConfiguration
-        var attempts = 0
-        var committed = false
-        while (!committed) {
-          val snapshot = QbeastLog.snapshot(location, conf)
-          if (snapshot.isEmpty) committed = true
-          else {
-            val now = System.currentTimeMillis()
-            val actions =
-              MetaDataAction(declaredSchema.json,
+        QbeastLog.commitOptimistic(QbeastLog.snapshot(location, conf), conf, "REPLACE") {
+          snapshot =>
+            if (snapshot.isEmpty) None
+            else {
+              val now = System.currentTimeMillis()
+              Some(MetaDataAction(declaredSchema.json,
                 snapshot.configuration ++ stagedOptionConfig) +:
-                snapshot.files.map(f => RemoveFileAction(RemoveFile(f.path, now, f.size)))
-            try {
-              QbeastLog.commit(location, conf, snapshot.version, actions,
-                operation = "REPLACE")
-              committed = true
-            } catch {
-              case e: ConcurrentCommitException =>
-                attempts += 1
-                if (attempts > 3) throw e
+                snapshot.files.map(f => RemoveFileAction(RemoveFile(f.path, now, f.size))))
             }
-          }
         }
       case None => // plain CREATE: entry only, data comes later
     }

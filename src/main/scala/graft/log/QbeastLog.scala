@@ -4,6 +4,7 @@ import graft.core.model._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileAlreadyExistsException, FileSystem, Path}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.{DataType, StructType}
 
 import java.io.{BufferedReader, InputStreamReader}
@@ -590,22 +591,63 @@ object QbeastLog extends org.apache.spark.internal.Logging {
       catch { case scala.util.control.NonFatal(_) => None }
     val ts = math.max(System.currentTimeMillis(), prevIct.map(_ + 1L).getOrElse(Long.MinValue))
     val allActions = CommitInfoAction(operation, ts) +: actions
-    val payload = allActions.map(QbeastLogSerde.actionToJsonLine).mkString("", "\n", "\n")
-    writeAtomic(fs, dir, target, payload,
+    writeAtomicLines(fs, dir, target, allActions.iterator.map(QbeastLogSerde.actionToJsonLine),
       s"log version $next already written by a concurrent writer")
     next
   }
 
-  /** Streaming variant of [[writeAtomic]]: `lines` are written one by
-   * one to the tmp file (O(1) driver memory), then published with the
-   * same atomic put-if-absent primitive. Used by checkpoints, whose
-   * payload is one line per live file. */
+  /** Retries [[commitOptimistic]] grants after the first attempt. */
+  val MaxCommitRetries = 20
+
+  /** The optimistic commit every log writer goes through (reference:
+   * `IndexedTable.scala` conflict-retry loop). `actionsAt(start)` is
+   * committed against `start`; when another writer wins the version,
+   * the head is re-read and `actionsAt(head)` re-derives the actions
+   * against it, applying whatever [[Rebase]] rules the commit needs.
+   * `None` stops without committing; a throw aborts. The first attempt
+   * reads nothing beyond `start`. Returns the committed version, or
+   * None when `actionsAt` declined; rethrows the conflict after
+   * [[MaxCommitRetries]] lost races. */
+  def commitOptimistic(
+      start: QbeastSnapshot,
+      conf: Configuration,
+      operation: String)(
+      actionsAt: QbeastSnapshot => Option[Seq[LogAction]]): Option[Long] = {
+    var base = start
+    var retries = 0
+    while (true) actionsAt(base) match {
+      case None => return None
+      case Some(actions) =>
+        try return Some(commit(start.tablePath, conf, base.version, actions, operation))
+        catch {
+          case _: ConcurrentCommitException if retries < MaxCommitRetries =>
+            retries += 1
+            base = snapshot(start.tablePath, conf)
+        }
+    }
+    None // unreachable: the loop exits only by return or throw
+  }
+
+  /** Publish `lines` as `target`, atomically and only if absent. The
+   * lines stream to a tmp file one by one (O(1) driver memory: a
+   * checkpoint payload is one line per live file), then the tmp file
+   * is published. Readers must never observe a partial file AND
+   * exactly one writer may claim a version. Local filesystems: POSIX
+   * rename OVERWRITES an existing destination, so the atomic
+   * put-if-absent primitive is a hard link (fails with
+   * FileAlreadyExists). HDFS-like stores: rename refuses existing
+   * destinations and is atomic. Object stores without either need a
+   * LogStore layer, exactly like Delta. */
   private def writeAtomicLines(
       fs: FileSystem,
       dir: Path,
       target: Path,
       lines: Iterator[String],
       conflictMessage: String): Unit = {
+    // decide from the RESOLVED filesystem, never the raw path: a
+    // scheme-less path on a cluster with fs.defaultFS=hdfs:// must go
+    // through that filesystem — routing it to java.nio would write the
+    // commit to the driver's LOCAL disk where no reader ever sees it
     val isLocal = fs.getScheme == "file"
     if (isLocal) {
       val dst = java.nio.file.Paths.get(
@@ -635,62 +677,10 @@ object QbeastLog extends org.apache.spark.internal.Logging {
         }
       if (!renamed) {
         fs.delete(tmp, false)
-        if (fs.exists(target)) throw new ConcurrentCommitException(conflictMessage)
-        else throw new java.io.IOException(
-          s"failed to rename $tmp to $target (no conflicting file present)")
-      }
-    }
-  }
-
-  /** Readers must never observe a partial file AND exactly one writer
-   * may claim a version. Local filesystems: POSIX rename OVERWRITES an
-   * existing destination, so the atomic put-if-absent primitive is a
-   * hard link (fails with FileAlreadyExists). HDFS-like stores: rename
-   * refuses existing destinations and is atomic. Object stores without
-   * either need a LogStore layer, exactly like Delta. */
-  private def writeAtomic(
-      fs: FileSystem,
-      dir: Path,
-      target: Path,
-      payload: String,
-      conflictMessage: String): Unit = {
-    val bytes = payload.getBytes(StandardCharsets.UTF_8)
-    // decide from the RESOLVED filesystem, never the raw path: a
-    // scheme-less path on a cluster with fs.defaultFS=hdfs:// must go
-    // through that filesystem — routing it to java.nio would write the
-    // commit to the driver's LOCAL disk where no reader ever sees it
-    val isLocal = fs.getScheme == "file"
-    if (isLocal) {
-      val dst = java.nio.file.Paths.get(
-        Option(target.toUri.getPath).getOrElse(target.toString))
-      val tmp = dst.resolveSibling(s".${dst.getFileName}.${java.util.UUID.randomUUID()}.tmp")
-      java.nio.file.Files.createDirectories(dst.getParent)
-      java.nio.file.Files.write(tmp, bytes)
-      try {
-        java.nio.file.Files.createLink(dst, tmp)
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          throw new ConcurrentCommitException(conflictMessage)
-      } finally {
-        java.nio.file.Files.deleteIfExists(tmp)
-      }
-    } else {
-      val tmp = new Path(dir, s".${target.getName}.${java.util.UUID.randomUUID()}.tmp")
-      val out = fs.create(tmp, false)
-      try out.write(bytes)
-      finally out.close()
-      val renamed =
-        try fs.rename(tmp, target)
-        catch {
-          case _: FileAlreadyExistsException | _: org.apache.hadoop.fs.PathExistsException =>
-            false
-        }
-      if (!renamed) {
-        fs.delete(tmp, false)
         // rename returns false for IO reasons too; only an existing
         // destination is a genuine writer conflict — everything else
         // must surface as the IO failure it is, or the caller retries
-        // 20 times against a broken filesystem
+        // against a broken filesystem
         if (fs.exists(target)) throw new ConcurrentCommitException(conflictMessage)
         else throw new java.io.IOException(
           s"failed to rename $tmp to $target (no conflicting file present)")
@@ -698,6 +688,64 @@ object QbeastLog extends org.apache.spark.internal.Logging {
     }
   }
 
+}
+
+/** The conflict rules a commit re-applies when
+ * [[QbeastLog.commitOptimistic]] hands it a head that moved past its
+ * start snapshot. Each commit applies the rules that fit its actions. */
+object Rebase {
+
+  /** Every file the commit removes or re-masks must still be live in
+   * `head`, with the deletion vector it had in `start`. A file another
+   * commit rewrote, removed or re-masked means the commit's survivors
+   * or vectors were computed from stale rows: committing would
+   * duplicate them, resurrect overwritten data or resurrect the rows a
+   * concurrent merge-on-read DELETE masked. */
+  def untouched(start: QbeastSnapshot, head: QbeastSnapshot, paths: Iterator[String]): Boolean = {
+    val live = head.files.iterator.map(_.path).toSet
+    paths.forall(p => live.contains(p) &&
+      head.dvs.get(p).map(_.dvPath) == start.dvs.get(p).map(_.dvPath))
+  }
+
+  /** CHECK constraints `head` has and `checked` lacks gate the commit's
+   * new rows too, or the race lets violating rows slip past a just-added
+   * CHECK (Delta resolves the same conflict through metadata-change
+   * detection). The commit's own written files are read back under the
+   * schema they were written with, so the rows checked are the rows
+   * committed whatever the input plan was; the cost is bounded by the
+   * commit's output. Returns the constraints checked so far, so a later
+   * rebase validates each constraint once. */
+  def revalidate(
+      spark: SparkSession,
+      head: QbeastSnapshot,
+      checked: Map[String, String],
+      schema: StructType,
+      adds: Seq[IndexFile],
+      context: String): Map[String, String] = {
+    val fresh = graft.write.Constraints.of(head.configuration)
+      .filter { case (k, v) => !checked.get(k).contains(v) }
+    if (fresh.nonEmpty && adds.nonEmpty)
+      graft.write.Constraints.validate(
+        ColumnMapping.readParquet(spark, schema,
+          adds.map(f => new Path(head.tablePath, f.path).toString)),
+        fresh, context)
+    checked ++ fresh
+  }
+
+  /** A revision is self-contained (its own transformations; its files
+   * carry its id), so when another writer claimed the commit's new
+   * revision id, the revision and its files are renumbered past the
+   * head's ids, with no re-indexing. */
+  def renumber(
+      head: QbeastSnapshot,
+      revision: Option[Revision],
+      adds: Seq[IndexFile]): (Option[Revision], Seq[IndexFile]) = revision match {
+    case Some(r) if head.lastRevisionID >= r.revisionID =>
+      val id = head.lastRevisionID + 1
+      (Some(r.copy(revisionID = id)),
+        adds.map(f => if (f.revisionId == r.revisionID) f.copy(revisionId = id) else f))
+    case _ => (revision, adds)
+  }
 }
 
 class ConcurrentCommitException(msg: String) extends RuntimeException(msg)

@@ -486,6 +486,8 @@ object Dedup {
         sequence(lit(0), size(ds) - 2),
         i => transform(slice(ds, i + lit(2), size(ds)),
           x => struct(element_at(ds, i + 1).as("id_a"), x.as("id_b")))))).as("p"))
+      // a non-unique idCol lists one id twice: never pair it with itself
+      .filter(col("p.id_a") =!= col("p.id_b"))
       .select(col("p.id_a"), col("p.id_b"))
       .groupBy("id_a", "id_b")
       .agg(count(lit(1)).as("shared_fp"))

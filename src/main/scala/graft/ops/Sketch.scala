@@ -126,19 +126,11 @@ object Sketch {
       states: DataFrame,
       keyCol: String,
       state: Column): DataFrame = {
-    // cached (LAZY) once: the pairwise self-join otherwise RE-EXECUTES
-    // the states' whole upstream plan for each side — for t40-shaped
-    // callers that plan is the corpus scan + explode + KMV aggregation,
-    // so the corpus was scanned twice for a result derived from
-    // O(groups·k) longs of state. A lazy persist makes both join sides
-    // read ONE InMemoryRelation (the aggregation runs once when the
-    // join first executes) without the eager extra job a
-    // localCheckpoint would schedule — measured at bench SF the eager
-    // job cost MORE than the second scan it saved (0.46→0.73 s),
-    // while the lazy cache wins in both regimes. The entry is
-    // O(groups·k) longs and lives until GC/session end — the sketch
-    // kit's whole point is that this state is tiny.
-    val mat = states.select(col(keyCol).as("_k"), state.as("_s")).persist()
+    // no cache: both join sides plan the states' upstream identically,
+    // so adaptive execution reuses the state aggregation's shuffle
+    // (ReusedExchange) and the corpus is scanned once. A persist here
+    // would leak one CacheManager entry per call.
+    val mat = states.select(col(keyCol).as("_k"), state.as("_s"))
     val a = mat.select(col("_k").as("src_a"), col("_s").as("_sa"))
     val b = mat.select(col("_k").as("src_b"), col("_s").as("_sb"))
     val ov = shims.column(graft.expressions.KmvOverlapExpr(

@@ -770,39 +770,13 @@ class QbeastTable private (spark: SparkSession, tablePath: String) {
     val actions =
       adds.map(f => AddFileAction(f, dataChange = false)) ++
         removes.map(f => RemoveFileAction(RemoveFile(f.path, now, f.size)))
-    // same public retry knob as the write path — a rebase here is cheap
-    // (re-snapshot + re-commit, no re-indexing), so under heavy append
-    // concurrency the layout rewrite keeps trying instead of aborting
-    val retries = math.max(3, spark.conf
-      .getOption("spark.qbeast.index.numberOfRetries").map(_.toInt).getOrElse(2))
-    var attempt = 0
-    var base = s
-    while (attempt >= 0) {
-      try {
-        QbeastLog.commit(tablePath, conf, base.version, actions, operation = "OPTIMIZE")
-        attempt = -1
-      } catch {
-        case e: ConcurrentCommitException =>
-          attempt += 1
-          if (attempt > retries) throw e
-          base = QbeastLog.snapshot(tablePath, conf)
-          // Rebase safety: if a concurrent operation (another optimize,
-          // an overwrite) already removed any file we are rewriting,
-          // blindly re-committing would duplicate its rows (our adds
-          // land, the duplicate remove replays as a no-op) or resurrect
-          // overwritten data. A concurrent merge-on-read DELETE that
-          // re-masked a file is the same hazard in row form: our adds
-          // were materialized with the OLD mask, so committing would
-          // resurrect the concurrently deleted rows (and the remove
-          // would drop the new vector). Abort in both cases — the
-          // rewrite is purely a layout change, so dropping it is always
-          // safe; our orphaned parquet files are reclaimed by vacuum.
-          val live = base.files.map(_.path).toSet
-          if (!removes.forall(f => live.contains(f.path))) return
-          if (!removes.forall(f =>
-            base.dvs.get(f.path).map(_.dvPath) == s.dvs.get(f.path).map(_.dvPath)))
-            return
-      }
+    // a rebase here is cheap (re-snapshot + re-commit, no
+    // re-indexing). The rewrite is purely a layout change, so when a
+    // concurrent commit touched a file it rewrites, dropping it is
+    // always safe; our orphaned parquet files are reclaimed by vacuum.
+    QbeastLog.commitOptimistic(s, conf, "OPTIMIZE") { base =>
+      if ((base ne s) && !Rebase.untouched(s, base, removes.iterator.map(_.path))) None
+      else Some(actions)
     }
   }
 
@@ -2049,15 +2023,12 @@ class QbeastTable private (spark: SparkSession, tablePath: String) {
   }
 
   /**
-   * THE commit loop for every row-level mutation — copy-on-write
-   * (adds + removes) and merge-on-read (dv actions, optionally with
-   * adds and removes) alike. Benign conflicts (unrelated appends)
-   * retry against the new version; a conflict that touched one of OUR
-   * target files — a remove/dv target rewritten or re-masked, so our
-   * survivors/vectors were computed against stale state — aborts
-   * (retrying would resurrect deleted rows or double-apply changes).
-   * Constraints added concurrently re-validate the adds; a
-   * concurrently claimed revision id renumbers ours.
+   * The commit of every row-level mutation — copy-on-write (adds +
+   * removes) and merge-on-read (dv actions, optionally with adds and
+   * removes) alike — with all three [[Rebase]] rules. Benign conflicts
+   * (unrelated appends) retry against the new version; a conflict that
+   * touched one of OUR target files aborts (retrying would resurrect
+   * deleted rows or double-apply changes).
    *
    * `cdc`: None (default) derives change data from the file diff
    * ([[writeCdcData]]); `Some(action)` means the caller already
@@ -2087,10 +2058,9 @@ class QbeastTable private (spark: SparkSession, tablePath: String) {
         graft.write.PreCommitHook.loadHooks(Map("hook.dml" -> cls)),
         spark, adds0.toVector)
     }
-    var base = initial
     var adds = adds0
     var newRevision = newRevision0
-    var rebases = 0
+    var checked = graft.write.Constraints.of(initial.configuration)
     val now = System.currentTimeMillis()
     // the row content of the change is fixed before the commit loop —
     // rebases renumber revisions, never rows — so the change file is
@@ -2104,8 +2074,21 @@ class QbeastTable private (spark: SparkSession, tablePath: String) {
         catch { case scala.util.control.NonFatal(_) => }
       case _ =>
     }
-    var committed = false
-    def commitMutationLoop(): Unit = while (!committed) {
+    val targets = removes.map(_.path) ++
+      dvActions.collect { case DvFileAction(p, _, _) => p }
+    try QbeastLog.commitOptimistic(initial, conf, operation) { base =>
+      if (base ne initial) {
+        if (!Rebase.untouched(initial, base, targets.iterator))
+          throw new java.util.ConcurrentModificationException(
+            s"files targeted by $operation were rewritten, removed or " +
+              "re-masked concurrently (optimize/overwrite/another DML); " +
+              "re-run the operation")
+        checked = Rebase.revalidate(spark, base, checked, initial.schema.get, adds,
+          s"$operation (rebased)")
+        val (r, f) = Rebase.renumber(base, newRevision, adds)
+        newRevision = r
+        adds = f
+      }
       val actions = mutable.ArrayBuffer.empty[LogAction]
       newRevision.foreach { r =>
         actions += MetaDataAction(
@@ -2118,57 +2101,8 @@ class QbeastTable private (spark: SparkSession, tablePath: String) {
       actions ++= removes.map(f => RemoveFileAction(RemoveFile(f.path, now, f.size)))
       actions ++= dvActions
       actions ++= cdcAction
-      try {
-        QbeastLog.commit(tablePath, conf, base.version, actions.toSeq, operation)
-        committed = true
-      } catch {
-        case e: ConcurrentCommitException =>
-          rebases += 1
-          if (rebases > 5) throw e
-          val rebased = QbeastLog.snapshot(tablePath, conf)
-          val live = rebased.files.map(f => f.path).toSet
-          // every file WE remove or re-mask must be untouched since
-          // `initial`: still live, and its mask unchanged (a concurrent
-          // merge-on-read DELETE re-masking a target means our
-          // survivors/vectors were computed with the old mask —
-          // committing would resurrect its deleted rows or lose ours)
-          def untouched(path: String): Boolean =
-            live.contains(path) &&
-              rebased.dvs.get(path).map(_.dvPath) ==
-                initial.dvs.get(path).map(_.dvPath)
-          val targets = removes.iterator.map(_.path) ++
-            dvActions.iterator.collect { case DvFileAction(p, _, _) => p }
-          if (!targets.forall(untouched))
-            throw new java.util.ConcurrentModificationException(
-              s"files targeted by $operation were rewritten, removed or " +
-                "re-masked concurrently (optimize/overwrite/another DML); " +
-                "re-run the operation")
-          // a CHECK constraint added since this mutation's validation
-          // pass must gate its rows too — re-validate the written adds
-          // (bounded by the mutation's own output) against constraints
-          // the rebased head has that the initial snapshot had not
-          val alreadyChecked = graft.write.Constraints.of(initial.configuration)
-          val newConstraints = graft.write.Constraints.of(rebased.configuration)
-            .filter { case (k, v) => !alreadyChecked.get(k).contains(v) }
-          if (newConstraints.nonEmpty && adds.nonEmpty) {
-            graft.write.Constraints.validate(
-              readTableFiles(initial, adds), newConstraints,
-              s"$operation (rebased)")
-          }
-          newRevision.foreach { r =>
-            // our freshly cut revision id was claimed: renumber it and
-            // the files written into it (revisions are self-contained)
-            if (rebased.lastRevisionID >= r.revisionID) {
-              val nid = rebased.lastRevisionID + 1
-              adds = adds.map(f =>
-                if (f.revisionId == r.revisionID) f.copy(revisionId = nid) else f)
-              newRevision = Some(r.copy(revisionID = nid))
-            }
-          }
-          base = rebased
-      }
+      Some(actions.toSeq)
     }
-    try commitMutationLoop()
     catch { case e: Throwable => dropOrphanCdc(); throw e }
   }
 
@@ -2189,40 +2123,22 @@ class QbeastTable private (spark: SparkSession, tablePath: String) {
     // the "existing data satisfies the constraint" guarantee must hold
     // at the version the constraint COMMITS against, not merely at some
     // earlier read: a writer landing rows between our validation scan
-    // and our commit slips in unvalidated otherwise. Re-validate
-    // whenever the head moved past the last validated version (the
-    // common no-concurrency case pays exactly one scan).
-    var validatedVersion = -2L
-    var committed = false
-    var attempts = 0
-    while (!committed) {
-      val base = snapshot
-      require(!base.isEmpty, s"no qbeast table at $tablePath")
+    // and our commit slips in unvalidated otherwise. So every attempt
+    // validates the head it commits against (the common
+    // no-concurrency case pays exactly one scan).
+    alterConfiguration({ base =>
       require(!base.configuration.contains(key), s"constraint $name already exists")
-      if (base.version != validatedVersion) {
-        graft.write.Constraints.validate(
-          pinnedRead(base), Map(name -> expression), "existing table")
-        validatedVersion = base.version
-      }
-      val actions = Seq(MetaDataAction(
-        base.schema.map(_.json).getOrElse(""),
-        base.configuration + (key -> expression)))
-      try {
-        QbeastLog.commit(tablePath, conf, base.version, actions, "ADD CONSTRAINT")
-        committed = true
-      } catch {
-        case e: ConcurrentCommitException =>
-          attempts += 1
-          if (attempts > 5) throw e
-      }
-    }
+      graft.write.Constraints.validate(
+        pinnedRead(base), Map(name -> expression), "existing table")
+      base.configuration + (key -> expression)
+    }, "ADD CONSTRAINT")
   }
 
   /** Drop a CHECK constraint; writes stop validating it immediately. */
   def dropConstraint(name: String): Unit = {
     val key = graft.write.Constraints.Prefix + name
     require(snapshot.configuration.contains(key), s"no constraint named $name")
-    alterConfiguration(_ - key, "DROP CONSTRAINT")
+    alterConfiguration(_.configuration - key, "DROP CONSTRAINT")
   }
 
   /** The table's CHECK constraints, name → SQL expression. */
@@ -2290,33 +2206,21 @@ class QbeastTable private (spark: SparkSession, tablePath: String) {
   private val SketchListProps =
     Seq("qbeast.bloomFilterColumns", "qbeast.hllColumns", "qbeast.kllColumns")
 
-  /** Optimistic schema-change commit shared by [[renameColumn]] and
-   * [[dropColumn]]: `change` inspects the current snapshot + schema and
-   * returns (new schema, new configuration, operation) — or None for a
-   * no-op. Validation failures propagate; a lost commit race re-reads
-   * and re-validates against the winner's state. */
-  private def commitColumnChange(
+  /** Optimistic schema-change commit shared by [[renameColumn]],
+   * [[dropColumn]] and [[widenColumn]]: `change` inspects the head
+   * snapshot + schema and returns (new schema, new configuration) — or
+   * None for a no-op. Validation failures propagate; a lost commit race
+   * re-validates against the winner's state. */
+  private def commitColumnChange(operation: String)(
       change: (QbeastSnapshot, org.apache.spark.sql.types.StructType) =>
-        Option[(org.apache.spark.sql.types.StructType, Map[String, String], String)]): Unit = {
-    var attempts = 0
-    var committed = false
-    while (!committed) {
-      val base = snapshot
-      require(!base.isEmpty, s"no qbeast table at $tablePath")
+        Option[(org.apache.spark.sql.types.StructType, Map[String, String])]): Unit = {
+    val start = snapshot
+    require(!start.isEmpty, s"no qbeast table at $tablePath")
+    QbeastLog.commitOptimistic(start, conf, operation) { base =>
       val schema = base.schema.getOrElse(
         throw new IllegalStateException(s"qbeast table at $tablePath has no schema"))
-      change(base, schema) match {
-        case None => return
-        case Some((newSchema, config, operation)) =>
-          try {
-            QbeastLog.commit(tablePath, conf, base.version,
-              Seq(MetaDataAction(newSchema.json, config)), operation)
-            committed = true
-          } catch {
-            case e: ConcurrentCommitException =>
-              attempts += 1
-              if (attempts > 5) throw e
-          }
+      change(base, schema).map { case (newSchema, config) =>
+        Seq(MetaDataAction(newSchema.json, config))
       }
     }
   }
@@ -2354,7 +2258,7 @@ class QbeastTable private (spark: SparkSession, tablePath: String) {
   def renameColumn(existingName: String, newName: String): Unit = {
     require(newName.nonEmpty && !newName.contains(".") && !newName.contains(","),
       s"bad column name '$newName'")
-    commitColumnChange { (base, schema) =>
+    commitColumnChange(s"RENAME COLUMN $existingName TO $newName") { (base, schema) =>
       val field = schema.fields.find(_.name.equalsIgnoreCase(existingName)).getOrElse(
         throw new IllegalArgumentException(
           s"column $existingName does not exist (have ${schema.fieldNames.mkString(", ")})"))
@@ -2372,8 +2276,7 @@ class QbeastTable private (spark: SparkSession, tablePath: String) {
         // renaming a GENERATED column carries its definition along
         Some((renamed,
           renameGenKey(mappedConfig(base.configuration, field.name, Some(newName)),
-            field.name, Some(newName)),
-          s"RENAME COLUMN ${field.name} TO $newName"))
+            field.name, Some(newName))))
       }
     }
   }
@@ -2388,7 +2291,7 @@ class QbeastTable private (spark: SparkSession, tablePath: String) {
    * CHECK constraint references.
    */
   def dropColumn(name: String): Unit = {
-    commitColumnChange { (base, schema) =>
+    commitColumnChange(s"DROP COLUMNS $name") { (base, schema) =>
       val field = schema.fields.find(_.name.equalsIgnoreCase(name)).getOrElse(
         throw new IllegalArgumentException(
           s"column $name does not exist (have ${schema.fieldNames.mkString(", ")})"))
@@ -2409,8 +2312,7 @@ class QbeastTable private (spark: SparkSession, tablePath: String) {
       // dropping a GENERATED column drops its definition with it
       Some((remaining,
         renameGenKey(mappedConfig(base.configuration, field.name, None),
-          field.name, None),
-        s"DROP COLUMNS ${field.name}"))
+          field.name, None)))
     }
   }
 
@@ -2428,7 +2330,7 @@ class QbeastTable private (spark: SparkSession, tablePath: String) {
    * predicates micros).
    */
   def widenColumn(name: String, newType: org.apache.spark.sql.types.DataType): Unit = {
-    commitColumnChange { (base, schema) =>
+    commitColumnChange(s"ALTER COLUMN $name TYPE ${newType.simpleString}") { (base, schema) =>
       val field = schema.fields.find(_.name.equalsIgnoreCase(name)).getOrElse(
         throw new IllegalArgumentException(
           s"column $name does not exist (have ${schema.fieldNames.mkString(", ")})"))
@@ -2450,30 +2352,20 @@ class QbeastTable private (spark: SparkSession, tablePath: String) {
             TypeWidening.withTypeChange(f, newType, base.version + 1)
           else f
         })
-        Some((widened, base.configuration,
-          s"ALTER COLUMN ${field.name} TYPE ${newType.simpleString}"))
+        Some((widened, base.configuration))
       }
     }
   }
 
-  /** Commit a configuration change (optimistic, rebase on conflict). */
+  /** Commit a configuration change, re-derived from each head the
+   * commit is attempted against. */
   private def alterConfiguration(
-      change: Map[String, String] => Map[String, String],
+      change: QbeastSnapshot => Map[String, String],
       operation: String): Unit = {
-    var attempts = 0
-    var committed = false
-    while (!committed) {
-      val base = snapshot
-      val actions = Seq(MetaDataAction(
-        base.schema.map(_.json).getOrElse(""), change(base.configuration)))
-      try {
-        QbeastLog.commit(tablePath, conf, base.version, actions, operation)
-        committed = true
-      } catch {
-        case e: ConcurrentCommitException =>
-          attempts += 1
-          if (attempts > 5) throw e
-      }
+    val start = snapshot
+    require(!start.isEmpty, s"no qbeast table at $tablePath")
+    QbeastLog.commitOptimistic(start, conf, operation) { base =>
+      Some(Seq(MetaDataAction(base.schema.map(_.json).getOrElse(""), change(base))))
     }
   }
 
@@ -2552,10 +2444,7 @@ class QbeastTable private (spark: SparkSession, tablePath: String) {
     // lands on, so a concurrent commit in the retry window is rolled
     // back by the restore rather than silently corrupting the diff
     // (Delta's RESTORE resolves the same race the same way)
-    var base = current
-    var attempts = 0
-    var committed = false
-    while (!committed) {
+    QbeastLog.commitOptimistic(current, conf, "RESTORE") { base =>
       val basePaths = base.files.map(_.path).toSet
       val resurrect = target.files.filterNot(f => basePaths.contains(f.path))
       // only files ABSENT from the head we commit against can have been
@@ -2587,21 +2476,11 @@ class QbeastTable private (spark: SparkSession, tablePath: String) {
           !target.dvs.contains(f.path))
       val targetByPath = target.files.map(f => f.path -> f).toMap
       val now = System.currentTimeMillis()
-      val actions: Seq[LogAction] =
-        target.schema.map(sc => MetaDataAction(sc.json, target.configuration)).toSeq ++
-          resurrect.map(f => AddFileAction(f, dataChange = true)) ++
-          clearDvs.map(f => AddFileAction(targetByPath(f.path), dataChange = true)) ++
-          drop.map(f => RemoveFileAction(RemoveFile(f.path, now, f.size))) ++
-          setDvs.map { case (p, i) => DvFileAction(p, i.dvPath, i.cardinality) }
-      try {
-        QbeastLog.commit(tablePath, conf, base.version, actions, operation = "RESTORE")
-        committed = true
-      } catch {
-        case e: ConcurrentCommitException =>
-          attempts += 1
-          if (attempts > 5) throw e
-          base = snapshot
-      }
+      Some(target.schema.map(sc => MetaDataAction(sc.json, target.configuration)).toSeq ++
+        resurrect.map(f => AddFileAction(f, dataChange = true)) ++
+        clearDvs.map(f => AddFileAction(targetByPath(f.path), dataChange = true)) ++
+        drop.map(f => RemoveFileAction(RemoveFile(f.path, now, f.size))) ++
+        setDvs.map { case (p, i) => DvFileAction(p, i.dvPath, i.cardinality) })
     }
   }
 

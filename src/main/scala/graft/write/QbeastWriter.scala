@@ -72,12 +72,7 @@ object QbeastWriter {
           case _ =>
         }
       }
-      // idempotent writes via txnAppId/txnVersion (reference:
-      // DeltaMetadataWriter.scala:164-174)
-      (options.txnAppId, options.txnVersion) match {
-        case (Some(app), Some(v)) if snapshot.txns.get(app).exists(_ >= v) => return
-        case _ =>
-      }
+      if (txnCommitted(options, snapshot)) return
       try {
         writeOnce(spark, tablePath, data, options, mode, snapshot)
         committed = true
@@ -326,8 +321,8 @@ object QbeastWriter {
       if (hooks.isEmpty) Map.empty[String, String]
       else PreCommitHook.runHooks(hooks, spark, files0)
 
-    // ---- commit (with cheap rebase on benign conflicts) ----
-    var revisionToCommit = revision1
+    // ---- commit ----
+    var newRevision = Some(revision1).filter(_ => isNewRevision)
     var files = files0
 
     def buildActions(base: QbeastSnapshot): Seq[LogAction] = {
@@ -405,7 +400,7 @@ object QbeastWriter {
       val config = base.configuration ++ hookTags ++ cdfTag ++ bloomTag ++ hllTag ++
         kllTag ++ autoTag ++ dvTag ++ genTag ++
         Map("qbeast.lastRevisionID" ->
-          math.max(revisionToCommit.revisionID, base.lastRevisionID).toString) --
+          math.max(newRevision.getOrElse(revision1).revisionID, base.lastRevisionID).toString) --
         bloomDrop -- hllDrop -- kllDrop -- autoDrop -- dvDrop -- genDrop
       // Re-derive the schema against the CURRENT base, not the snapshot
       // this write started from: a concurrent append may itself have
@@ -445,7 +440,7 @@ object QbeastWriter {
         }
       }
       actions += MetaDataAction(schemaToCommit.json, config)
-      if (isNewRevision) actions += RevisionAction(revisionToCommit)
+      newRevision.foreach(actions += RevisionAction(_))
       (options.txnAppId, options.txnVersion) match {
         case (Some(app), Some(v)) => actions += TxnAction(app, v)
         case _ =>
@@ -458,79 +453,41 @@ object QbeastWriter {
       actions.toSeq
     }
 
-    var base = snapshot
-    var committed = false
-    var rebases = 0
-    // constraints validated so far — grows as rebases discover new
-    // ones, so a constraint landing mid-write is validated exactly
-    // once, not on every subsequent rebase
-    var checkedConstraints = Constraints.of(snapshot.configuration)
-    while (!committed) {
-      try {
-        QbeastLog.commit(tablePath, conf, base.version, buildActions(base),
-          operation = if (isOverwrite) "OVERWRITE" else "WRITE")
-        committed = true
-      } catch {
-        case e: ConcurrentCommitException =>
-          rebases += 1
-          if (rebases > 20) throw e
-          val rebased = QbeastLog.snapshot(tablePath, conf)
-          if (isOverwrite) throw e // overwrite conflicts need a full re-run
-          // ErrorIfExists/Ignore/Overwrite semantics were resolved
-          // against the INITIAL (empty) snapshot; a concurrent writer
-          // creating the table invalidates that resolution — only a
-          // plain append can rebase safely. ErrorIfExists must now
-          // fail, Ignore must now no-op, empty-table Overwrite would
-          // otherwise UNION with the winner's data.
-          if (mode != SaveMode.Append) mode match {
-            case SaveMode.Ignore => return // table exists now: no-op
-            case _ => throw new IllegalStateException(
-              s"qbeast table was created concurrently at $tablePath " +
-                s"(SaveMode.$mode resolved against an empty table); " +
-                "re-run the write", e)
+    val operation = if (isOverwrite) "OVERWRITE" else "WRITE"
+    // Overwrite, ErrorIfExists and Ignore were resolved against
+    // `snapshot` (its files, or an empty table): a lost race re-runs the
+    // whole write in `save`. Only a plain append rebases.
+    if (mode != SaveMode.Append)
+      QbeastLog.commit(tablePath, conf, snapshot.version, buildActions(snapshot), operation)
+    else {
+      var checked = Constraints.of(snapshot.configuration)
+      QbeastLog.commitOptimistic(snapshot, conf, operation) { base =>
+        // a concurrent attempt of this very batch may have committed the
+        // same (txnAppId, txnVersion): our files are orphans then (the
+        // streaming sink's exactly-once contract)
+        if (txnCommitted(options, base)) None
+        else {
+          if (base ne snapshot) {
+            checked = Rebase.revalidate(spark, base, checked, tableSchema, files,
+              "written (rebased)")
+            val (r, f) = Rebase.renumber(base, newRevision, files)
+            newRevision = r
+            files = f
           }
-          // idempotency re-check: the same (txnAppId, txnVersion) may
-          // have been committed by a concurrent attempt of this very
-          // batch — committing again would double-write it (the
-          // streaming sink's exactly-once contract)
-          (options.txnAppId, options.txnVersion) match {
-            case (Some(app), Some(v)) if rebased.txns.get(app).exists(_ >= v) =>
-              return // rows already committed; our files are orphans
-            case _ =>
-          }
-          // a constraint that landed AFTER our validation pass must
-          // gate this data too, or the race lets violating rows slip
-          // past a just-added CHECK (Delta resolves the same conflict
-          // through metadata-change detection)
-          val newConstraints = Constraints.of(rebased.configuration)
-            .filter { case (k, v) => !checkedConstraints.get(k).contains(v) }
-          if (newConstraints.nonEmpty) {
-            // our files are already written, so this late constraint can
-            // only be checked by RE-EXECUTING the input — sound only for
-            // a deterministic plan (the written rows ARE the re-read
-            // rows); otherwise fail the write rather than risk admitting
-            // rows the re-validation never saw
-            val analyzed = classic(data).queryExecution.analyzed
-            require(!analyzed.exists(p => p.expressions.exists(!_.deterministic)),
-              s"CHECK constraint(s) ${newConstraints.keys.mkString(", ")} were " +
-                "added concurrently with this write and the input plan is " +
-                "nondeterministic, so the written rows cannot be re-validated; " +
-                "re-run the write")
-            Constraints.validate(data, newConstraints, "written (rebased)")
-            checkedConstraints ++= newConstraints
-          }
-          // a revision is self-contained (its own transformations; its
-          // files carry its id), so when a concurrent writer claimed our
-          // revision id we just re-number ours — no re-indexing
-          if (isNewRevision && rebased.lastRevisionID >= revisionToCommit.revisionID) {
-            val newId = rebased.lastRevisionID + 1
-            revisionToCommit = revisionToCommit.copy(revisionID = newId)
-            files = files.map(_.copy(revisionId = newId))
-          }
-          base = rebased
+          Some(buildActions(base))
+        }
       }
     }
   }
+
+  /** Idempotent writes via txnAppId/txnVersion (reference:
+   * DeltaMetadataWriter.scala:164-174): true when `snap` already holds
+   * this batch. */
+  private def txnCommitted(options: QbeastOptions, snap: QbeastSnapshot): Boolean =
+    (options.txnAppId, options.txnVersion) match {
+      case (Some(app), Some(v)) => snap.txns.get(app).exists(_ >= v)
+      case _ => false
+    }
 
   /** Types a per-file bloom filter can cover: anything with a stable
    * xxhash64 of an equality literal (atomic, non-nested). */

@@ -193,6 +193,25 @@ class ConstraintSpec extends AnyFunSuite {
     assert(spark.read.format("qbeast").load(dir2).count() == 101)
   }
 
+  test("a constraint landing mid-write gates a nondeterministic write by its written files") {
+    // the rebase reads back the files the write produced, so a redraw of
+    // the input can neither fail the clean write nor pass a violating one
+    def racingAppend(dir: String, b: org.apache.spark.sql.Column): Unit = {
+      ConcurrentConstraintHook.tableDir.set(dir)
+      spark.range(50).select((col("id") + 1000).as("a"), b.as("b"))
+        .write.format("qbeast").option("cubeSize", "100")
+        .option("hook.race", classOf[ConcurrentConstraintHook].getName)
+        .mode("append").save(dir)
+    }
+    val clean = freshTable()
+    racingAppend(clean, rand(7))
+    assert(spark.read.format("qbeast").load(clean).count() == 150)
+    val violating = freshTable()
+    val e = intercept[Exception](racingAppend(violating, -rand(7) - 1))
+    assert(e.getMessage.contains("late"), e.getMessage)
+    assert(spark.read.format("qbeast").load(violating).count() == 100)
+  }
+
   test("SQL ALTER TABLE ADD/DROP CONSTRAINT; property visible in DESCRIBE DETAIL") {
     val dir = freshTable()
     val out = spark.sql(

@@ -350,7 +350,9 @@ class PipelineOpsSpec extends AnyFunSuite {
       val unique = (0 until 12).map(j => s"u${i}_$j").mkString(" ")
       (i, s"$boiler $unique")
     } :+ (1000L, "rare shared tail fragment one two three four five six seven eight") :+
-      (1001L, "rare shared tail fragment one two three four five six seven eight nine")
+      (1001L, "rare shared tail fragment one two three four five six seven eight nine") :+
+      // a non-unique id: a document never pairs with its own id
+      (1001L, "rare shared tail fragment one two three four five six seven eight nine ten")
     val df = docs.toDF("doc_id", "text")
     // boilerplate fps appear in 60 docs > cap=20 → dropped; without the
     // cap the 60 boilerplate docs alone give C(60,2)=1770 pairs

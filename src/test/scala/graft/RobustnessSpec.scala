@@ -259,6 +259,51 @@ class RobustnessSpec extends AnyFunSuite {
     assert(graft.table.QbeastTable.forPath(spark, dirD).delete("a % 100 = 7") == 10L)
     assert(content(dirD).count() == 990L)
     checkClean(dirD)
+
+    // the same two races for UPDATE, mergeOn and upsert under
+    // copy-on-write: each sets b = -1 on the ten seed rows a % 100 = 7
+    def seedCow(dir: String): Unit =
+      (0L until 1000L).map(i => (i, i * 2.0)).toDF("a", "b")
+        .write.format("qbeast").option("columnsToIndex", "a,b")
+        .option("cubeSize", "200").save(dir)
+    val keys = 7L until 1000L by 100L
+    val src = keys.map(i => (i, -1.0)).toDF("a", "b")
+    val verbs: Seq[(String, graft.table.QbeastTable => Any)] = Seq(
+      "update" -> (_.update("a % 100 = 7", Map("b" -> "-1.0"))),
+      "mergeOn" -> (_.mergeOn(src, Seq("a" -> "a"),
+        matched = Seq(graft.table.MergeClause(None, Some(Map("b" -> col("__src_b"))))),
+        notMatched = Nil, notMatchedBySource = Nil)),
+      "upsert" -> (_.upsert(src, Seq("a"))))
+    def underDmlHook(hook: Class[_], dir: String, run: graft.table.QbeastTable => Any): Unit = {
+      spark.conf.set(graft.table.QbeastTable.DmlPreCommitHookKey, hook.getName)
+      try run(graft.table.QbeastTable.forPath(spark, dir))
+      finally spark.conf.unset(graft.table.QbeastTable.DmlPreCommitHookKey)
+    }
+    def updated(dir: String): Seq[Long] =
+      content(dir).filter(col("b") === -1.0).select("a").collect().map(_.getLong(0)).sorted.toSeq
+    verbs.foreach { case (verb, run) =>
+      // an APPEND lands mid-commit: the verb rebases, the appended rows
+      // survive untouched
+      val dirE = TestSpark.tmpDir(s"race3-$verb-app")
+      seedCow(dirE)
+      MidDmlAppendHook.tableDir.set(dirE)
+      underDmlHook(classOf[MidDmlAppendHook], dirE, run)
+      assert(content(dirE).count() == 1100L, verb)
+      assert(updated(dirE) == keys, verb)
+      checkClean(dirE)
+
+      // an OPTIMIZE rewrites the verb's targets mid-commit: refused,
+      // content unchanged
+      val dirF = TestSpark.tmpDir(s"race3-$verb-opt")
+      seedCow(dirF)
+      MidDmlOptimizeHook.tableDir.set(dirF)
+      val err = intercept[java.util.ConcurrentModificationException] {
+        underDmlHook(classOf[MidDmlOptimizeHook], dirF, run)
+      }
+      assert(err.getMessage.contains("re-run"), s"$verb: ${err.getMessage}")
+      assert(content(dirF).count() == 1000L && updated(dirF).isEmpty, verb)
+      checkClean(dirF)
+    }
   }
 
   test("seeded commit-loop stress: appends + dv deletes + optimizes, exact multiset") {

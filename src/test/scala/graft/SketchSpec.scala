@@ -364,6 +364,23 @@ class SketchSpec extends AnyFunSuite {
     assert(got.getDouble(4) == 25.0 / 40.0)
   }
 
+  test("kmvOverlap caches nothing and aggregates the states once") {
+    val dir = TestSpark.tmpDir("kmv-overlap-cache") + "/src"
+    (0 until 300).map(i => (s"g${i % 3}", s"v${i % 50}")).toDF("g", "v")
+      .write.parquet(dir)
+    val cache = spark.sharedState.cacheManager
+    spark.catalog.clearCache()
+    (1 to 2).foreach { _ =>
+      val states = ops.Sketch.kmvSetState(spark.read.parquet(dir), Seq("g"), col("v"))
+      val got = ops.Sketch.kmvOverlap(states, "g", col("kmv_state"))
+      assert(got.collect().length == 3)
+      // one scan of the source: the other join side reuses its shuffle
+      val plan = got.queryExecution.executedPlan.toString
+      assert(plan.contains("ReusedExchange"), plan)
+    }
+    assert(cache.isEmpty, "kmvOverlap left a CacheManager entry")
+  }
+
   test("graft_kmv_state / graft_kmv_overlap work from SQL") {
     val rows = (0 until 30).map(i => ("g0", s"v$i")) ++
       (20 until 50).map(i => ("g1", s"v$i"))

@@ -238,4 +238,33 @@ class LogSpec extends AnyFunSuite {
       QbeastLog.commit(dir, conf, 0, Seq(AddFileAction(f1, true)))
     }
   }
+
+  test("commitOptimistic: a lost race re-derives against the winner's head, None and the bound") {
+    val dir = graft.TestSpark.tmpDir("qlog-optimistic")
+    QbeastLog.commit(dir, conf, -1, Seq(TxnAction("seed", 1)))
+    // a commit landing inside the first attempt makes it lose; the
+    // second attempt sees the winner's head
+    val seen = scala.collection.mutable.Buffer.empty[Long]
+    val v = QbeastLog.commitOptimistic(QbeastLog.snapshot(dir, conf), conf, "TEST") { head =>
+      seen += head.version
+      if (seen.size == 1) QbeastLog.commit(dir, conf, head.version, Seq(TxnAction("winner", 1)))
+      Some(Seq(TxnAction("rebased", head.version)))
+    }
+    assert(seen == Seq(0L, 1L) && v.contains(2L))
+    val snap = QbeastLog.snapshot(dir, conf)
+    assert(snap.txns.get("winner").contains(1L) && snap.txns.get("rebased").contains(1L))
+    // None stops without committing
+    assert(QbeastLog.commitOptimistic(snap, conf, "TEST")(_ => None).isEmpty)
+    assert(QbeastLog.snapshot(dir, conf).version == 2L)
+    // losing every race rethrows the conflict past the bound
+    var attempts = 0
+    intercept[ConcurrentCommitException] {
+      QbeastLog.commitOptimistic(snap, conf, "TEST") { head =>
+        attempts += 1
+        QbeastLog.commit(dir, conf, head.version, Seq(TxnAction("racer", attempts)))
+        Some(Nil)
+      }
+    }
+    assert(attempts == QbeastLog.MaxCommitRetries + 1)
+  }
 }
