@@ -233,7 +233,7 @@ class QbeastStreamSource(
     graft.core.model.ColumnMapping.readParquet(spark, tableSchema, paths)
 
   /** Same for persisted `_change_data` files (physical names +
-   * `_change_type`, see QbeastTable.writeCdcData). */
+   * `_change_type`, see QbeastTable.persistCdc). */
   private def readCdcParquet(paths: Seq[String]): DataFrame =
     graft.core.model.ColumnMapping.readParquetWith(spark, tableSchema,
       Seq(org.apache.spark.sql.types.StructField("_change_type",

@@ -781,15 +781,13 @@ class QbeastTable private (spark: SparkSession, tablePath: String) {
   }
 
   /**
-   * Copy-on-write row-level DELETE (the Delta-style design; the
-   * reference format is append/overwrite-only): only files that can
-   * contain matching rows are rewritten. Discovery goes through the
-   * index-pruned qbeast read path, so a predicate on indexed columns
-   * touches only the pruned file set — at 100 TB a keyed delete
-   * rewrites a handful of files, not the table. Survivor rows are
-   * re-indexed against the frozen cube weights of their own revision
-   * (the optimize path), so the index shape is preserved. One atomic
-   * commit: adds + removes together.
+   * Row-level DELETE (the Delta-style design; the reference format is
+   * append/overwrite-only). Discovery goes through the index-pruned read
+   * path, so a predicate on indexed columns touches only the pruned file
+   * set, and files whose stats prove every row matches drop unread. The
+   * matched rows go to the one change kernel ([[applyChange]]), which
+   * masks them or rewrites their files' survivors against the frozen
+   * cube weights of their own revision. One atomic commit.
    *
    * @return number of rows deleted
    */
@@ -802,16 +800,11 @@ class QbeastTable private (spark: SparkSession, tablePath: String) {
   /**
    * Row-level UPDATE. `assignments` maps column name → SQL expression;
    * every right-hand side sees the PRE-update row (standard SQL UPDATE
-   * semantics — assignments are simultaneous). With
-   * `deletionVectors=true` the update is merge-on-read: matched rows
-   * are masked and their updated images appended, survivors are never
-   * read ([[dvUpdate]]; falls back past the masked-fraction budget).
-   * Otherwise copy-on-write: surviving (unmatched) rows of affected
-   * files are rewritten frozen. Either way the updated rows go through
-   * the normal revision logic, because an assignment to an indexed
-   * column can move values outside the frozen space (then they land in
-   * a new, merged-space revision — exactly what an append of those
-   * rows would do).
+   * semantics — assignments are simultaneous). The updated images go
+   * through the normal revision logic, because an assignment to an
+   * indexed column can move values outside the frozen space (then they
+   * land in a new, merged-space revision — exactly what an append of
+   * those rows would do); [[applyChange]] masks or rewrites the old rows.
    *
    * @return number of rows updated
    */
@@ -846,39 +839,58 @@ class QbeastTable private (spark: SparkSession, tablePath: String) {
       spark.baseRelationToDataFrame(relation))
   }
 
-  /** Pass 1 of every keyed mutation: the files of `s` holding at least
-   * one key present in `srcKeys`. File identity rides
-   * `_metadata.file_path`, materialized at the scan — NOT
-   * input_file_name(), which evaluates to "" after any shuffle, so a
-   * sort-merge semi-join (large source, or broadcast disabled) would
-   * silently report zero affected files (spec-pinned in DmlSpec under
-   * autoBroadcastJoinThreshold=-1). */
-  private def affectedByKeys(
-      s: QbeastSnapshot,
-      srcKeys: org.apache.spark.sql.DataFrame,
-      keys: Seq[String]): Vector[IndexFile] = {
-    val table = pinnedRead(s)
-      .select(col("_metadata.file_path").as("__qbeast_file") +: keys.map(col): _*)
-    val names = table.join(srcKeys, keys, "left_semi")
-      .select("__qbeast_file").distinct()
-      .collect().map(r => new Path(r.getString(0)).getName).toSet
-    s.files.filter(f => names.contains(new Path(f.path).getName))
+  /** Base names of the columns that stamp each changed row with its
+   * file path and row index. [[freshNames]] makes them unique against
+   * the frames' real columns, so a user column of the same name is never
+   * replaced (withColumn semantics) and later dropped. */
+  private val DvFileCol = "__qbeast_dv_file"
+  private val DvIdxCol = "__qbeast_dv_idx"
+
+  /** `bases` made unique, case-insensitively, against `taken` and each
+   * other by appending underscores. */
+  private def freshNames(taken: Seq[String], bases: String*): Seq[String] = {
+    val used = mutable.Set(taken.map(_.toLowerCase): _*)
+    bases.map { b =>
+      var n = b
+      while (used.contains(n.toLowerCase)) n += "_"
+      used += n.toLowerCase
+      n
+    }
   }
 
+  /** `df` with each row's file path and row index. File identity rides
+   * `_metadata.file_path`, materialized at the scan — NOT
+   * input_file_name(), which evaluates to "" after any shuffle, so a
+   * subquery condition or a sort-merge key join would silently report
+   * zero touched files (spec-pinned in DmlSpec under
+   * autoBroadcastJoinThreshold=-1). */
+  private def withIdentity(
+      df: org.apache.spark.sql.DataFrame,
+      fileCol: String,
+      idxCol: String): org.apache.spark.sql.DataFrame =
+    df.withColumn(fileCol, col("_metadata.file_path"))
+      .withColumn(idxCol, col("_metadata.row_index"))
+
+  /** The files of `domain` holding at least one of `rows`. */
+  private def filesOf(
+      rows: org.apache.spark.sql.DataFrame,
+      fileCol: String,
+      domain: Vector[IndexFile]): Vector[IndexFile] = {
+    val names = rows.select(col(fileCol)).distinct()
+      .collect().map(r => new Path(r.getString(0)).getName).toSet
+    domain.filter(f => names.contains(new Path(f.path).getName))
+  }
+
+  /** DELETE and UPDATE: the rows matching `cond` are the changed rows. */
   private def mutate(cond: Column, assignments: Option[Map[String, Column]]): Long = {
     val s = snapshot
     if (s.isEmpty || s.files.isEmpty) return 0L
     // generated columns are computed, never assigned (Delta refuses
-    // identically); both the copy-on-write and the dv path recompute
-    // them after the remaining assignments apply
+    // identically); the updated images recompute them below
     assignments.foreach(a =>
       graft.write.GeneratedColumns.refuseAssignments(s.configuration, a.keys))
     // null condition rows are NOT matched (SQL three-valued logic)
     val matched = coalesce(cond, lit(false))
-
-    // ---- pass 1: affected-file discovery through the index-pruned
-    // read path (file pruning + parquet row-group stats both apply),
-    // PINNED to snapshot s so all passes see one version ----
     val table = pinnedRead(s)
 
     // the condition is re-evaluated in independent jobs (discovery,
@@ -909,240 +921,46 @@ class QbeastTable private (spark: SparkSession, tablePath: String) {
     // is one driver-side log commit (Delta's metadata-only DELETE).
     val proved: Option[(Vector[IndexFile], Vector[IndexFile])] =
       if (assignments.isEmpty) classifyDeleteByStats(s, table.filter(matched)) else None
-    proved match {
-      case Some((drop, undecided)) if undecided.isEmpty =>
-        if (drop.isEmpty) return 0L
-        // CDF feed computed directly: every (live) row of a TRUE-proved
-        // file is a deleted row, so the feed is one masked read of the
-        // dropped files — the generic file diff would re-read them AND
-        // pay an exceptAll shuffle against the empty after-side
-        val cdcDrop: Option[Option[LogAction]] =
-          if (!cdfOn(s)) None
-          else Some(Some(persistCdc(s,
-            readTableFiles(s, drop).withColumn("_change_type", lit("delete")))))
-        commitMutation(s, Nil, None, drop, operation = "DELETE", cdc = cdcDrop)
-        // element counts are PRE-mask; rows a deletion vector already
-        // removed are not deleted again by this drop
-        val alreadyMasked =
-          drop.iterator.flatMap(f => s.dvs.get(f.path)).map(_.cardinality).sum
-        return drop.map(_.elementCount).sum - alreadyMasked
-      case _ => ()
+    // Narrowed discovery only when the proofs decided something (when
+    // they dropped nothing the pinned full-table path is better: its
+    // index+stats pruning already skips every FALSE-proved file). Proved
+    // drops are never read, and a mask never covers 100% of a file's
+    // rows (which would blow the masked-fraction budget).
+    val narrowed = proved.filter { case (drop, und) => drop.nonEmpty || und.isEmpty }
+    val (drops, domain) = narrowed.getOrElse((Vector.empty[IndexFile], s.files))
+    val Seq(fileCol, idxCol) = freshNames(table.columns.toSeq, DvFileCol, DvIdxCol)
+    // An UPDATE derives its new images from the old rows and a CDF feed
+    // reads them in full, so those cache them on first use (the
+    // discovery job). A plain DELETE keeps the narrow discovery scan
+    // over the predicate columns: caching full rows nothing reads twice
+    // costs more than it saves.
+    lazy val old = {
+      val rows = withIdentity(
+        if (narrowed.isEmpty) table.filter(matched) else readTableFiles(s, domain).filter(matched),
+        fileCol, idxCol)
+      if (assignments.isDefined || cdfOn(s)) rows.persist() else rows
     }
-
-    val dvMode =
-      assignments.isEmpty && graft.write.DeletionVectors.enabled(s.configuration) &&
-        dvIdentitySafe(s)
-    // Narrowed discovery only when proofs actually dropped something
-    // (otherwise the pinned full-table path is better: its index+stats
-    // pruning already skips every FALSE-proved file). Both delete
-    // modes benefit: copy-on-write never reads the proved drops, and
-    // merge-on-read drops them whole instead of masking 100% of their
-    // rows (which would blow the masked-fraction budget and force the
-    // worst-case full rewrite).
-    val narrowed = proved.filter { case (drop, _) => drop.nonEmpty }
-    val (dropProved, scanDomain) = narrowed match {
-      case Some((drop, und)) => (drop, und)
-      case None => (Vector.empty[IndexFile], s.files)
-    }
-    // the frame holding rows that still need row-level treatment:
-    // narrowed to the undecided files when proofs fired
-    val residual = narrowed match {
-      case Some((_, und)) => readTableFiles(s, und)
-      case None => table
-    }
-    // file identity rides _metadata.file_path, materialized at the
-    // scan, NOT input_file_name(): a subquery condition rewrites to a
-    // join, and under a shuffled (non-broadcast) join input_file_name
-    // evaluates post-shuffle to "" — every file would look unaffected
-    // and the DELETE would silently no-op (spec-pinned in DmlSpec)
-    //
-    // A copy-on-write CDF DELETE needs the matched rows TWICE (file
-    // discovery here, the change feed below) — materialize them once
-    // with their file identity, the dvDelete discipline. Non-CDF
-    // deletes keep the plain discovery scan: it reads only the
-    // predicate columns, which is cheaper than caching full rows.
-    //
-    // The identity column is namespaced AND uniquified against the
-    // actual schema: a user column literally named __qbeast_cdf_file
-    // would otherwise be silently replaced here and dropped from the
-    // change feed below (the dv reserved names guard the same hazard
-    // via dvIdentitySafe; uniquifying needs no fallback path).
-    val fileCol = {
-      var n = "__qbeast_cdf_file"
-      while (table.columns.exists(_.equalsIgnoreCase(n))) n += "_"
-      n
-    }
-    val matchedFull: Option[org.apache.spark.sql.DataFrame] =
-      if (assignments.isEmpty && !dvMode && cdfOn(s))
-        Some(residual.filter(matched)
-          .withColumn(fileCol, col("_metadata.file_path"))
-          .localCheckpoint(true))
-      else None
-    val affectedNames = matchedFull.getOrElse(
-        residual.filter(matched)
-          .withColumn(fileCol, col("_metadata.file_path")))
-      .select(col(fileCol).as("f")).distinct()
-      .collect().map(r => new Path(r.getString(0)).getName).toSet
-    // `scanned` = files whose matched rows were DISCOVERED by reading —
-    // these mask/rewrite below; TRUE-proved drops skip that read
-    // entirely (they have no survivors by proof)
-    val scanned = scanDomain.filter(f => affectedNames.contains(new Path(f.path).getName))
-    val affected = dropProved ++ scanned
-    // matchedFull/preMatched release must run on EVERY exit (constraint
-    // failures, write errors, commit conflicts included) — a leaked
-    // checkpoint's blocks otherwise pin block-manager memory until GC
-    var preMatchedRef: Option[org.apache.spark.sql.DataFrame] = None
     try {
-    if (affected.isEmpty) return 0L
-
-    // ---- merge-on-read DELETE (opt-in): write deletion vectors for
-    // the straddling files and plain removes for the proved drops —
-    // one commit; falls back to copy-on-write when any file's
-    // post-delete masked fraction would exceed the threshold ----
-    if (dvMode) {
-      val deleted = dvDelete(s, residual, matched, scanned, dropProved)
-      if (deleted >= 0) return deleted
-    }
-
-    // ---- merge-on-read UPDATE (opt-in): mask the matched rows and
-    // append their updated images — survivors are never read ----
-    if (assignments.isDefined &&
-        graft.write.DeletionVectors.enabled(s.configuration) &&
-        dvIdentitySafe(s)) {
-      val updatedCount = dvUpdate(s, table, matched, affected, assignments.get)
-      if (updatedCount >= 0) return updatedCount
-    }
-
-    val latestRevision = s.lastRevision.filterNot(_.isStaging)
-
-    // ---- pass 2: rewrite survivors of each scanned affected file,
-    // grouped by revision, against that revision's frozen cube weights
-    // (TRUE-proved drops have no survivors and are never read) ----
-    val survivorAdds = scanned.groupBy(_.revisionId).toSeq.flatMap { case (rid, files) =>
-      val survivors = readTableFiles(s, files).filter(not(matched))
-      // staging (unindexed) survivors fold into the latest indexed
-      // revision — same move optimizeUnindexed makes
-      val revision =
-        if (rid == Revision.StagingID)
-          latestRevision.getOrElse(throw new UnsupportedOperationException(
-            "DELETE/UPDATE on a staging-only qbeast table: append indexed data " +
-              "or optimize() first so rewritten rows have an index space to land in"))
-        else s.revisions(rid)
-      val status = s.indexStatus(revision.revisionID)
-      val frozen = status.cubeStatuses.map { case (c, st) => c -> st.maxWeight }.toMap
-      QbeastWriter.index(spark, tablePath, survivors, revision, Some(status),
-        files.map(_.elementCount).sum, frozenWeights = Some(frozen))
-    }
-
-    // ---- pass 3 (update only): matched rows, assignments applied,
-    // through the normal revision-aware indexing path ----
-    // `preMatched` = the matched PRE-update images, materialized once:
-    // the updated frame derives from it by pure expression evaluation,
-    // so the constraint validation, the revision min/max job, the
-    // domain pass and the physical write all read the affected files
-    // zero more times — and the CDF before-side below is the SAME
-    // cached frame instead of another scan.
-    val (updatedAdds, newRevision, updatedFrame, preMatched) = assignments match {
-      case None => (Nil, None, None, None)
-      case Some(asgn) =>
-        val base = readTableFiles(s, affected)
-        // top-level and struct-field assignments, simultaneous semantics
-        val updatedCols = Assignments(base.schema, asgn)
-        val pre = base.filter(matched).localCheckpoint(true)
-        preMatchedRef = Some(pre)
-        // generated columns recompute AFTER the assignments apply, so a
-        // change to a referenced column never leaves a stale value
-        val updated = graft.write.GeneratedColumns.recompute(
-          pre.select(updatedCols: _*), s.configuration, s.schema)
-        graft.write.Constraints.validate(updated,
-          graft.write.Constraints.of(s.configuration), "UPDATE-assigned")
-        val existing = latestRevision.orElse(throw new UnsupportedOperationException(
-          "UPDATE on a staging-only qbeast table: append indexed data first"))
-        val opts = QbeastOptions(Map.empty[String, String],
-          defaultCubeSize = existing.map(_.desiredCubeSize).getOrElse(QbeastOptions.DefaultCubeSize))
-        val (rev, isNew, n) = RevisionFactory.computeRevisionChanges(
-          existing, opts, tablePath, updated, mappingSchema = s.schema)
-        val status = if (!isNew) Some(s.indexStatus(rev.revisionID)) else None
-        // per-row backstop: the validate above ran as a SEPARATE job,
-        // so these rows are re-checked inside the write itself
-        val adds = QbeastWriter.index(spark, tablePath, updated, rev, status, n,
-          constraints = constraintsFor(s))
-        (adds, if (isNew) Some(rev) else None, Some(adds), Some(pre))
-    }
-
-    // CDF feed computed directly from the matched rows instead of the
-    // generic file diff (which re-reads every affected AND rewritten
-    // file and pays a full-width exceptAll over them). Equivalence:
-    // survivors are rewritten verbatim (deterministic condition,
-    // enforced above), so in `after_full ∖ before_full` and
-    // `before_full ∖ after_full` the survivor rows cancel exactly and
-    // the diff reduces to (updated images, matched pre-images) — for a
-    // DELETE the after-side is empty and the feed is just the matched
-    // rows. Narrowing the exceptAll inputs to those frames keeps the
-    // multiset result identical (incl. UPDATEs whose assignment is the
-    // identity on some rows: those still cancel). Both before-sides
-    // come from already-materialized frames (`matchedFull` for DELETE,
-    // `preMatched` for UPDATE) — zero extra scans — and the after-side
-    // reads the just-written updated images (compact parquet, once).
-    val cdcDirect: Option[Option[LogAction]] =
-      if (!cdfOn(s)) None
-      else {
-        val matchedBefore = preMatched.orElse(matchedFull.map(_.drop(fileCol)))
-          .getOrElse(readTableFiles(s, scanned).filter(matched))
-        val beforeParts =
-          (if (scanned.isEmpty) Nil else Seq(matchedBefore)) ++
-            (if (dropProved.isEmpty) Nil else Seq(readTableFiles(s, dropProved)))
-        val before = beforeParts.reduce(_.unionByName(_))
-        val changed = updatedFrame match {
-          case None => before.withColumn("_change_type", lit("delete"))
-          case Some(updAdds) =>
-            val after = readTableFiles(s, updAdds)
-            after.exceptAll(before).withColumn("_change_type", lit("insert"))
-              .union(before.exceptAll(after).withColumn("_change_type", lit("delete")))
-        }
-        Some(Some(persistCdc(s, changed)))
-      }
-
-    commitMutation(s, survivorAdds ++ updatedAdds, newRevision, affected,
-      operation = if (assignments.isDefined) "UPDATE" else "DELETE",
-      cdc = cdcDirect)
-
-    if (assignments.isDefined) updatedAdds.map(_.elementCount).sum
-    else {
-      // block element counts are PRE-mask: rows a deletion vector had
-      // already removed must not be re-counted by this delete
-      val alreadyMasked =
-        affected.iterator.flatMap(f => s.dvs.get(f.path)).map(_.cardinality).sum
-      affected.map(_.elementCount).sum - alreadyMasked -
-        survivorAdds.map(_.elementCount).sum
-    }
-    } finally {
-      matchedFull.foreach(QbeastTable.releaseLocalCheckpoint)
-      preMatchedRef.foreach(QbeastTable.releaseLocalCheckpoint)
-    }
+      val touched = if (domain.isEmpty) Vector.empty[IndexFile] else filesOf(old, fileCol, domain)
+      if (drops.isEmpty && touched.isEmpty) return 0L
+      // simultaneous assignments (top-level and struct fields); generated
+      // columns recompute AFTER them, so a change to a referenced column
+      // never leaves a stale value
+      val written = assignments.map(asgn => graft.write.GeneratedColumns.recompute(
+        old.drop(fileCol, idxCol).select(Assignments(table.schema, asgn): _*),
+        s.configuration, s.schema))
+      val (removed, n) = applyChange(s, if (assignments.isDefined) "UPDATE" else "DELETE",
+        drops, touched, old, fileCol, idxCol,
+        files => readTableFiles(s, files).filter(not(matched)), written, "UPDATE-assigned")
+      if (assignments.isDefined) n else removed
+    } finally if (domain.nonEmpty) old.unpersist()
   }
 
   /**
-   * MERGE / upsert (Delta's `whenMatched updateAll / whenNotMatched
-   * insertAll` form): source rows REPLACE target rows sharing the same
-   * `keys`; source rows with no match are inserted. Copy-on-write like
-   * [[delete]]/[[update]]: only target files holding matched keys are
-   * rewritten (discovered through the index-pruned read path — with the
-   * merge keys indexed, a keyed upsert touches a handful of files);
-   * all source rows go through the normal revision-aware indexing, and
-   * everything lands in ONE atomic commit.
-   *
-   * Duplicate source keys that MATCH a target row error out (Delta's
-   * multiple-matches rule); duplicates matching nothing insert as-is.
-   *
-   * @return (target rows replaced, source rows written)
-   */
-  /**
    * MERGE's `WHEN MATCHED THEN DELETE` form: drop every target row
-   * whose `keys` appear in `source`. Same copy-on-write shape as
-   * [[upsert]] minus the insert pass — only target files holding
-   * matched keys are rewritten (without the matched rows), one atomic
-   * commit.
+   * whose `keys` appear in `source`. Only target files holding matched
+   * keys are touched; duplicate source keys are fine (deletion is
+   * unambiguous). One atomic commit.
    *
    * @return target rows deleted
    */
@@ -1151,47 +969,8 @@ class QbeastTable private (spark: SparkSession, tablePath: String) {
     val s = snapshot
     if (s.isEmpty || s.files.isEmpty) return 0L
     val srcKeys = source.select(keys.map(col): _*).distinct().persist()
-    try {
-      // merge-on-read (opt-in): mask the matched rows, rewrite nothing
-      // — the keyed delete rides the same dv commit as the predicate
-      // DELETE (duplicate source keys are fine: deletion is unambiguous)
-      var knownAffected: Option[Vector[IndexFile]] = None
-      if (graft.write.DeletionVectors.enabled(s.configuration) &&
-          dvIdentitySafe(s)) {
-        val dvAffected = affectedByKeys(s, srcKeys, keys)
-        if (dvAffected.isEmpty) return 0L
-        knownAffected = Some(dvAffected) // over-budget fallback reuses it
-        val cdfEnabled = cdfOn(s)
-        val matchedRows = readTableFiles(s, dvAffected)
-          .withColumn(DvFileCol, col("_metadata.file_path"))
-          .withColumn(DvIdxCol, col("_metadata.row_index"))
-          .join(srcKeys, keys, "left_semi")
-        if (cdfEnabled) matchedRows.persist()
-        try {
-          val deleted = dvDeleteInner(s, matchedRows, dvAffected, cdfEnabled)
-          if (deleted >= 0) return deleted
-        } finally if (cdfEnabled) { matchedRows.unpersist(); () }
-      }
-
-      val (affected, survivorAdds) =
-        rewriteWithoutMatches(s, srcKeys, keys, knownAffected = knownAffected)
-      if (affected.isEmpty) return 0L
-      // CDF feed computed directly: the affected files' rows partition
-      // into survivors (anti-join, rewritten verbatim — they cancel in
-      // the generic diff's two exceptAll sides) and matched rows (the
-      // same semi-join against the persisted srcKeys), so the feed is
-      // exactly the matched rows as deletes — one masked semi-join scan
-      // instead of re-reading affected AND written files plus two
-      // full-width exceptAll shuffles.
-      val cdcDirect: Option[Option[LogAction]] =
-        if (!cdfOn(s)) None
-        else Some(Some(persistCdc(s,
-          readTableFiles(s, affected).join(srcKeys, keys, "left_semi")
-            .withColumn("_change_type", lit("delete")))))
-      commitMutation(s, survivorAdds, None, affected, operation = "DELETE",
-        cdc = cdcDirect)
-      affected.map(_.elementCount).sum - survivorAdds.map(_.elementCount).sum
-    } finally srcKeys.unpersist()
+    try keyedChange(s, srcKeys, keys, "DELETE", None)._1
+    finally { srcKeys.unpersist(); () }
   }
 
   /** Table CHECK constraints in the ordered shape QbeastWriter.index
@@ -1208,20 +987,6 @@ class QbeastTable private (spark: SparkSession, tablePath: String) {
     s.configuration.get("qbeast.enableChangeDataFeed").contains("true") &&
       s.schema.nonEmpty
 
-  /** Reserved names under which the dv machinery stamps file identity
-   * onto matched rows. A plain `_f` would silently REPLACE a real user
-   * column of that name (withColumn semantics) and the later drop
-   * would erase it from every appended image — so the names are
-   * namespaced, and [[dvIdentitySafe]] gates every merge-on-read path:
-   * a (pathological) table whose schema uses one of them simply keeps
-   * the always-correct copy-on-write path. */
-  private val DvFileCol = "__qbeast_dv_file"
-  private val DvIdxCol = "__qbeast_dv_idx"
-
-  private def dvIdentitySafe(s: QbeastSnapshot): Boolean =
-    !s.schema.exists(_.fieldNames.exists(n =>
-      n.equalsIgnoreCase(DvFileCol) || n.equalsIgnoreCase(DvIdxCol)))
-
   /** ANSI store-assignment cast (Delta's insert-path resolution): cast
    * `src` to the table column's type, but FAIL on any row where a
    * non-null source value comes out null — a plain cast() would
@@ -1237,6 +1002,21 @@ class QbeastTable private (spark: SparkSession, tablePath: String) {
       .otherwise(casted).as(name)
   }
 
+  /**
+   * MERGE / upsert (Delta's `whenMatched updateAll / whenNotMatched
+   * insertAll` form): source rows REPLACE target rows sharing the same
+   * `keys`; source rows with no match are inserted. Only target files
+   * holding matched keys are touched (discovered through the
+   * index-pruned read path — with the merge keys indexed, a keyed
+   * upsert touches a handful of files); all source rows go through the
+   * normal revision-aware indexing, and everything lands in ONE atomic
+   * commit.
+   *
+   * Duplicate source keys that MATCH a target row error out (Delta's
+   * multiple-matches rule); duplicates matching nothing insert as-is.
+   *
+   * @return (target rows replaced, source rows written)
+   */
   def upsert(source0: org.apache.spark.sql.DataFrame, keys: Seq[String]): (Long, Long) = {
     require(keys.nonEmpty, "upsert needs at least one key column")
     val s = snapshot
@@ -1265,79 +1045,33 @@ class QbeastTable private (spark: SparkSession, tablePath: String) {
         else storeAssignCast(col(f.name), f.name, f.dataType)
       }.toSeq: _*)
     }.getOrElse(source0).localCheckpoint(true)
-    val latestRevision = s.lastRevision.filterNot(_.isStaging)
-    // generated columns: upsert source rows REPLACE target rows (insert
-    // semantics), so supplied values are enforced, not recomputed
-    graft.write.Constraints.validate(source,
-      graft.write.Constraints.of(s.configuration) ++
-        graft.write.GeneratedColumns.checksFor(s.configuration, s.schema),
-      "upsert source")
     val srcKeys = source.select(keys.map(col): _*).distinct().persist()
     try {
-      // ---- merge-on-read upsert (opt-in): mask matched target rows,
-      // append ALL source rows — survivors never read ----
-      var knownAffected: Option[Vector[IndexFile]] = None
-      var uniqueChecked = false
-      if (graft.write.DeletionVectors.enabled(s.configuration) &&
-          dvIdentitySafe(s)) {
-        dvUpsert(s, source, srcKeys, keys) match {
-          case Right(result) => return result
-          case Left(affected) => // over budget: fall back to copy-on-
-            // write, reusing the discovery and the uniqueness check
-            knownAffected = Some(affected); uniqueChecked = true
-        }
-      }
-
-      val (affected, survivorAdds) = rewriteWithoutMatches(s, srcKeys, keys,
-        requireUniqueSource = if (uniqueChecked) None else Some(source),
-        knownAffected = knownAffected)
-
-      // ---- pass 3: ALL source rows through the revision-aware path ----
-      val existing = latestRevision.orElse(throw new UnsupportedOperationException(
-        "upsert into a staging-only qbeast table: optimize() first"))
-      val opts = QbeastOptions(Map.empty[String, String],
-        defaultCubeSize = existing.map(_.desiredCubeSize).getOrElse(QbeastOptions.DefaultCubeSize))
-      val (rev, isNew, nSrc) = RevisionFactory.computeRevisionChanges(
-        existing, opts, tablePath, source, mappingSchema = s.schema)
-      val status = if (!isNew) Some(s.indexStatus(rev.revisionID)) else None
-      // per-row backstop: a nondeterministic source could pass the
-      // driver-side validation yet draw violating rows here
-      val srcAdds = QbeastWriter.index(spark, tablePath, source, rev, status, nSrc,
-        constraints = constraintsFor(s))
-
-      // CDF feed computed directly from the matched pre-images and the
-      // (already materialized) source instead of the generic file diff,
-      // which re-reads every affected file AND every just-written file
-      // (survivors + source adds) and pays a full-width exceptAll over
-      // all of them. Equivalence: the affected files' rows partition
-      // exactly into survivors (the anti-join) and matched pre-images
-      // (the semi-join, same persisted srcKeys); survivors are
-      // rewritten verbatim, so they cancel in both exceptAll sides and
-      // the diff reduces to (source ∖ matchedPre, matchedPre ∖ source)
-      // — identical multiset, one narrow scan of the affected files
-      // plus the cached source, zero re-reads of written files.
-      val cdcDirect: Option[Option[LogAction]] =
-        if (!cdfOn(s)) None
-        else {
-          // no matches → the feed is simply every source row as insert
-          val matchedPre =
-            if (affected.isEmpty) spark.createDataFrame(
-              java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-              s.schema.get)
-            else readTableFiles(s, affected).join(srcKeys, keys, "left_semi")
-          val changed = source.exceptAll(matchedPre)
-            .withColumn("_change_type", lit("insert"))
-            .union(matchedPre.exceptAll(source)
-              .withColumn("_change_type", lit("delete")))
-          Some(Some(persistCdc(s, changed)))
-        }
-
-      commitMutation(s, survivorAdds ++ srcAdds, if (isNew) Some(rev) else None, affected,
-        operation = "MERGE", cdc = cdcDirect)
-
-      val replaced = affected.map(_.elementCount).sum - survivorAdds.map(_.elementCount).sum
-      (replaced, nSrc)
+      requireUniqueMatches(s, source, keys, "MERGE/upsert")
+      // generated columns: upsert source rows REPLACE target rows (insert
+      // semantics), so supplied values are enforced, not recomputed
+      keyedChange(s, srcKeys, keys, "MERGE", Some(source))
     } finally { srcKeys.unpersist(); QbeastTable.releaseLocalCheckpoint(source); () }
+  }
+
+  /** The keyed verbs ([[upsert]], [[deleteMatched]]): the changed rows
+   * are the target rows whose `keys` appear in `srcKeys` (a semi-join
+   * never fans out), the unchanged rows the anti-join. */
+  private def keyedChange(
+      s: QbeastSnapshot,
+      srcKeys: org.apache.spark.sql.DataFrame,
+      keys: Seq[String],
+      operation: String,
+      written: Option[org.apache.spark.sql.DataFrame]): (Long, Long) = {
+    val table = pinnedRead(s)
+    val Seq(fileCol, idxCol) = freshNames(table.columns.toSeq, DvFileCol, DvIdxCol)
+    val old = withIdentity(table, fileCol, idxCol).join(srcKeys, keys, "left_semi")
+    // a CDF feed reads the old rows in full after the discovery job
+    if (cdfOn(s)) old.persist()
+    try applyChange(s, operation, Vector.empty, filesOf(old, fileCol, s.files), old,
+      fileCol, idxCol, files => readTableFiles(s, files).join(srcKeys, keys, "left_anti"),
+      written, "upsert source")
+    finally { old.unpersist(); () }
   }
 
   /**
@@ -1347,18 +1081,18 @@ class QbeastTable private (spark: SparkSession, tablePath: String) {
    * UPDATE/DELETE. First applicable clause wins per row; rows no clause
    * touches survive unchanged.
    *
-   * Copy-on-write shape: affected files (those holding key-matched rows;
-   * the WHOLE table when NOT MATCHED BY SOURCE clauses are present,
-   * since those inspect every target row) are joined once against the
-   * prefixed source; untouched rows are rewritten frozen against their
-   * revision's cube weights, changed+inserted rows go through the
-   * normal revision-aware indexing path; one atomic commit.
+   * The target is joined once against the prefixed source (every target
+   * row when NOT MATCHED BY SOURCE clauses are present, since those
+   * inspect every target row); the rows a clause changes are the old
+   * rows, their files the touched files, and the clause images plus the
+   * inserts the written rows, all handed to [[applyChange]] — one atomic
+   * commit.
    *
    * Matched/not-matched-by-source clause conditions and assignments are
    * evaluated over the joined row (source columns under `srcPrefix`);
-   * insert clauses over the source frame alone. With row-modifying
-   * matched clauses, the source must be unique on the merge keys
-   * (Delta's multiple-matches rule).
+   * insert clauses over the source frame alone. With matched clauses,
+   * the source must be unique on the merge keys (Delta's
+   * multiple-matches rule).
    *
    * @return (target rows removed or replaced, rows newly indexed)
    */
@@ -1391,22 +1125,13 @@ class QbeastTable private (spark: SparkSession, tablePath: String) {
       s"merge into an empty table at $tablePath: use a plain qbeast write")
     // materialized once (Delta materializes merge sources the same way;
     // upsert above too): the source plan otherwise re-executes for the
-    // key-distinct job, every per-revision-group join, and the
-    // insert-path anti-join — 2+G runs of an arbitrary upstream plan
+    // uniqueness probe, the join and the insert-path anti-join
     val source = source0.localCheckpoint(true)
-    val latestRevision = s.lastRevision.filterNot(_.isStaging)
-    val existingRev = latestRevision.orElse(throw new UnsupportedOperationException(
-      "merge into a staging-only qbeast table: optimize() first"))
     val tableSchema = s.schema.getOrElse(
       spark.read.format("qbeast").load(tablePath).schema)
     val targetCols = tableSchema.fieldNames.toSeq
 
-    // only matched / not-matched-by-source clauses can change a target
-    // row; an insert-only merge rewrites nothing
-    val rowModifying = matched.nonEmpty || notMatchedBySource.nonEmpty
-
-    // source keys renamed to the target-side names: every downstream
-    // key join (file discovery, survivor anti-join) is target-named
+    // source keys renamed to the target-side names
     val srcKeys = source
       .select(keyPairs.map { case (t, sn) => col(sn).as(t) }: _*)
       .distinct().persist()
@@ -1414,43 +1139,29 @@ class QbeastTable private (spark: SparkSession, tablePath: String) {
     // exception path leaks block-manager entries
     val cachedJoins = mutable.Buffer.empty[org.apache.spark.sql.DataFrame]
     try {
-      // ---- pass 1: affected files ----
-      val affected: Vector[IndexFile] =
-        if (!rowModifying) Vector.empty
-        else if (notMatchedBySource.nonEmpty) s.files
-        else affectedByKeys(s, srcKeys, keys)
+      if (matched.nonEmpty)
+        requireUniqueMatches(s, source.select(keyPairs.map { case (t, sn) => col(sn).as(t) }: _*),
+          keys, "MERGE with WHEN MATCHED clauses")
+      // without matched clauses no source payload is ever referenced —
+      // join only the DISTINCT keys (already target-named); the full
+      // source keeps its own key names, so the join condition maps per pair
+      val srcJoinSide = if (matched.nonEmpty) source else srcKeys
+      val joinKeyNames = if (matched.nonEmpty) sourceKeys else keys
+      val srcRenamed0 = srcJoinSide.columns.foldLeft(srcJoinSide) { (d, c) =>
+        d.withColumnRenamed(c, srcPrefix + c)
+      }
+      // internal marker columns must not clobber a real column of
+      // either side (a target column literally named __action is legal)
+      val Seq(fileCol, idxCol, actionCol, present) = freshNames(
+        targetCols ++ source.columns ++ srcRenamed0.columns,
+        DvFileCol, DvIdxCol, "__action", srcPrefix + "__present")
+      val srcRenamed = srcRenamed0.withColumn(present, lit(true))
+      val joinCond = keys.zip(joinKeyNames)
+        .map { case (t, sn) => col(t) === col(srcPrefix + sn) }.reduce(_ && _)
 
       // ---- per-row action resolution: first applicable clause wins.
       // Matched clause i → action i; NOT MATCHED BY SOURCE clause i →
       // action 1000+i; untouched rows → -1 ----
-      // internal marker columns must not clobber a real column of
-      // either side (a target column literally named __action is legal)
-      val takenNames =
-        (targetCols ++ source.columns).map(_.toLowerCase).toSet
-      def freshName(base: String): String = {
-        var n = base
-        var i = 0
-        while (takenNames.contains(n.toLowerCase) ||
-          takenNames.contains((srcPrefix + n).toLowerCase)) {
-          i += 1; n = s"${base}_$i"
-        }
-        n
-      }
-      val actionCol = freshName("__action")
-      val rowIdCol = freshName("__rowid")
-      val present = srcPrefix + freshName("__present")
-      // without matched clauses no source payload is ever referenced —
-      // join only the DISTINCT keys so duplicate source keys cannot fan
-      // matched target rows out into duplicated survivors
-      val srcJoinSide = if (matched.nonEmpty) source else srcKeys
-      // srcKeys is already target-named; the full source keeps its own
-      // key names, so the join condition maps per pair
-      val joinKeyNames = if (matched.nonEmpty) sourceKeys else keys
-      val srcRenamed = srcJoinSide.columns.foldLeft(srcJoinSide) { (d, c) =>
-        d.withColumnRenamed(c, srcPrefix + c)
-      }.withColumn(present, lit(true))
-      val joinCond = keys.zip(joinKeyNames)
-        .map { case (t, sn) => col(t) === col(srcPrefix + sn) }.reduce(_ && _)
       val matchedFlag = coalesce(col(present), lit(false))
       var actionChain: Column = null
       def addClause(cond: Column, id: Int): Unit = {
@@ -1466,97 +1177,44 @@ class QbeastTable private (spark: SparkSession, tablePath: String) {
       }
       val action = if (actionChain == null) lit(-1) else actionChain.otherwise(lit(-1))
 
-      val updateClauses =
-        matched.zipWithIndex.collect { case (cl, i) if cl.assignments.isDefined =>
-          (cl.assignments.get, i)
-        } ++
-          notMatchedBySource.zipWithIndex.collect {
-            case (cl, i) if cl.assignments.isDefined => (cl.assignments.get, 1000 + i)
-          }
+      // the target joined once, cached: its key-matched rows (every row
+      // with NOT MATCHED BY SOURCE clauses) feed the touched-file
+      // discovery, the old rows, the clause images and the insert-side
+      // anti-join
+      val joined = withIdentity(pinnedRead(s), fileCol, idxCol)
+        .join(srcRenamed, joinCond, if (notMatchedBySource.isEmpty) "inner" else "left")
+        .withColumn(actionCol, action)
+        .persist()
+      cachedJoins += joined
+      val old = joined.filter(col(actionCol) =!= -1)
+        .select((targetCols :+ fileCol :+ idxCol).map(col): _*)
+      val touched =
+        if (matched.isEmpty && notMatchedBySource.isEmpty) Vector.empty[IndexFile]
+        else filesOf(old, fileCol, s.files)
+
       // UPDATE-shaped clauses RECOMPUTE generated columns after the
       // assignments apply (SQL's SET * expands to every column before
       // reaching here, so an explicit-assignment refusal would break
       // legal SET * merges — the recompute makes the end state correct
       // either way); INSERT clauses must supply them and are gated per
       // row like any constraint
-
-      def applyAssignments(asgn: Map[String, Column]): Seq[Column] =
-        Assignments(tableSchema, asgn)
-
-      // ---- pass 2: per revision group, frozen rewrite of untouched
-      // rows; changed rows collected for re-indexing ----
-      // each group's joined frame feeds the duplicate-match check, the
-      // survivor rewrite and the changed frames in pass 3 — persist so a
-      // K-clause merge reads and joins the affected files once, not K+2
-      // times. The row id is minted BELOW the join so the same target
-      // row keeps one id across its (possibly fanned-out) joined rows.
-      val groupJoins = affected.groupBy(_.revisionId).toSeq.map { case (rid, files) =>
-        val joined = readTableFiles(s, files)
-          .withColumn(rowIdCol, monotonically_increasing_id())
-          .join(srcRenamed, joinCond, "left")
-          .withColumn(actionCol, action)
-          .persist()
-        cachedJoins += joined
-        (rid, files, joined)
-      }
-
-      if (matched.nonEmpty) {
-        // Delta's multiple-matches rule: error only when >1 source rows
-        // hit the SAME target row — duplicated non-null source keys that
-        // match nothing are legal (they fall through to NOT MATCHED).
-        // Derived from the merge join itself (a fanned-out row id), so
-        // broad merges pay no extra scan of the affected files; checked
-        // before anything is written.
-        groupJoins.foreach { case (_, _, joined) =>
-          val dup = joined.filter(matchedFlag)
-            .groupBy(col(rowIdCol)).agg(count(lit(1)).as("__n"))
-            .filter(col("__n") > 1).limit(1).count()
-          require(dup == 0L,
-            "MERGE with WHEN MATCHED clauses requires the source to be unique on the " +
-              "merge keys (multiple source rows matched one target row)")
-        }
-      }
-
-      val perGroup = groupJoins.map { case (rid, files, joined) =>
-        val changed = updateClauses.map { case (asgn, id) =>
-          // recompute generated columns after the clause's assignments
+      val updates = (matched.zipWithIndex ++
+        notMatchedBySource.zipWithIndex.map { case (cl, i) => (cl, 1000 + i) }).collect {
+        case (cl, id) if cl.assignments.isDefined =>
           graft.write.GeneratedColumns.recompute(
-            joined.filter(col(actionCol) === id).select(applyAssignments(asgn): _*),
+            joined.filter(col(actionCol) === id)
+              .select(Assignments(tableSchema, cl.assignments.get): _*),
             s.configuration, s.schema)
-        }
-        val survivors = joined.filter(col(actionCol) === -1)
-          .select(targetCols.map(col): _*)
-        val revision =
-          if (rid == Revision.StagingID)
-            existingRev.getOrElse(throw new UnsupportedOperationException(
-              "merge into a staging-only qbeast table: optimize() first"))
-          else s.revisions(rid)
-        val status = s.indexStatus(revision.revisionID)
-        val frozen = status.cubeStatuses.map { case (c, st) => c -> st.maxWeight }.toMap
-        val adds = QbeastWriter.index(spark, tablePath, survivors, revision, Some(status),
-          files.map(_.elementCount).sum, frozenWeights = Some(frozen))
-        (adds, changed)
       }
-      val survivorAdds = perGroup.flatMap(_._1)
-      val changedFromTarget = perGroup.flatMap(_._2)
 
       // ---- inserts: first applicable NOT MATCHED clause per unmatched
-      // source row, evaluated over the source frame ----
-      val insertFrames: Seq[org.apache.spark.sql.DataFrame] =
+      // source row, evaluated over the source frame. Every target row
+      // matching a source key is in `joined`, so anti-joining against
+      // its keys equals anti-joining against the whole table ----
+      val inserts: Seq[org.apache.spark.sql.DataFrame] =
         if (notMatched.isEmpty) Nil
         else {
-          // target keys renamed to the source-side names so the
-          // anti-join resolves against the source frame. When pass 1
-          // ran the keyed semi-join (rowModifying, no NMBS clauses),
-          // every target row matching a source key provably lives in
-          // `affected` — anti-joining against just their keys equals
-          // anti-joining against the whole table, without the second
-          // full scan. Insert-only merges (affected deliberately
-          // empty) still need the full key scan.
-          val keySource =
-            if (rowModifying && notMatchedBySource.isEmpty) readTableFiles(s, affected)
-            else pinnedRead(s)
-          val tKeys = keySource
+          val tKeys = joined
             .select(keyPairs.map { case (t, sn) => col(t).as(sn) }: _*).distinct()
           val unmatchedSrc = source.join(tKeys, sourceKeys, "left_anti")
           var ic: Column = null
@@ -1581,59 +1239,17 @@ class QbeastTable private (spark: SparkSession, tablePath: String) {
           }
         }
 
-      // ---- pass 3: changed + inserted rows through revision-aware
-      // indexing; one atomic commit ----
-      val changedAll = (changedFromTarget ++ insertFrames).reduceOption(_ unionByName _)
-      val (changedAdds, newRevision, nChanged) = changedAll match {
-        case None => (Seq.empty[IndexFile], None, 0L)
-        case Some(df) =>
-          graft.write.Constraints.validate(df,
-            graft.write.Constraints.of(s.configuration), "MERGE-written")
-          val opts = QbeastOptions(Map.empty[String, String],
-            defaultCubeSize = existingRev.map(_.desiredCubeSize)
-              .getOrElse(QbeastOptions.DefaultCubeSize))
-          val (rev, isNew, n) = RevisionFactory.computeRevisionChanges(
-            existingRev, opts, tablePath, df, mappingSchema = s.schema)
-          val status = if (!isNew) Some(s.indexStatus(rev.revisionID)) else None
-          // per-row backstop (see upsert): the rows written must be the
-          // rows the constraint gate saw
-          val adds = QbeastWriter.index(spark, tablePath, df, rev, status, n,
-            constraints = constraintsFor(s))
-          (adds, if (isNew) Some(rev) else None, n)
-      }
-      if (affected.isEmpty && changedAdds.isEmpty) return (0L, 0L)
-      // CDF feed computed directly from the (persisted) merge join
-      // instead of the generic file diff: the affected files' rows
-      // partition by actionCol into survivors (== -1, rewritten
-      // verbatim — they cancel in both exceptAll sides of the generic
-      // diff) and pre-images (!= -1); the after-side is exactly the
-      // changed+inserted frame that was just indexed. The diff reduces
-      // to (changedAll ∖ preImages, preImages ∖ changedAll) — both
-      // sides read the ALREADY-CACHED join frames, zero re-reads of
-      // affected or written files.
-      val cdcDirect: Option[Option[LogAction]] =
-        if (!cdfOn(s)) None
-        else {
-          val preImages = groupJoins.map { case (_, _, joined) =>
-            joined.filter(col(actionCol) =!= -1).select(targetCols.map(col): _*)
-          }.reduceOption(_ unionByName _)
-          val feed = (changedAll, preImages) match {
-            case (None, None) => None
-            case (Some(after), None) =>
-              Some(after.withColumn("_change_type", lit("insert")))
-            case (None, Some(before)) =>
-              Some(before.withColumn("_change_type", lit("delete")))
-            case (Some(after), Some(before)) =>
-              Some(after.exceptAll(before).withColumn("_change_type", lit("insert"))
-                .union(before.exceptAll(after)
-                  .withColumn("_change_type", lit("delete"))))
-          }
-          Some(feed.map(persistCdc(s, _)))
-        }
-      commitMutation(s, survivorAdds ++ changedAdds, newRevision, affected,
-        operation = "MERGE", cdc = cdcDirect)
-      val replaced = affected.map(_.elementCount).sum - survivorAdds.map(_.elementCount).sum
-      (replaced, nChanged)
+      // a touched file's unchanged rows: its rows minus the old rows,
+      // matched on (file name, row index)
+      val oldIds = old.select(substring_index(col(fileCol), "/", -1).as(fileCol), col(idxCol))
+      def unchanged(files: Vector[IndexFile]): org.apache.spark.sql.DataFrame =
+        withIdentity(readTableFiles(s, files), fileCol, idxCol)
+          .withColumn(fileCol, substring_index(col(fileCol), "/", -1))
+          .join(oldIds, Seq(fileCol, idxCol), "left_anti")
+          .select(targetCols.map(col): _*)
+
+      applyChange(s, "MERGE", Vector.empty, touched, old, fileCol, idxCol, unchanged,
+        (updates ++ inserts).reduceOption(_ unionByName _), "MERGE-written")
     } finally {
       srcKeys.unpersist()
       cachedJoins.foreach(_.unpersist())
@@ -1641,121 +1257,165 @@ class QbeastTable private (spark: SparkSession, tablePath: String) {
     }
   }
 
-  /** Delta's multiple-matches rule for update-style matched clauses:
+  /** Delta's multiple-matches rule for the row-replacing keyed verbs:
    * duplicate non-null source keys that actually MATCH a target row
    * error out (duplicates matching nothing fall through to the insert
-   * side); the lone-DELETE merge shape skips the check — Delta
-   * explicitly allows duplicate matches there, deletion is unambiguous.
-   * Checked against the index-pruned affected files, before anything
-   * is written; the source-only duplicate probe runs first, so a
-   * unique source (the common case) never scans the affected files. */
+   * side). `source` carries the keys under their target names. Checked
+   * before anything is written; the source-only duplicate probe runs
+   * first, so a unique source (the common case) never scans the
+   * target. */
   private def requireUniqueMatches(
       s: QbeastSnapshot,
       source: org.apache.spark.sql.DataFrame,
       keys: Seq[String],
-      affected: Vector[IndexFile]): Unit = {
-    if (affected.isEmpty) return
+      verb: String): Unit = {
     val nonNullKeys = keys.map(k => col(k).isNotNull).reduce(_ && _)
     val dupKeys = source.filter(nonNullKeys)
       .groupBy(keys.map(col): _*).agg(count(lit(1)).as("__n"))
       .filter(col("__n") > 1).select(keys.map(col): _*)
     if (dupKeys.limit(1).count() > 0) {
-      val affectedKeys = readTableFiles(s, affected)
-        .select(keys.map(col): _*).distinct()
-      val dup = dupKeys.join(affectedKeys, keys, "left_semi").limit(1).count()
+      val targetKeys = pinnedRead(s).select(keys.map(col): _*)
+      val dup = dupKeys.join(targetKeys, keys, "left_semi").limit(1).count()
       require(dup == 0L,
-        "MERGE/upsert requires the source to be unique on the merge keys " +
+        s"$verb requires the source to be unique on the merge keys " +
           "(multiple source rows matched one target row)")
     }
   }
 
-  /** Shared passes 1–2 of the keyed mutations ([[upsert]],
-   * [[deleteMatched]]): discover the target files holding matched keys
-   * through the index-pruned read path (or reuse `knownAffected` when a
-   * merge-on-read attempt already discovered them), then rewrite each
-   * affected file WITHOUT the matched rows, frozen against its own
-   * revision's cube weights. */
-  private def rewriteWithoutMatches(
-      s: QbeastSnapshot,
-      srcKeys: org.apache.spark.sql.DataFrame,
-      keys: Seq[String],
-      requireUniqueSource: Option[org.apache.spark.sql.DataFrame] = None,
-      knownAffected: Option[Vector[IndexFile]] = None): (Vector[IndexFile], Seq[IndexFile]) = {
-    val latestRevision = s.lastRevision.filterNot(_.isStaging)
-    val affected = knownAffected.getOrElse(affectedByKeys(s, srcKeys, keys))
-
-    requireUniqueSource.foreach(requireUniqueMatches(s, _, keys, affected))
-
-    // ---- pass 2: rewrite affected files WITHOUT the matched rows ----
-    val survivorAdds = affected.groupBy(_.revisionId).toSeq.flatMap { case (rid, files) =>
-      val survivors = readTableFiles(s, files).join(srcKeys, keys, "left_anti")
-      val revision =
-        if (rid == Revision.StagingID)
-          latestRevision.getOrElse(throw new UnsupportedOperationException(
-            "keyed mutation of a staging-only qbeast table: optimize() first"))
-        else s.revisions(rid)
-      val status = s.indexStatus(revision.revisionID)
-      val frozen = status.cubeStatuses.map { case (c, st) => c -> st.maxWeight }.toMap
-      QbeastWriter.index(spark, tablePath, survivors, revision, Some(status),
-        files.map(_.elementCount).sum, frozenWeights = Some(frozen))
-    }
-    (affected, survivorAdds)
-  }
-
   /**
-   * Merge-on-read DELETE: one pass computes each affected file's newly
-   * matched row indexes (on the MASKED pinned read, so already-deleted
-   * rows never re-match), unions them with the file's existing vector
-   * and writes the replacement vector ON THE EXECUTOR — the driver sees
-   * only (file, vectorPath, counts), never row indexes. Commits one
-   * `dv` action per file, plus a plain remove for every stats-PROVED
-   * whole-file drop the caller discovered (`drops`) — the retention
-   * delete on a dv table drops its boundary-aligned files metadata-only
-   * and masks just the straddlers, in ONE commit.
+   * The one row-level change kernel every DML verb lowers to. A verb
+   * hands it, against snapshot `s`:
+   *  - `drops`: files stats PROVED fully deleted, dropped unread;
+   *  - `touched`: the files holding at least one changed row;
+   *  - `old`: the old versions of the changed rows, the table's columns
+   *    plus their file path (`fileCol`) and row index (`idxCol`);
+   *  - `unchanged`: the rows of some touched files that stay as they are;
+   *  - `written`: the rows to write, updated images plus inserts.
    *
-   * Returns the deleted row count, or -1 when any file's post-delete
-   * masked fraction would exceed the threshold — the caller then takes
-   * the copy-on-write path, which materializes ALL masks of the files
-   * it rewrites (a mostly-deleted file is cheaper to rewrite than to
-   * keep masking). Written vectors are cleaned up on fallback or abort;
-   * replaced vectors are reclaimed by vacuum like removed data files.
+   * The strategy follows from the table and the change, never from the
+   * verb. With nothing touched, no file is read: the drops leave the log
+   * and any inserts are appended. With `deletionVectors` on and every
+   * touched file within the masked-fraction budget, the old rows are
+   * masked by replacement vectors, written on the executors. Otherwise
+   * copy-on-write: the unchanged rows are rewritten against their
+   * revision's frozen cube weights and the touched files removed. The
+   * written rows go through the revision-aware indexing path, the
+   * change feed through [[persistCdc]], and everything lands in one
+   * [[commitMutation]].
+   *
+   * @return (live rows removed or replaced, rows written)
    */
-  private def dvDelete(
+  private def applyChange(
       s: QbeastSnapshot,
-      table: org.apache.spark.sql.DataFrame,
-      matched: Column,
-      affected: Vector[IndexFile],
-      drops: Vector[IndexFile] = Vector.empty): Long = {
-    // cache the matched rows WITH their file identity: the vector job
-    // and the CDF change-data write both consume them — without the
-    // cache a CDF-enabled delete would scan the affected files twice
-    val cdfEnabled = cdfOn(s)
-    val matchedRows = table.filter(matched)
-      .withColumn(DvFileCol, col("_metadata.file_path"))
-      .withColumn(DvIdxCol, col("_metadata.row_index"))
-    if (cdfEnabled) matchedRows.persist()
+      operation: String,
+      drops: Vector[IndexFile],
+      touched: Vector[IndexFile],
+      old: => org.apache.spark.sql.DataFrame,
+      fileCol: String,
+      idxCol: String,
+      unchanged: Vector[IndexFile] => org.apache.spark.sql.DataFrame,
+      written: Option[org.apache.spark.sql.DataFrame],
+      writtenLabel: String): (Long, Long) = {
+    val vectors =
+      if (touched.isEmpty || !graft.write.DeletionVectors.enabled(s.configuration)) Nil
+      else writeDvVectors(s, old, fileCol, idxCol)
+    // past the budget read amplification beats the skipped rewrite: a
+    // mostly-deleted file is cheaper to rewrite than to keep masking
+    val masked = vectors.nonEmpty && !overMaskBudget(vectors, touched)
+    if (!masked) dropDvVectors(vectors)
+    // any failure from here to the commit (constraint violation,
+    // staging-only table, write error, conflict) must reclaim the
+    // replacement vectors — nothing will ever reference them
     try {
-      dvDeleteInner(s, matchedRows, affected, cdfEnabled, drops)
-    } finally if (cdfEnabled) { matchedRows.unpersist(); () }
+      def indexSpace: Revision = s.lastRevision.filterNot(_.isStaging).getOrElse(
+        throw new UnsupportedOperationException(s"$operation on a staging-only qbeast " +
+          "table: append indexed data or optimize() first so written rows have an " +
+          "index space to land in"))
+      val kept = if (masked) Nil else touched.groupBy(_.revisionId).toSeq.flatMap {
+        case (rid, files) =>
+          // staging (unindexed) survivors fold into the latest indexed
+          // revision — same move optimizeUnindexed makes
+          val revision = if (rid == Revision.StagingID) indexSpace else s.revisions(rid)
+          val status = s.indexStatus(revision.revisionID)
+          val frozen = status.cubeStatuses.map { case (c, st) => c -> st.maxWeight }.toMap
+          QbeastWriter.index(spark, tablePath, unchanged(files), revision, Some(status),
+            files.map(_.elementCount).sum, frozenWeights = Some(frozen))
+      }
+      val checks = constraintsFor(s)
+      val (adds, newRevision, n): (Seq[IndexFile], Option[Revision], Long) = written match {
+        case None => (Nil, None, 0L)
+        case Some(df) =>
+          graft.write.Constraints.validate(df, checks.toMap, writtenLabel)
+          val existing = indexSpace
+          val opts = QbeastOptions(Map.empty[String, String],
+            defaultCubeSize = existing.desiredCubeSize)
+          val (rev, isNew, n) = RevisionFactory.computeRevisionChanges(
+            Some(existing), opts, tablePath, df, mappingSchema = s.schema)
+          val status = if (isNew) None else Some(s.indexStatus(rev.revisionID))
+          // per-row backstop: the validate above ran as a SEPARATE job,
+          // and a source can draw different rows in another execution
+          val adds = QbeastWriter.index(spark, tablePath, df, rev, status, n,
+            constraints = checks)
+          (adds, if (isNew) Some(rev) else None, n)
+      }
+      if (drops.isEmpty && touched.isEmpty && adds.isEmpty) return (0L, 0L)
+
+      // the feed is built from the frames already in hand, never from a
+      // re-read of the written files. Copy-on-write rewrote the unchanged
+      // rows verbatim, so the file diff reduces to (written ∖ old,
+      // old ∖ written): an identical old and new row cancel. A mask
+      // deletes every old row whatever replaces it, so the old rows are
+      // the deletes and the written rows the inserts.
+      val cdc = if (!cdfOn(s)) None else {
+        def tag(df: org.apache.spark.sql.DataFrame, kind: String) =
+          df.withColumn("_change_type", lit(kind))
+        val before = ((if (touched.isEmpty) Nil else Seq(old.drop(fileCol, idxCol))) ++
+          (if (drops.isEmpty) Nil else Seq(readTableFiles(s, drops))))
+          .reduceOption(_ unionByName _)
+        val feed = (before, written) match {
+          case (Some(b), Some(a)) if !masked =>
+            Seq(tag(a.exceptAll(b), "insert"), tag(b.exceptAll(a), "delete"))
+          case _ => before.map(tag(_, "delete")).toSeq ++ written.map(tag(_, "insert"))
+        }
+        Some(persistCdc(s, feed.reduce(_ union _)))
+      }
+      val byName = touched.map(f => new Path(f.path).getName -> f.path).toMap
+      val dvActions = if (!masked) Nil else vectors.map { case (name, rel, _, total) =>
+        DvFileAction(byName(name), rel, total)
+      }
+      val removes = if (masked) drops else drops ++ touched
+      commitMutation(s, kept ++ adds, newRevision, removes, operation, dvActions, cdc)
+      // element counts are PRE-mask: rows a vector had already removed
+      // are not removed again
+      def live(fs: Seq[IndexFile]): Long =
+        fs.map(_.elementCount).sum - fs.iterator.flatMap(f => s.dvs.get(f.path)).map(_.cardinality).sum
+      val removed =
+        if (masked) live(drops) + vectors.map(_._3).sum
+        else live(removes) - kept.map(_.elementCount).sum
+      (removed, n)
+    } catch { case e: Throwable => if (masked) dropDvVectors(vectors); throw e }
   }
 
-  /** Executor-side per-file deletion-vector build for `matchedRows`
-   * (which must carry `_f` = file path, `_i` = row index): one pass —
-   * groupBy file → sorted indexes → union with the file's existing
-   * vector → write the replacement vector. The driver sees only
-   * metadata: (fileName, relVectorPath, newlyMasked, mergedTotal). */
+  /** Executor-side per-file deletion-vector build for `rows` (carrying
+   * their file path and row index): one pass — groupBy file → sorted
+   * indexes → union with the file's existing vector → write the
+   * replacement vector. The driver sees only metadata: (fileName,
+   * relVectorPath, newlyMasked, mergedTotal). Replaced vectors are
+   * reclaimed by vacuum like removed data files. */
   private def writeDvVectors(
       s: QbeastSnapshot,
-      matchedRows: org.apache.spark.sql.DataFrame): Array[(String, String, Long, Long)] = {
+      rows: org.apache.spark.sql.DataFrame,
+      fileCol: String,
+      idxCol: String): Seq[(String, String, Long, Long)] = {
     import graft.write.DeletionVectors
     import spark.implicits._
     val sconf = new org.apache.spark.util.SerializableConfiguration(conf)
     val tp = tablePath
     val existingDvByName: Map[String, String] =
       s.dvs.map { case (p, i) => new Path(p).getName -> i.dvPath }
-    matchedRows
-      .select(col(DvFileCol), col(DvIdxCol))
-      .groupBy(DvFileCol).agg(sort_array(collect_list(col(DvIdxCol))).as("_idx"))
+    rows
+      .select(col(fileCol), col(idxCol))
+      .groupBy(fileCol).agg(sort_array(collect_list(col(idxCol))).as("_idx"))
       .as[(String, Array[Long])]
       .mapPartitions { it =>
         it.map { case (fullPath, newIdx) =>
@@ -1769,33 +1429,23 @@ class QbeastTable private (spark: SparkSession, tablePath: String) {
           val rel = DeletionVectors.write(tp, sconf.value, merged)
           (name, rel, newIdx.length.toLong, merged.length.toLong)
         }
-      }.collect()
+      }.collect().toSeq
   }
 
-  /** Best-effort reclamation of an aborted dv commit's artifacts: the
-   * replacement vectors and (if any) the orphaned change-data dir. */
-  private def dropDvArtifacts(
-      written: Array[(String, String, Long, Long)],
-      extra: Option[LogAction]): Unit = {
+  /** Best-effort reclamation of replacement vectors no commit will
+   * reference (over budget, or the mutation aborted). */
+  private def dropDvVectors(written: Seq[(String, String, Long, Long)]): Unit = {
     val fs = new Path(tablePath).getFileSystem(conf)
     written.foreach { case (_, rel, _, _) =>
       try fs.delete(new Path(tablePath, rel), false)
       catch { case scala.util.control.NonFatal(_) => }
     }
-    extra.foreach {
-      case CdcFileAction(p, _) =>
-        try fs.delete(new Path(tablePath, p), true)
-        catch { case scala.util.control.NonFatal(_) => }
-      case _ =>
-    }
   }
 
   /** True when any touched file's post-operation masked fraction would
-   * exceed the configured threshold — the merge-on-read budget gate
-   * (past it, read amplification beats the skipped rewrite and the
-   * caller falls back to copy-on-write). */
-  private def dvOverBudget(
-      written: Array[(String, String, Long, Long)],
+   * exceed the configured threshold — the merge-on-read budget gate. */
+  private def overMaskBudget(
+      written: Seq[(String, String, Long, Long)],
       affected: Vector[IndexFile]): Boolean = {
     val maxFraction = spark.conf
       .getOption("spark.qbeast.dv.maxDeletedFraction").map(_.toDouble)
@@ -1807,234 +1457,15 @@ class QbeastTable private (spark: SparkSession, tablePath: String) {
     }
   }
 
-  private def dvDeleteInner(
-      s: QbeastSnapshot,
-      matchedRows: org.apache.spark.sql.DataFrame,
-      affected: Vector[IndexFile],
-      cdfEnabled: Boolean,
-      drops: Vector[IndexFile] = Vector.empty): Long = {
-    val tp = tablePath
-    val written = writeDvVectors(s, matchedRows)
-    if (written.isEmpty && drops.isEmpty) return 0L
-
-    if (dvOverBudget(written, affected)) {
-      dropDvArtifacts(written, None); return -1L
-    }
-
-    // CDF: persist the deleted rows as this commit's change data (the
-    // file-diff fallback cannot see a dv-only commit): the masked rows
-    // from the cached matched frame — no second scan — plus the live
-    // rows of every proved whole-file drop (those were never scanned;
-    // the feed is the one consumer that must read them)
-    val cdcAction: Option[LogAction] =
-      if (cdfEnabled) {
-        val dir = s"_change_data/cdc-${java.util.UUID.randomUUID()}"
-        val target = new Path(tp, dir)
-        val masked = matchedRows.drop(DvFileCol, DvIdxCol)
-        val deleteRows =
-          if (drops.isEmpty) masked
-          else masked.unionByName(readTableFiles(s, drops))
-        deleteRows
-          .withColumn("_change_type", lit("delete"))
-          .write.mode("overwrite").parquet(target.toString)
-        val fs = target.getFileSystem(conf)
-        val size = fs.listStatus(target).filter(_.isFile).map(_.getLen).sum
-        Some(CdcFileAction(dir, size))
-      } else None
-
-    val byName = affected.map(f => new Path(f.path).getName -> f).toMap
-    val dvActions: Seq[LogAction] = written.toSeq.map { case (name, rel, _, total) =>
-      DvFileAction(byName(name).path, rel, total)
-    }
-    try {
-      commitMutation(s, Nil, None, drops, operation = "DELETE",
-        dvActions = dvActions, cdc = Some(cdcAction))
-    } catch { case e: Throwable => dropDvArtifacts(written, cdcAction); throw e }
-    val droppedMasked =
-      drops.iterator.flatMap(f => s.dvs.get(f.path)).map(_.cardinality).sum
-    written.map(_._3).sum + drops.map(_.elementCount).sum - droppedMasked
-  }
-
-  /**
-   * Merge-on-read UPDATE (opt-in via `deletionVectors=true`): instead
-   * of rewriting every affected file's survivors, the matched rows are
-   * masked with replacement deletion vectors and their UPDATED images
-   * are appended through the normal revision-aware indexing — one
-   * atomic commit carrying the dv actions and the adds. The survivors
-   * (the overwhelming bulk of every touched file at 100 TB) are never
-   * read or rewritten. Falls back to copy-on-write (returns -1) when
-   * any file's post-update masked fraction would exceed the threshold,
-   * mirroring [[dvDelete]].
-   */
-  private def dvUpdate(
-      s: QbeastSnapshot,
-      table: org.apache.spark.sql.DataFrame,
-      matched: Column,
-      affected: Vector[IndexFile],
-      asgn: Map[String, Column]): Long = {
-    val cdfEnabled = cdfOn(s)
-    // the matched frame feeds the vector job AND the updated-image
-    // write (and the CDF pre-images): persist so the affected files
-    // are scanned once
-    val matchedRows = table.filter(matched)
-      .withColumn(DvFileCol, col("_metadata.file_path"))
-      .withColumn(DvIdxCol, col("_metadata.row_index"))
-      .persist()
-    try dvUpdateInner(s, matchedRows, affected, asgn, cdfEnabled)
-    finally { matchedRows.unpersist(); () }
-  }
-
-  private def dvUpdateInner(
-      s: QbeastSnapshot,
-      matchedRows: org.apache.spark.sql.DataFrame,
-      affected: Vector[IndexFile],
-      asgn: Map[String, Column],
-      cdfEnabled: Boolean): Long = {
-    val written = writeDvVectors(s, matchedRows)
-    if (written.isEmpty) return 0L
-    if (dvOverBudget(written, affected)) { dropDvArtifacts(written, None); return -1L }
-    // any failure from here to the commit (constraint violation,
-    // staging-only table, write error) must reclaim the replacement
-    // vectors — nothing will ever reference them
-    try dvUpdateCommit(s, matchedRows, affected, asgn, cdfEnabled, written)
-    catch { case e: Throwable => dropDvArtifacts(written, None); throw e }
-  }
-
-  private def dvUpdateCommit(
-      s: QbeastSnapshot,
-      matchedRows: org.apache.spark.sql.DataFrame,
-      affected: Vector[IndexFile],
-      asgn: Map[String, Column],
-      cdfEnabled: Boolean,
-      written: Array[(String, String, Long, Long)]): Long = {
-    // updated images through the normal revision-aware indexing path
-    // (the copy-on-write pass-3 logic: an assignment to an indexed
-    // column can move values outside the frozen space — then they land
-    // in a new, merged-space revision, exactly like an append)
-    val base0 = matchedRows.drop(DvFileCol, DvIdxCol)
-    val updatedCols = Assignments(base0.schema, asgn)
-    // generated columns recompute after the assignments (same as the
-    // copy-on-write pass 3)
-    val updated = graft.write.GeneratedColumns.recompute(
-      base0.select(updatedCols: _*), s.configuration, s.schema)
-    graft.write.Constraints.validate(updated,
-      graft.write.Constraints.of(s.configuration), "UPDATE-assigned")
-    dvCommitWithAdds(s, updated,
-      cdfPre = if (cdfEnabled) Some(base0) else None,
-      written, affected, operation = "UPDATE")
-  }
-
-  /**
-   * Merge-on-read upsert (the keyed MERGE fast path): matched target
-   * rows are masked with replacement vectors, ALL source rows appended
-   * through the revision-aware path, one atomic commit — the affected
-   * files' survivors (at 100 TB, virtually all of every touched file)
-   * are never read. Returns Right((replaced, inserted)) when
-   * committed; Left(affected) when any file's masked fraction would
-   * exceed the budget — the caller then takes the copy-on-write path,
-   * reusing the discovered files and the already-passed uniqueness
-   * check instead of re-scanning.
-   */
-  private def dvUpsert(
-      s: QbeastSnapshot,
-      source: org.apache.spark.sql.DataFrame,
-      srcKeys: org.apache.spark.sql.DataFrame,
-      keys: Seq[String]): Either[Vector[IndexFile], (Long, Long)] = {
-    val affected = affectedByKeys(s, srcKeys, keys)
-    requireUniqueMatches(s, source, keys, affected)
-    val cdfEnabled = cdfOn(s)
-    // no matches → nothing to mask: pure insert through the same commit
-    val matchedRows =
-      if (affected.isEmpty) None
-      else Some(readTableFiles(s, affected)
-        .withColumn(DvFileCol, col("_metadata.file_path"))
-        .withColumn(DvIdxCol, col("_metadata.row_index"))
-        .join(srcKeys, keys, "left_semi").persist())
-    try {
-      val written = matchedRows
-        .map(writeDvVectors(s, _))
-        .getOrElse(Array.empty[(String, String, Long, Long)])
-      if (dvOverBudget(written, affected)) {
-        dropDvArtifacts(written, None); return Left(affected)
-      }
-      val cdfPre =
-        if (cdfEnabled) matchedRows.map(_.drop(DvFileCol, DvIdxCol)) else None
-      try {
-        val nSrc = dvCommitWithAdds(s, source, cdfPre, written, affected,
-          operation = "MERGE")
-        Right((written.map(_._3).sum, nSrc))
-      } catch { case e: Throwable => dropDvArtifacts(written, None); throw e }
-    } finally matchedRows.foreach { m => m.unpersist(); () }
-  }
-
-  /**
-   * Shared tail of every merge-on-read row-replacing mutation (UPDATE,
-   * upsert): index `toIndex` through the normal revision-aware path,
-   * optionally persist a CDF change file (`cdfPre` rows as deletes +
-   * `toIndex` as inserts), and commit the adds TOGETHER with the
-   * already-written replacement vectors in one atomic commit with the
-   * full rebase discipline (dv staleness check, late-constraint
-   * revalidation, revision renumbering). Returns the indexed row count.
-   */
-  private def dvCommitWithAdds(
-      s: QbeastSnapshot,
-      toIndex: org.apache.spark.sql.DataFrame,
-      cdfPre: Option[org.apache.spark.sql.DataFrame],
-      written: Array[(String, String, Long, Long)],
-      affected: Vector[IndexFile],
-      operation: String): Long = {
-    val existing = s.lastRevision.filterNot(_.isStaging)
-      .orElse(throw new UnsupportedOperationException(
-        s"$operation on a staging-only qbeast table: append indexed data first"))
-    val opts = QbeastOptions(Map.empty[String, String],
-      defaultCubeSize = existing.map(_.desiredCubeSize).getOrElse(QbeastOptions.DefaultCubeSize))
-    val (rev, isNew, n) = RevisionFactory.computeRevisionChanges(
-      existing, opts, tablePath, toIndex, mappingSchema = s.schema)
-    val status = if (!isNew) Some(s.indexStatus(rev.revisionID)) else None
-    // per-row backstop inside the write task (driver-side validate ran
-    // as a separate job — DML sources can change between executions)
-    val adds = QbeastWriter.index(spark, tablePath, toIndex, rev, status, n,
-      constraints = constraintsFor(s))
-    val newRevision: Option[Revision] = if (isNew) Some(rev) else None
-
-    // CDF: pre-images as deletes, new images as inserts — one change
-    // file, reusing the cached matched frame (no second scan)
-    val cdcAction: Option[LogAction] =
-      cdfPre.map { pre =>
-        val dir = s"_change_data/cdc-${java.util.UUID.randomUUID()}"
-        val target = new Path(tablePath, dir)
-        pre.withColumn("_change_type", lit("delete"))
-          .union(toIndex.withColumn("_change_type", lit("insert")))
-          .write.mode("overwrite").parquet(target.toString)
-        val fsx = target.getFileSystem(conf)
-        val size = fsx.listStatus(target).filter(_.isFile).map(_.getLen).sum
-        CdcFileAction(dir, size)
-      }
-
-    val byName = affected.map(f => new Path(f.path).getName -> f).toMap
-    val dvActions: Seq[LogAction] = written.toSeq.map { case (name, rel, _, total) =>
-      DvFileAction(byName(name).path, rel, total)
-    }
-    try {
-      commitMutation(s, adds, newRevision, Vector.empty, operation,
-        dvActions = dvActions, cdc = Some(cdcAction))
-    } catch { case e: Throwable => dropDvArtifacts(written, cdcAction); throw e }
-    adds.map(_.elementCount).sum
-  }
-
   /**
    * The commit of every row-level mutation — copy-on-write (adds +
    * removes) and merge-on-read (dv actions, optionally with adds and
    * removes) alike — with all three [[Rebase]] rules. Benign conflicts
    * (unrelated appends) retry against the new version; a conflict that
    * touched one of OUR target files aborts (retrying would resurrect
-   * deleted rows or double-apply changes).
-   *
-   * `cdc`: None (default) derives change data from the file diff
-   * ([[writeCdcData]]); `Some(action)` means the caller already
-   * persisted its change file (the merge-on-read paths, whose deletes
-   * are vector deltas no file diff can see) — the action rides every
-   * attempt and is reclaimed on abort either way.
+   * deleted rows or double-apply changes). `cdcAction` is the change
+   * file the caller already persisted: it rides every attempt and is
+   * reclaimed on abort.
    */
   private def commitMutation(
       initial: QbeastSnapshot,
@@ -2042,8 +1473,8 @@ class QbeastTable private (spark: SparkSession, tablePath: String) {
       newRevision0: Option[Revision],
       removes: Vector[IndexFile],
       operation: String,
-      dvActions: Seq[LogAction] = Nil,
-      cdc: Option[Option[LogAction]] = None): Unit = {
+      dvActions: Seq[LogAction],
+      cdcAction: Option[LogAction]): Unit = {
     // DML pre-commit hooks: the same contract as the write/optimize
     // hooks (options-borne there), configured through the session conf
     // because the DML entry points (delete/update/merge) take no write
@@ -2062,11 +1493,6 @@ class QbeastTable private (spark: SparkSession, tablePath: String) {
     var newRevision = newRevision0
     var checked = graft.write.Constraints.of(initial.configuration)
     val now = System.currentTimeMillis()
-    // the row content of the change is fixed before the commit loop —
-    // rebases renumber revisions, never rows — so the change file is
-    // written once and its action rides every attempt; an ABORTED
-    // mutation must reclaim it (no commit will ever reference it)
-    val cdcAction = cdc.getOrElse(writeCdcData(initial, adds0, removes))
     def dropOrphanCdc(): Unit = cdcAction.foreach {
       case CdcFileAction(p, _) =>
         try new Path(tablePath).getFileSystem(conf)
@@ -2369,40 +1795,13 @@ class QbeastTable private (spark: SparkSession, tablePath: String) {
     }
   }
 
-  /**
-   * When the table opted into the change data feed
-   * (`qbeast.enableChangeDataFeed=true`, set as a write option), every
-   * DML commit persists its net row changes (table schema +
-   * `_change_type`) as a parquet directory under `_change_data/` and
-   * references it with a `cdc` log action — Delta's AddCDCFile shape.
-   * Readers then consume a plain file read: batch [[changes]] skips
-   * the file re-diff, and the STREAMING `readChangeFeed` mode (which
-   * cannot run a stateful EXCEPT ALL inside a micro-batch) becomes
-   * possible for DML commits at all. The content written is exactly
-   * the diff the fallback would compute, so enabling the property
-   * never changes `changes()` results — only who pays for them.
-   */
-  private def writeCdcData(
-      s: QbeastSnapshot,
-      adds: Seq[IndexFile],
-      removes: Seq[IndexFile]): Option[LogAction] = {
-    if (!cdfOn(s)) return None
-    val schema = s.schema.getOrElse(return None)
-    def read(fs: Seq[IndexFile]): org.apache.spark.sql.DataFrame =
-      if (fs.isEmpty)
-        spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
-      else graft.write.DeletionVectors.mask(s, conf, ColumnMapping.readParquet(
-        spark, schema, fs.map(f => new Path(tablePath, f.path).toString)))
-    val before = read(removes)
-    val after = read(adds)
-    val changed = after.exceptAll(before).withColumn("_change_type", lit("insert"))
-      .union(before.exceptAll(after).withColumn("_change_type", lit("delete")))
-    Some(persistCdc(s, changed))
-  }
-
-  /** Persist an already-computed change frame (table columns +
-   * `_change_type`) under `_change_data/` and return its log action —
-   * the write tail [[writeCdcData]] and the direct DML feeds share. */
+  /** Persist a DML commit's change frame (table columns +
+   * `_change_type`) under `_change_data/` and return its `cdc` log
+   * action — Delta's AddCDCFile shape. Readers then consume a plain file
+   * read: batch [[changes]] skips the file re-diff, and the STREAMING
+   * `readChangeFeed` mode (which cannot run a stateful EXCEPT ALL inside
+   * a micro-batch) becomes possible for DML commits at all. The only
+   * writer under `_change_data/`. */
   private def persistCdc(
       s: QbeastSnapshot,
       changed: org.apache.spark.sql.DataFrame): LogAction = {
@@ -2753,7 +2152,7 @@ class QbeastTable private (spark: SparkSession, tablePath: String) {
           abs.toString
         }
         // change files are keyed by PHYSICAL names (stable across
-        // renames — see writeCdcData); _change_type is CDF infra
+        // renames — see persistCdc); _change_type is CDF infra
         emit(Seq(ColumnMapping.readParquetWith(spark, schema, Seq(ctField), absolute)
           .withColumn("_commit_version", lit(v))))
       }

@@ -215,22 +215,27 @@ class ColumnMappingSpec extends AnyFunSuite {
   }
 
   test("CDF: batch changes() replays across a rename under the end schema") {
-    val dir = freshTable("cm-cdf")
-    // turn on the change feed, do DML, rename, more DML
-    Seq((5000L, 50000.0, "x")).toDF("k", "v", "s").write.format("qbeast")
-      .option("enableChangeDataFeed", "true").mode("append").save(dir)
-    val t = QbeastTable.forPath(spark, dir)
-    val vStart = t.snapshot.version
-    t.delete("v < 10.0") // persisted change file (pre-rename logical names)
-    t.renameColumn("v", "value")
-    t.delete("value >= 990.0 and value < 1000.0") // post-rename change file
-    val ch = t.changes(vStart)
-    // all frames expose the END schema's logical names
-    assert(ch.schema.fieldNames.contains("value") && !ch.schema.fieldNames.contains("v"))
-    val dels = ch.filter(col("_change_type") === "delete")
-    assert(dels.count() == 20L)
-    assert(dels.filter(col("value") < 10.0).count() == 10L)
-    assert(dels.filter(col("value") >= 990.0).count() == 10L)
+    // copy-on-write and deletion-vector deletes write their change files
+    // the same way, so both replay under the end schema
+    Seq(false, true).foreach { dv =>
+      val dir = freshTable(s"cm-cdf-$dv", Map("deletionVectors" -> dv.toString))
+      // turn on the change feed, do DML, rename, more DML
+      Seq((5000L, 50000.0, "x")).toDF("k", "v", "s").write.format("qbeast")
+        .option("enableChangeDataFeed", "true").mode("append").save(dir)
+      val t = QbeastTable.forPath(spark, dir)
+      val vStart = t.snapshot.version
+      t.delete("v < 10.0") // persisted change file (pre-rename logical names)
+      t.renameColumn("v", "value")
+      t.delete("value >= 990.0 and value < 1000.0") // post-rename change file
+      assert(t.snapshot.dvs.nonEmpty == dv, s"deletionVectors=$dv")
+      val ch = t.changes(vStart)
+      // all frames expose the END schema's logical names
+      assert(ch.schema.fieldNames.contains("value") && !ch.schema.fieldNames.contains("v"))
+      val dels = ch.filter(col("_change_type") === "delete")
+      assert(dels.count() == 20L, s"deletionVectors=$dv")
+      assert(dels.filter(col("value") < 10.0).count() == 10L, s"deletionVectors=$dv")
+      assert(dels.filter(col("value") >= 990.0).count() == 10L, s"deletionVectors=$dv")
+    }
   }
 
   test("streaming: a rename commit stops the stream with a restart message; restart drains") {

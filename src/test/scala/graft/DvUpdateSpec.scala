@@ -198,7 +198,7 @@ class DvUpdateSpec extends AnyFunSuite {
     assert(back.filter(col("id") === 7L).select("_i").head().getLong(0) === 22L)
   }
 
-  test("a table using the reserved identity names falls back to copy-on-write") {
+  test("a table using the reserved identity names still masks, its column intact") {
     import spark.implicits._
     val dir = TestSpark.tmpDir("dvu-reserved")
     (1 to 200).map(i => (i.toLong, i * 2.0)).toDF("id", "__qbeast_dv_file")
@@ -206,11 +206,41 @@ class DvUpdateSpec extends AnyFunSuite {
       .option("cubeSize", "100").option("deletionVectors", "true").save(dir)
     val t = QbeastTable.forPath(spark, dir)
     assert(t.delete("id <= 10 OR id % 100 = 55") === 12L)
-    assert(t.snapshot.dvs.isEmpty,
-      "reserved-name schema must take the always-correct copy-on-write path")
+    assert(t.snapshot.dvs.nonEmpty,
+      "the identity columns take fresh names, so the delete still masks")
     val back = spark.read.format("qbeast").load(dir)
     assert(back.count() === 188L)
-    assert(back.filter(col("__qbeast_dv_file").isNull).count() === 0L)
+    assert(back.filter(col("__qbeast_dv_file").isNull ||
+      col("__qbeast_dv_file") =!= col("id") * 2.0).count() === 0L)
+  }
+
+  test("mergeOn masks on a dv table and ends like the same merge under copy-on-write") {
+    val dvDir = TestSpark.tmpDir("dvu-merge")
+    val cowDir = TestSpark.tmpDir("dvu-merge-cow")
+    writeTable(dvDir, rows = 3000)
+    writeTable(cowDir, rows = 3000, extra = Map("deletionVectors" -> "false"))
+    // ids 10, 20 matched (updated), 99999 inserted, and every unmatched
+    // k = 3 row deleted by the NOT MATCHED BY SOURCE clause
+    val src = Seq((10L, 10 % 97, -1.0), (20L, 20 % 97, -2.0),
+      (99999L, 0, -3.0)).toDF("id", "k", "v")
+    def run(dir: String): (Long, Long) = QbeastTable.forPath(spark, dir).mergeOn(
+      src, Seq("id" -> "id"),
+      matched = Seq(graft.table.MergeClause(None, Some(Map("v" -> col("__src_v"))))),
+      notMatched = Seq(graft.table.MergeClause(None,
+        Some(Seq("id", "k", "v").map(c => c -> col(c)).toMap))),
+      notMatchedBySource = Seq(graft.table.MergeClause(Some(col("k") === 3), None)))
+    val filesBefore = QbeastTable.forPath(spark, dvDir).snapshot.files.map(_.path).toSet
+    val k3 = (1 to 3000).count(_ % 97 == 3).toLong
+    assert(run(dvDir) === ((2L + k3, 3L)))
+    assert(run(cowDir) === ((2L + k3, 3L)))
+    val s = QbeastTable.forPath(spark, dvDir).snapshot
+    assert(filesBefore.subsetOf(s.files.map(_.path).toSet),
+      "merge-on-read merge must keep every pre-merge file")
+    assert(s.dvs.nonEmpty && s.dvMaskedRows === 2L + k3)
+    assert(QbeastTable.forPath(spark, cowDir).snapshot.dvs.isEmpty)
+    assert(back(dvDir).count() === 3001L - k3)
+    assert(back(dvDir).exceptAll(back(cowDir)).isEmpty &&
+      back(cowDir).exceptAll(back(dvDir)).isEmpty)
   }
 
   test("SQL REORG APPLY (PURGE) materializes vectors, rewrites only masked files") {

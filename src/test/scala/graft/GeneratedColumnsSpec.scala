@@ -286,6 +286,37 @@ class GeneratedColumnsSpec extends AnyFunSuite {
     assert(back.filter(col("g") =!= col("k") % 10).count() == 0)
   }
 
+  test("upsert feed with a generated column replays to the table after it (CoW and DV)") {
+    Seq(false, true).foreach { dv =>
+      val dir = TestSpark.tmpDir(s"gen-upsert-cdf-$dv")
+      base().repartition(4).write.format("qbeast")
+        .option("columnsToIndex", "k").option("cubeSize", "100")
+        .option("generatedColumns", "g:CAST(k % 10 AS INT)")
+        .option("enableChangeDataFeed", "true")
+        .option("deletionVectors", dv.toString)
+        .save(dir)
+      val t = QbeastTable.forPath(spark, dir)
+      val v0 = t.snapshot.version
+      // 3 and 7 replaced, 20001 and 20002 inserted, each with its g
+      val src = Seq((3L, -3.0, 3), (7L, -7.0, 7), (20001L, 1.0, 1), (20002L, 2.0, 2))
+        .toDF("k", "v", "g")
+      assert(t.upsert(src, Seq("k")) == ((2L, 4L)))
+      assert(t.snapshot.dvs.nonEmpty == dv, s"deletionVectors=$dv")
+      val feed = t.changes(v0 + 1)
+      def images(kind: String) =
+        feed.filter(col("_change_type") === kind).select("k", "v", "g")
+      val before = spark.read.format("qbeast").option("versionAsOf", v0).load(dir)
+      val after = spark.read.format("qbeast").load(dir)
+      val replayed = before.exceptAll(images("delete")).unionByName(images("insert"))
+      assert(images("delete").count() == 2L, s"deletionVectors=$dv")
+      assert(replayed.exceptAll(after).isEmpty && after.exceptAll(replayed).isEmpty,
+        s"deletionVectors=$dv: the feed does not turn the table before into the table after")
+      assert(images("insert").select("k", "g").as[(Long, Int)].collect().toSet ==
+        Set((3L, 3), (7L, 7), (20001L, 1), (20002L, 2)), s"deletionVectors=$dv")
+      assert(after.filter(col("g") =!= col("k") % 10).count() == 0)
+    }
+  }
+
   test("time travel and CDF see the stored computed values") {
     val dir = freshGen("gen-history")
     val t = QbeastTable.forPath(spark, dir)

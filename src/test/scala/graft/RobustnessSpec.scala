@@ -261,7 +261,8 @@ class RobustnessSpec extends AnyFunSuite {
     checkClean(dirD)
 
     // the same two races for UPDATE, mergeOn and upsert under
-    // copy-on-write: each sets b = -1 on the ten seed rows a % 100 = 7
+    // copy-on-write and under deletion vectors: each sets b = -1 on the
+    // ten seed rows a % 100 = 7
     def seedCow(dir: String): Unit =
       (0L until 1000L).map(i => (i, i * 2.0)).toDF("a", "b")
         .write.format("qbeast").option("columnsToIndex", "a,b")
@@ -281,21 +282,26 @@ class RobustnessSpec extends AnyFunSuite {
     }
     def updated(dir: String): Seq[Long] =
       content(dir).filter(col("b") === -1.0).select("a").collect().map(_.getLong(0)).sorted.toSeq
-    verbs.foreach { case (verb, run) =>
+    for ((mode, seed) <- Seq("cow" -> seedCow _, "dv" -> seedDv _); (verb0, run) <- verbs) {
+      val verb = s"$verb0-$mode"
       // an APPEND lands mid-commit: the verb rebases, the appended rows
       // survive untouched
       val dirE = TestSpark.tmpDir(s"race3-$verb-app")
-      seedCow(dirE)
+      seed(dirE)
       MidDmlAppendHook.tableDir.set(dirE)
       underDmlHook(classOf[MidDmlAppendHook], dirE, run)
       assert(content(dirE).count() == 1100L, verb)
       assert(updated(dirE) == keys, verb)
+      // the dv seed must really take the masking strategy
+      val masks = graft.log.QbeastLog
+        .snapshot(dirE, spark.sparkContext.hadoopConfiguration).dvMaskedRows
+      assert(masks == (if (mode == "dv") keys.size.toLong else 0L), s"$verb: $masks masked")
       checkClean(dirE)
 
       // an OPTIMIZE rewrites the verb's targets mid-commit: refused,
       // content unchanged
       val dirF = TestSpark.tmpDir(s"race3-$verb-opt")
-      seedCow(dirF)
+      seed(dirF)
       MidDmlOptimizeHook.tableDir.set(dirF)
       val err = intercept[java.util.ConcurrentModificationException] {
         underDmlHook(classOf[MidDmlOptimizeHook], dirF, run)
