@@ -18,8 +18,12 @@ sealed trait Transformer extends Serializable {
   def columnName: String
   def kind: String
 
+  /** The per-row value whose min and max are this transformer's stats
+   * (None: it needs none). */
+  def statsInput: Option[Column] = None
+
   /** Aggregate columns evaluated in the single stats pass. */
-  def statsColumns: Seq[Column] = Nil
+  final def statsColumns: Seq[Column] = statsInput.toSeq.flatMap(v => Seq(min(v), max(v)))
 
   /** Build the transformation from the stats row; `offset` points at this
    * transformer's first stat. */
@@ -90,7 +94,7 @@ final case class LinearTransformer(columnName: String, dataTypeName: String)
 
   override def kind: String = "linear"
 
-  override def statsColumns: Seq[Column] = {
+  override def statsInput: Option[Column] = {
     val c = Transformer.canonicalColumn(columnName, dataTypeName)
     // NaN must not define the revision range: Spark's max() returns NaN
     // as the largest value, and a NaN range bound poisons EVERY
@@ -98,8 +102,7 @@ final case class LinearTransformer(columnName: String, dataTypeName: String)
     // which min/max skip; NaN rows then clamp to the TOP border on both
     // the write side (greatest/least) and the read side
     // (LinearTransformation.transform), consistent with Spark ordering.
-    val nn = nanvl(c, lit(null).cast(DoubleType))
-    Seq(min(nn), max(nn))
+    Some(nanvl(c, lit(null).cast(DoubleType)))
   }
 
   override def makeTransformation(stats: Row, offset: Int): Transformation = {

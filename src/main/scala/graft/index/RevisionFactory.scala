@@ -3,7 +3,7 @@ package graft.index
 import graft.core.model._
 import graft.core.transform._
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.{count, lit}
 import org.json4s._
 
@@ -72,7 +72,37 @@ object RevisionFactory {
 
     // one job: every transformer's aggregates + the row count
     val statsCols = transformers.flatMap(_.statsColumns) :+ count(lit(1))
-    val statsRow = data.select(statsCols: _*).first()
+    decide(existing, options, tableID, cubeSize, transformers, statKey,
+      data.select(statsCols: _*).first())
+  }
+
+  /** [[computeRevisionChanges]] for rows written into `existing`'s index
+   * space without write options (the DML case), from a stats row the
+   * caller gathered: every transformer's `statsColumns`, then the row
+   * count. */
+  def forExisting(
+      existing: Revision,
+      tableID: String,
+      mappingSchema: Option[org.apache.spark.sql.types.StructType],
+      statsRow: Row): (Revision, Boolean, Long) = {
+    val mschema = mappingSchema.filter(ColumnMapping.isEnabled)
+    decide(Some(existing), QbeastOptions(Map.empty[String, String],
+      defaultCubeSize = existing.desiredCubeSize), tableID, existing.desiredCubeSize,
+      existing.columnTransformers,
+      t => mschema.map(ColumnMapping.logicalOf(_, t.columnName)).getOrElse(t.columnName),
+      statsRow)
+  }
+
+  /** The revision rows with the stats in `statsRow` land in: `existing`
+   * reused, its space widened under the next ID, or a fresh space. */
+  private def decide(
+      existing: Option[Revision],
+      options: QbeastOptions,
+      tableID: String,
+      cubeSize: Int,
+      transformers: Vector[Transformer],
+      statKey: Transformer => String,
+      statsRow: Row): (Revision, Boolean, Long) = {
     val numElements = statsRow.getLong(statsRow.length - 1)
 
     var offset = 0

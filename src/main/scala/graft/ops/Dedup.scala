@@ -574,10 +574,13 @@ object Dedup {
       // (distance ≤ maxDist) the value is the exact distance, so the
       // output is identical to the unbounded DP + filter, and the
       // dominant per-pair cost in a dup-heavy corpus (every candidate
-      // pair pays the DP) drops by ~prefixLen/maxDist
+      // pair pays the DP) drops by ~prefixLen/maxDist. The bound needs
+      // no second test: every non-negative result is within it, and the
+      // filter pushes down into the join, where each conjunct evaluates
+      // the DP again
       .select(col("id_a"), col("id_b"), est.as("est_jaccard"),
         levenshtein(col("pa"), col("pb"), maxDist).cast("long").as("edit_dist"))
-      .filter(col("edit_dist") >= 0 && col("edit_dist") <= maxDist)
+      .filter(col("edit_dist") >= 0)
   }
 
   // ---- cross-corpus (incremental) dedup ------------------------------------

@@ -54,7 +54,8 @@ private[graft] object Assignments {
     }
   }
 
-  private def quoted(name: String): String = s"`${name.replace("`", "``")}`"
+  /** `name` as a column reference, whatever characters it holds. */
+  def quoted(name: String): String = s"`${name.replace("`", "``")}`"
 
   /** Replace the field at `path` below `base` (of type `dt`) with
    * `value`, rebuilding each struct level via `withField` — no reliance

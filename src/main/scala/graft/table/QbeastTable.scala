@@ -16,7 +16,8 @@ import scala.collection.mutable
  * + `IndexedTable.optimize` + `ConvertToQbeastCommand`): revision
  * introspection, index metrics, optimize (indexed + staging), convert.
  */
-class QbeastTable private (spark: SparkSession, tablePath: String) {
+class QbeastTable private (spark: SparkSession, tablePath: String)
+    extends org.apache.spark.internal.Logging {
 
   private def conf = spark.sparkContext.hadoopConfiguration
 
@@ -50,7 +51,8 @@ class QbeastTable private (spark: SparkSession, tablePath: String) {
    * null, exactly like the table scan. */
   private def readTableFiles(
       s: QbeastSnapshot,
-      files: Seq[IndexFile]): org.apache.spark.sql.DataFrame = {
+      files: Seq[IndexFile],
+      masks: Option[Map[String, String]] = None): org.apache.spark.sql.DataFrame = {
     val paths = files.map(f => new Path(tablePath, f.path).toString)
     val raw = s.schema match {
       // mapping-aware: resolve by PHYSICAL footer names, expose logical
@@ -59,8 +61,12 @@ class QbeastTable private (spark: SparkSession, tablePath: String) {
     }
     // deletion-vector mask: a rewrite (optimize/compact/DML survivors)
     // reading a masked file must NOT resurrect its deleted rows — the
-    // rewrite materializes the deletes and the new file starts unmasked
-    graft.write.DeletionVectors.mask(s, conf, raw)
+    // rewrite materializes the deletes and the new file starts unmasked.
+    // `masks` (file name → vector) replaces the snapshot's vectors.
+    masks match {
+      case Some(m) => graft.write.DeletionVectors.maskWith(tablePath, m, conf, raw)
+      case None => graft.write.DeletionVectors.mask(s, conf, raw)
+    }
   }
 
   private def statusOf(s: QbeastSnapshot, rid: Long): IndexStatus =
@@ -871,16 +877,6 @@ class QbeastTable private (spark: SparkSession, tablePath: String) {
     df.withColumn(fileCol, col("_metadata.file_path"))
       .withColumn(idxCol, col("_metadata.row_index"))
 
-  /** The files of `domain` holding at least one of `rows`. */
-  private def filesOf(
-      rows: org.apache.spark.sql.DataFrame,
-      fileCol: String,
-      domain: Vector[IndexFile]): Vector[IndexFile] = {
-    val names = rows.select(col(fileCol)).distinct()
-      .collect().map(r => new Path(r.getString(0)).getName).toSet
-    domain.filter(f => names.contains(new Path(f.path).getName))
-  }
-
   /** DELETE and UPDATE: the rows matching `cond` are the changed rows. */
   private def mutate(cond: Column, assignments: Option[Map[String, Column]]): Long = {
     val s = snapshot
@@ -893,12 +889,12 @@ class QbeastTable private (spark: SparkSession, tablePath: String) {
     val matched = coalesce(cond, lit(false))
     val table = pinnedRead(s)
 
-    // the condition is re-evaluated in independent jobs (discovery,
-    // survivor rewrite, changed rows) — a nondeterministic predicate
-    // would delete different rows than it keeps (rows lost AND
-    // duplicated). Delta rejects these up front; so do we. Determinism
-    // is only knowable AFTER resolution (an unresolved rand() call
-    // reports deterministic), so inspect the analyzed plans.
+    // the changed rows are read once, but a nondeterministic predicate
+    // or assignment has no single answer for the change feed, the
+    // written images and a later re-run to agree on. Delta rejects
+    // these up front; so do we. Determinism is only knowable AFTER
+    // resolution (an unresolved rand() call reports deterministic), so
+    // inspect the analyzed plans.
     val analyzedFilter = table.filter(matched).queryExecution.analyzed
     val nondetCond = analyzedFilter.expressions.exists(!_.deterministic)
     require(!nondetCond,
@@ -930,30 +926,31 @@ class QbeastTable private (spark: SparkSession, tablePath: String) {
     val (drops, domain) = narrowed.getOrElse((Vector.empty[IndexFile], s.files))
     val Seq(fileCol, idxCol) = freshNames(table.columns.toSeq, DvFileCol, DvIdxCol)
     // An UPDATE derives its new images from the old rows and a CDF feed
-    // reads them in full, so those cache them on first use (the
-    // discovery job). A plain DELETE keeps the narrow discovery scan
-    // over the predicate columns: caching full rows nothing reads twice
-    // costs more than it saves.
+    // reads them in full, so those materialize them in the discovery
+    // job. A plain DELETE keeps the narrow discovery scan over the
+    // predicate columns: caching full rows nothing reads twice costs
+    // more than it saves. Nothing is planned when the proofs dropped
+    // every file.
+    val release = mutable.Buffer.empty[() => Unit]
     lazy val old = {
       val rows = withIdentity(
         if (narrowed.isEmpty) table.filter(matched) else readTableFiles(s, domain).filter(matched),
         fileCol, idxCol)
-      if (assignments.isDefined || cdfOn(s)) rows.persist() else rows
+      if (assignments.isDefined || cdfOn(s)) materialized(rows, release) else rows
     }
     try {
-      val touched = if (domain.isEmpty) Vector.empty[IndexFile] else filesOf(old, fileCol, domain)
-      if (drops.isEmpty && touched.isEmpty) return 0L
       // simultaneous assignments (top-level and struct fields); generated
       // columns recompute AFTER them, so a change to a referenced column
       // never leaves a stale value
       val written = assignments.map(asgn => graft.write.GeneratedColumns.recompute(
         old.drop(fileCol, idxCol).select(Assignments(table.schema, asgn): _*),
         s.configuration, s.schema))
+      val change = if (domain.isEmpty) None
+        else Some(Change(old, fileCol, idxCol, writesImages = assignments.isDefined))
       val (removed, n) = applyChange(s, if (assignments.isDefined) "UPDATE" else "DELETE",
-        drops, touched, old, fileCol, idxCol,
-        files => readTableFiles(s, files).filter(not(matched)), written, "UPDATE-assigned")
+        drops, change, written, "UPDATE-assigned")
       if (assignments.isDefined) n else removed
-    } finally if (domain.nonEmpty) old.unpersist()
+    } finally release.foreach(_())
   }
 
   /**
@@ -968,9 +965,7 @@ class QbeastTable private (spark: SparkSession, tablePath: String) {
     require(keys.nonEmpty, "deleteMatched needs at least one key column")
     val s = snapshot
     if (s.isEmpty || s.files.isEmpty) return 0L
-    val srcKeys = source.select(keys.map(col): _*).distinct().persist()
-    try keyedChange(s, srcKeys, keys, "DELETE", None)._1
-    finally { srcKeys.unpersist(); () }
+    keyedChange(s, source.select(keys.map(col): _*), keys, "DELETE", None)._1
   }
 
   /** Table CHECK constraints in the ordered shape QbeastWriter.index
@@ -1029,10 +1024,10 @@ class QbeastTable private (spark: SparkSession, tablePath: String) {
     // non-null value the cast can't represent FAILS the upsert instead
     // of silently becoming NULL.
     // materialized once (Delta materializes merge sources the same
-    // way): the source plan otherwise re-executes for the constraint
-    // validation, the key-distinct job, the revision min/max job, the
-    // domain pass and the physical write — five runs of an arbitrary
-    // upstream plan per upsert (per micro-batch on the CDC-apply path)
+    // way), by the first job that reads it: the source plan otherwise
+    // re-executes for the discovery join, the stats pass, the write and
+    // the feed — four runs of an arbitrary upstream plan per upsert (per
+    // micro-batch on the CDC-apply path)
     val source = s.schema.map { existing =>
       val have = source0.schema.fieldNames.map(_.toLowerCase).toSet
       val want = existing.fieldNames.map(_.toLowerCase).toSet
@@ -1044,34 +1039,50 @@ class QbeastTable private (spark: SparkSession, tablePath: String) {
         if (srcTypes(f.name.toLowerCase) == f.dataType) col(f.name).as(f.name)
         else storeAssignCast(col(f.name), f.name, f.dataType)
       }.toSeq: _*)
-    }.getOrElse(source0).localCheckpoint(true)
-    val srcKeys = source.select(keys.map(col): _*).distinct().persist()
-    try {
-      requireUniqueMatches(s, source, keys, "MERGE/upsert")
-      // generated columns: upsert source rows REPLACE target rows (insert
-      // semantics), so supplied values are enforced, not recomputed
-      keyedChange(s, srcKeys, keys, "MERGE", Some(source))
-    } finally { srcKeys.unpersist(); QbeastTable.releaseLocalCheckpoint(source); () }
+    }.getOrElse(source0).localCheckpoint(false)
+    // generated columns: upsert source rows REPLACE target rows (insert
+    // semantics), so supplied values are enforced, not recomputed
+    try keyedChange(s, source.select(keys.map(col): _*), keys, "MERGE", Some(source),
+      unique = Some("MERGE/upsert"))
+    finally QbeastTable.releaseLocalCheckpoint(source)
   }
 
   /** The keyed verbs ([[upsert]], [[deleteMatched]]): the changed rows
-   * are the target rows whose `keys` appear in `srcKeys` (a semi-join
-   * never fans out), the unchanged rows the anti-join. */
+   * are the target rows whose `keys` appear in `srcKeys`. A row-replacing
+   * verb (`unique` set) joins them, so a target row two source rows
+   * match shows up twice; a deleting one semi-joins them, which never
+   * fans out. */
   private def keyedChange(
       s: QbeastSnapshot,
       srcKeys: org.apache.spark.sql.DataFrame,
       keys: Seq[String],
       operation: String,
-      written: Option[org.apache.spark.sql.DataFrame]): (Long, Long) = {
+      written: Option[org.apache.spark.sql.DataFrame],
+      unique: Option[String] = None): (Long, Long) = {
     val table = pinnedRead(s)
     val Seq(fileCol, idxCol) = freshNames(table.columns.toSeq, DvFileCol, DvIdxCol)
-    val old = withIdentity(table, fileCol, idxCol).join(srcKeys, keys, "left_semi")
+    val keyed = withIdentity(table, fileCol, idxCol)
+      .join(srcKeys, keys, if (unique.isDefined) "inner" else "left_semi")
+      .select((table.columns.toSeq :+ fileCol :+ idxCol).map(c => col(Assignments.quoted(c))): _*)
     // a CDF feed reads the old rows in full after the discovery job
-    if (cdfOn(s)) old.persist()
-    try applyChange(s, operation, Vector.empty, filesOf(old, fileCol, s.files), old,
-      fileCol, idxCol, files => readTableFiles(s, files).join(srcKeys, keys, "left_anti"),
-      written, "upsert source")
-    finally { old.unpersist(); () }
+    val release = mutable.Buffer.empty[() => Unit]
+    val old = if (cdfOn(s)) materialized(keyed, release) else keyed
+    try applyChange(s, operation, Vector.empty, Some(Change(old, fileCol, idxCol,
+      unique = unique)), written, "upsert source")
+    finally release.foreach(_())
+  }
+
+  /** `df`'s rows computed once, by the first job that reads them, and
+   * kept at the RDD level for every later plan; `release` collects the
+   * unpersist. (A Dataset persist plans its cached query under adaptive
+   * execution, where each exchange inside it costs a job of its own.) */
+  private def materialized(
+      df: org.apache.spark.sql.DataFrame,
+      release: mutable.Buffer[() => Unit]): org.apache.spark.sql.DataFrame = {
+    val rows = org.apache.spark.sql.GraftShims.executeOnce(df).map(_.copy())
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    release += (() => { rows.unpersist(false); () })
+    org.apache.spark.sql.GraftShims.frameOf(spark, rows, df.schema)
   }
 
   /**
@@ -1084,9 +1095,8 @@ class QbeastTable private (spark: SparkSession, tablePath: String) {
    * The target is joined once against the prefixed source (every target
    * row when NOT MATCHED BY SOURCE clauses are present, since those
    * inspect every target row); the rows a clause changes are the old
-   * rows, their files the touched files, and the clause images plus the
-   * inserts the written rows, all handed to [[applyChange]] — one atomic
-   * commit.
+   * rows, and the clause images plus the inserts the written rows, all
+   * handed to [[applyChange]] — one atomic commit.
    *
    * Matched/not-matched-by-source clause conditions and assignments are
    * evaluated over the joined row (source columns under `srcPrefix`);
@@ -1123,29 +1133,26 @@ class QbeastTable private (spark: SparkSession, tablePath: String) {
     val s = snapshot
     require(!s.isEmpty && s.files.nonEmpty,
       s"merge into an empty table at $tablePath: use a plain qbeast write")
-    // materialized once (Delta materializes merge sources the same way;
-    // upsert above too): the source plan otherwise re-executes for the
-    // uniqueness probe, the join and the insert-path anti-join
-    val source = source0.localCheckpoint(true)
+    // materialized once by the first job that reads it (Delta
+    // materializes merge sources the same way; upsert above too): the
+    // source plan otherwise re-executes for the join and the insert-path
+    // anti-join
+    val source = source0.localCheckpoint(false)
     val tableSchema = s.schema.getOrElse(
       spark.read.format("qbeast").load(tablePath).schema)
     val targetCols = tableSchema.fieldNames.toSeq
 
-    // source keys renamed to the target-side names
-    val srcKeys = source
-      .select(keyPairs.map { case (t, sn) => col(sn).as(t) }: _*)
-      .distinct().persist()
-    // frames persisted during the passes; released in the finally so no
-    // exception path leaks block-manager entries
-    val cachedJoins = mutable.Buffer.empty[org.apache.spark.sql.DataFrame]
+    // frames materialized during the passes; released in the finally so
+    // no exception path leaks block-manager entries
+    val release = mutable.Buffer.empty[() => Unit]
     try {
-      if (matched.nonEmpty)
-        requireUniqueMatches(s, source.select(keyPairs.map { case (t, sn) => col(sn).as(t) }: _*),
-          keys, "MERGE with WHEN MATCHED clauses")
       // without matched clauses no source payload is ever referenced —
-      // join only the DISTINCT keys (already target-named); the full
-      // source keeps its own key names, so the join condition maps per pair
-      val srcJoinSide = if (matched.nonEmpty) source else srcKeys
+      // join only the DISTINCT keys (renamed to the target-side names);
+      // the full source keeps its own key names, so the join condition
+      // maps per pair
+      val srcJoinSide =
+        if (matched.nonEmpty) source
+        else source.select(keyPairs.map { case (t, sn) => col(sn).as(t) }: _*).distinct()
       val joinKeyNames = if (matched.nonEmpty) sourceKeys else keys
       val srcRenamed0 = srcJoinSide.columns.foldLeft(srcJoinSide) { (d, c) =>
         d.withColumnRenamed(c, srcPrefix + c)
@@ -1177,20 +1184,15 @@ class QbeastTable private (spark: SparkSession, tablePath: String) {
       }
       val action = if (actionChain == null) lit(-1) else actionChain.otherwise(lit(-1))
 
-      // the target joined once, cached: its key-matched rows (every row
-      // with NOT MATCHED BY SOURCE clauses) feed the touched-file
-      // discovery, the old rows, the clause images and the insert-side
-      // anti-join
-      val joined = withIdentity(pinnedRead(s), fileCol, idxCol)
+      // the target joined once, cached by the discovery job: its
+      // key-matched rows (every row with NOT MATCHED BY SOURCE clauses)
+      // feed the discovery, the old rows, the clause images and the
+      // insert-side anti-join
+      val joined = materialized(withIdentity(pinnedRead(s), fileCol, idxCol)
         .join(srcRenamed, joinCond, if (notMatchedBySource.isEmpty) "inner" else "left")
-        .withColumn(actionCol, action)
-        .persist()
-      cachedJoins += joined
-      val old = joined.filter(col(actionCol) =!= -1)
-        .select((targetCols :+ fileCol :+ idxCol).map(col): _*)
-      val touched =
-        if (matched.isEmpty && notMatchedBySource.isEmpty) Vector.empty[IndexFile]
-        else filesOf(old, fileCol, s.files)
+        .withColumn(actionCol, action), release)
+      val changed = col(actionCol) =!= -1
+      val old = joined.filter(changed).select((targetCols :+ fileCol :+ idxCol).map(col): _*)
 
       // UPDATE-shaped clauses RECOMPUTE generated columns after the
       // assignments apply (SQL's SET * expands to every column before
@@ -1215,7 +1217,7 @@ class QbeastTable private (spark: SparkSession, tablePath: String) {
         if (notMatched.isEmpty) Nil
         else {
           val tKeys = joined
-            .select(keyPairs.map { case (t, sn) => col(t).as(sn) }: _*).distinct()
+            .select(keyPairs.map { case (t, sn) => col(t).as(sn) }: _*)
           val unmatchedSrc = source.join(tKeys, sourceKeys, "left_anti")
           var ic: Column = null
           notMatched.zipWithIndex.foreach { case (cl, i) =>
@@ -1223,8 +1225,6 @@ class QbeastTable private (spark: SparkSession, tablePath: String) {
             ic = if (ic == null) when(cond, lit(i)) else ic.when(cond, lit(i))
           }
           val withAction = unmatchedSrc.withColumn(actionCol, ic.otherwise(lit(-1)))
-            .persist()
-          cachedJoins += withAction
           notMatched.zipWithIndex.map { case (cl, i) =>
             val asgn = cl.assignments.getOrElse(throw new UnsupportedOperationException(
               "MERGE WHEN NOT MATCHED clause must be an INSERT"))
@@ -1238,70 +1238,70 @@ class QbeastTable private (spark: SparkSession, tablePath: String) {
             withAction.filter(col(actionCol) === i).select(cols: _*)
           }
         }
+      // the written rows are computed once, by the stats pass, and read
+      // back by the write and the feed
+      val written = (updates ++ inserts).reduceOption(_ unionByName _)
+        .map(materialized(_, release))
 
-      // a touched file's unchanged rows: its rows minus the old rows,
-      // matched on (file name, row index)
-      val oldIds = old.select(substring_index(col(fileCol), "/", -1).as(fileCol), col(idxCol))
-      def unchanged(files: Vector[IndexFile]): org.apache.spark.sql.DataFrame =
-        withIdentity(readTableFiles(s, files), fileCol, idxCol)
-          .withColumn(fileCol, substring_index(col(fileCol), "/", -1))
-          .join(oldIds, Seq(fileCol, idxCol), "left_anti")
-          .select(targetCols.map(col): _*)
-
-      applyChange(s, "MERGE", Vector.empty, touched, old, fileCol, idxCol, unchanged,
-        (updates ++ inserts).reduceOption(_ unionByName _), "MERGE-written")
+      // discovery reads every key-matched row, changed or not: a target
+      // row two source rows match breaks the multiple-matches rule even
+      // when no clause applies to it
+      val change = if (matched.isEmpty && notMatchedBySource.isEmpty) None
+        else Some(Change(old, fileCol, idxCol,
+          probe = Some(joined.filter(changed || matchedFlag)
+            .select(col(fileCol), col(idxCol), changed)),
+          unique = Some("MERGE with WHEN MATCHED clauses").filter(_ => matched.nonEmpty)))
+      applyChange(s, "MERGE", Vector.empty, change, written, "MERGE-written")
     } finally {
-      srcKeys.unpersist()
-      cachedJoins.foreach(_.unpersist())
+      release.foreach(_())
       QbeastTable.releaseLocalCheckpoint(source)
     }
   }
 
-  /** Delta's multiple-matches rule for the row-replacing keyed verbs:
-   * duplicate non-null source keys that actually MATCH a target row
-   * error out (duplicates matching nothing fall through to the insert
-   * side). `source` carries the keys under their target names. Checked
-   * before anything is written; the source-only duplicate probe runs
-   * first, so a unique source (the common case) never scans the
-   * target. */
-  private def requireUniqueMatches(
-      s: QbeastSnapshot,
-      source: org.apache.spark.sql.DataFrame,
-      keys: Seq[String],
-      verb: String): Unit = {
-    val nonNullKeys = keys.map(k => col(k).isNotNull).reduce(_ && _)
-    val dupKeys = source.filter(nonNullKeys)
-      .groupBy(keys.map(col): _*).agg(count(lit(1)).as("__n"))
-      .filter(col("__n") > 1).select(keys.map(col): _*)
-    if (dupKeys.limit(1).count() > 0) {
-      val targetKeys = pinnedRead(s).select(keys.map(col): _*)
-      val dup = dupKeys.join(targetKeys, keys, "left_semi").limit(1).count()
-      require(dup == 0L,
-        s"$verb requires the source to be unique on the merge keys " +
-          "(multiple source rows matched one target row)")
-    }
-  }
+  /** The rows a verb changes, against one snapshot: `old` holds the
+   * table's columns plus each row's file path (`fileCol`) and row index
+   * (`idxCol`). Discovery reads `probe` — (file path, row index, changed)
+   * — when set, else every row of `old` as changed. `unique` names the
+   * verb when a target row matched by two source rows is an error (the
+   * multiple-matches rule). `writesImages`: the written rows are images
+   * of the changed rows alone (UPDATE), so a change that touches no row
+   * writes nothing. */
+  private final case class Change(
+      old: org.apache.spark.sql.DataFrame,
+      fileCol: String,
+      idxCol: String,
+      probe: Option[org.apache.spark.sql.DataFrame] = None,
+      unique: Option[String] = None,
+      writesImages: Boolean = false)
 
   /**
    * The one row-level change kernel every DML verb lowers to. A verb
-   * hands it, against snapshot `s`:
-   *  - `drops`: files stats PROVED fully deleted, dropped unread;
-   *  - `touched`: the files holding at least one changed row;
-   *  - `old`: the old versions of the changed rows, the table's columns
-   *    plus their file path (`fileCol`) and row index (`idxCol`);
-   *  - `unchanged`: the rows of some touched files that stay as they are;
-   *  - `written`: the rows to write, updated images plus inserts.
+   * hands it, against snapshot `s`, the files stats PROVED fully deleted
+   * (`drops`, dropped unread), its changed rows (`change`) and the rows
+   * to write (`written`: updated images plus inserts).
+   *
+   * Every verb runs on a fixed job budget (the per-verb figures are
+   * pinned by `DmlJobBudgetSpec`):
+   *  1. discovery: one job groups the changed rows by file and writes
+   *     each touched file's replacement deletion vector on the executors
+   *     ([[discover]]); it also materializes the rows the verb cached;
+   *  2. one pass over the written rows: row count, indexed min/max,
+   *     constraint verdict and cube domains ([[QbeastWriter.analyze]]);
+   *  3. one write of the unchanged rows of rewritten files and the
+   *     written rows together (two jobs under adaptive execution: the
+   *     write exchange and the writer stage);
+   *  4. one job writing the change feed from the frames in hand.
+   * A key join costs one more job, the broadcast of its build side.
    *
    * The strategy follows from the table and the change, never from the
    * verb. With nothing touched, no file is read: the drops leave the log
    * and any inserts are appended. With `deletionVectors` on and every
-   * touched file within the masked-fraction budget, the old rows are
-   * masked by replacement vectors, written on the executors. Otherwise
-   * copy-on-write: the unchanged rows are rewritten against their
-   * revision's frozen cube weights and the touched files removed. The
-   * written rows go through the revision-aware indexing path, the
-   * change feed through [[persistCdc]], and everything lands in one
-   * [[commitMutation]].
+   * touched file within the masked-fraction budget, the replacement
+   * vectors are committed. Otherwise copy-on-write: the touched files
+   * are read through the replacement vectors, which leaves exactly
+   * their unchanged rows, rewritten against their revision's frozen
+   * cube weights; the touched files are removed and the vectors deleted.
+   * Everything lands in one [[commitMutation]].
    *
    * @return (live rows removed or replaced, rows written)
    */
@@ -1309,127 +1309,187 @@ class QbeastTable private (spark: SparkSession, tablePath: String) {
       s: QbeastSnapshot,
       operation: String,
       drops: Vector[IndexFile],
-      touched: Vector[IndexFile],
-      old: => org.apache.spark.sql.DataFrame,
-      fileCol: String,
-      idxCol: String,
-      unchanged: Vector[IndexFile] => org.apache.spark.sql.DataFrame,
-      written: Option[org.apache.spark.sql.DataFrame],
+      change: Option[Change],
+      written0: Option[org.apache.spark.sql.DataFrame],
       writtenLabel: String): (Long, Long) = {
-    val vectors =
-      if (touched.isEmpty || !graft.write.DeletionVectors.enabled(s.configuration)) Nil
-      else writeDvVectors(s, old, fileCol, idxCol)
-    // past the budget read amplification beats the skipped rewrite: a
-    // mostly-deleted file is cheaper to rewrite than to keep masking
-    val masked = vectors.nonEmpty && !overMaskBudget(vectors, touched)
-    if (!masked) dropDvVectors(vectors)
-    // any failure from here to the commit (constraint violation,
-    // staging-only table, write error, conflict) must reclaim the
-    // replacement vectors — nothing will ever reference them
+    val (vectors, repeated) = change match {
+      case None => (Nil, false)
+      case Some(c) => discover(s,
+        c.probe.getOrElse(c.old.select(col(c.fileCol), col(c.idxCol), lit(true))))
+    }
+    // only a committed mask references its replacement vectors: after
+    // a rewrite, or any failure on the way (a repeated match, constraint
+    // violation, staging-only table, write error, conflict), they are
+    // deleted
+    var masked = false
+    var committed = false
     try {
+      change.flatMap(_.unique).foreach { verb =>
+        require(!repeated, s"$verb requires the source to be unique on the merge " +
+          "keys (multiple source rows matched one target row)")
+      }
+      val byName = s.files.map(f => new Path(f.path).getName -> f).toMap
+      val touched = vectors.map(v => byName(v._1)).toVector
+      val written = written0.filterNot(_ => touched.isEmpty && change.exists(_.writesImages))
+      val maxFraction = spark.conf
+        .getOption("spark.qbeast.dv.maxDeletedFraction").map(_.toDouble)
+        .getOrElse(graft.write.DeletionVectors.MaxMaskedFraction)
+      val worst = vectors.map { case (name, _, _, total) =>
+        val f = byName(name)
+        if (f.elementCount > 0) total.toDouble / f.elementCount else 0.0
+      }.maxOption.getOrElse(0.0)
+      // past the budget read amplification beats the skipped rewrite: a
+      // mostly-deleted file is cheaper to rewrite than to keep masking
+      masked = touched.nonEmpty && graft.write.DeletionVectors.enabled(s.configuration) &&
+        worst <= maxFraction
       def indexSpace: Revision = s.lastRevision.filterNot(_.isStaging).getOrElse(
         throw new UnsupportedOperationException(s"$operation on a staging-only qbeast " +
           "table: append indexed data or optimize() first so written rows have an " +
           "index space to land in"))
-      val kept = if (masked) Nil else touched.groupBy(_.revisionId).toSeq.flatMap {
+      val replacements = vectors.map { case (name, rel, _, _) => name -> rel }.toMap
+      val kept = if (masked) Nil else touched.groupBy(_.revisionId).toSeq.map {
         case (rid, files) =>
           // staging (unindexed) survivors fold into the latest indexed
           // revision — same move optimizeUnindexed makes
           val revision = if (rid == Revision.StagingID) indexSpace else s.revisions(rid)
           val status = s.indexStatus(revision.revisionID)
           val frozen = status.cubeStatuses.map { case (c, st) => c -> st.maxWeight }.toMap
-          QbeastWriter.index(spark, tablePath, unchanged(files), revision, Some(status),
-            files.map(_.elementCount).sum, frozenWeights = Some(frozen))
+          QbeastWriter.IndexPart(readTableFiles(s, files, Some(replacements)), revision,
+            Some(status), files.map(_.elementCount).sum, frozenWeights = Some(frozen),
+            checked = false)
       }
       val checks = constraintsFor(s)
-      val (adds, newRevision, n): (Seq[IndexFile], Option[Revision], Long) = written match {
-        case None => (Nil, None, 0L)
-        case Some(df) =>
-          graft.write.Constraints.validate(df, checks.toMap, writtenLabel)
-          val existing = indexSpace
-          val opts = QbeastOptions(Map.empty[String, String],
-            defaultCubeSize = existing.desiredCubeSize)
-          val (rev, isNew, n) = RevisionFactory.computeRevisionChanges(
-            Some(existing), opts, tablePath, df, mappingSchema = s.schema)
-          val status = if (isNew) None else Some(s.indexStatus(rev.revisionID))
-          // per-row backstop: the validate above ran as a SEPARATE job,
-          // and a source can draw different rows in another execution
-          val adds = QbeastWriter.index(spark, tablePath, df, rev, status, n,
-            constraints = checks)
-          (adds, if (isNew) Some(rev) else None, n)
+      val analysis = written.map { df =>
+        val a = QbeastWriter.analyze(spark, tablePath, df, indexSpace, checks, s.schema)
+        a.violated.foreach { case (name, sql) =>
+          throw new IllegalArgumentException(
+            s"CHECK constraint $name ($sql) violated by $writtenLabel data")
+        }
+        a
       }
-      if (drops.isEmpty && touched.isEmpty && adds.isEmpty) return (0L, 0L)
+      val parts = kept ++ written.zip(analysis).map { case (df, a) =>
+        QbeastWriter.IndexPart(df, a.revision,
+          if (a.isNew) None else Some(s.indexStatus(a.revision.revisionID)),
+          a.numElements, domains = a.domains)
+      }
+      // per-row backstop: the constraint verdict above came from a
+      // SEPARATE job, and a source can draw different rows in another
+      // execution
+      val files = if (parts.isEmpty) Nil
+        else QbeastWriter.indexParts(spark, tablePath, parts, constraints = checks)
+      val n = analysis.map(_.numElements).getOrElse(0L)
+      if (drops.isEmpty && touched.isEmpty && files.isEmpty) return (0L, 0L)
 
-      // the feed is built from the frames already in hand, never from a
-      // re-read of the written files. Copy-on-write rewrote the unchanged
-      // rows verbatim, so the file diff reduces to (written ∖ old,
-      // old ∖ written): an identical old and new row cancel. A mask
-      // deletes every old row whatever replaces it, so the old rows are
-      // the deletes and the written rows the inserts.
       val cdc = if (!cdfOn(s)) None else {
-        def tag(df: org.apache.spark.sql.DataFrame, kind: String) =
-          df.withColumn("_change_type", lit(kind))
-        val before = ((if (touched.isEmpty) Nil else Seq(old.drop(fileCol, idxCol))) ++
+        val before = (change.filter(_ => touched.nonEmpty)
+          .map(c => c.old.drop(c.fileCol, c.idxCol)).toSeq ++
           (if (drops.isEmpty) Nil else Seq(readTableFiles(s, drops))))
           .reduceOption(_ unionByName _)
-        val feed = (before, written) match {
-          case (Some(b), Some(a)) if !masked =>
-            Seq(tag(a.exceptAll(b), "insert"), tag(b.exceptAll(a), "delete"))
-          case _ => before.map(tag(_, "delete")).toSeq ++ written.map(tag(_, "insert"))
-        }
-        Some(persistCdc(s, feed.reduce(_ union _)))
+        Some(persistCdc(s, changeFeed(before, written, diff = !masked,
+          rows = vectors.map(_._3).sum + n)))
       }
-      val byName = touched.map(f => new Path(f.path).getName -> f.path).toMap
       val dvActions = if (!masked) Nil else vectors.map { case (name, rel, _, total) =>
-        DvFileAction(byName(name), rel, total)
+        DvFileAction(byName(name).path, rel, total)
       }
-      val removes = if (masked) drops else drops ++ touched
-      commitMutation(s, kept ++ adds, newRevision, removes, operation, dvActions, cdc)
+      val newRevision = analysis.filter(_.isNew).map(_.revision)
+      commitMutation(s, files, newRevision, if (masked) drops else drops ++ touched,
+        operation, dvActions, cdc)
+      committed = true
       // element counts are PRE-mask: rows a vector had already removed
       // are not removed again
-      def live(fs: Seq[IndexFile]): Long =
-        fs.map(_.elementCount).sum - fs.iterator.flatMap(f => s.dvs.get(f.path)).map(_.cardinality).sum
-      val removed =
-        if (masked) live(drops) + vectors.map(_._3).sum
-        else live(removes) - kept.map(_.elementCount).sum
+      val removed = drops.map(_.elementCount).sum -
+        drops.iterator.flatMap(f => s.dvs.get(f.path)).map(_.cardinality).sum +
+        vectors.map(_._3).sum
+      logInfo(s"$operation on $tablePath: strategy " +
+        (if (touched.isEmpty) "drop-only" else if (masked) "deletion-vectors"
+          else "copy-on-write") +
+        s", files dropped ${drops.size}, touched ${touched.size}, worst masked fraction " +
+        f"$worst%.3f against spark.qbeast.dv.maxDeletedFraction $maxFraction%.3f, " +
+        s"rows removed $removed, written $n, new revision " +
+        newRevision.map(_.revisionID.toString).getOrElse("none"))
       (removed, n)
-    } catch { case e: Throwable => if (masked) dropDvVectors(vectors); throw e }
+    } finally if (!(masked && committed)) dropDvVectors(vectors)
   }
 
-  /** Executor-side per-file deletion-vector build for `rows` (carrying
-   * their file path and row index): one pass — groupBy file → sorted
-   * indexes → union with the file's existing vector → write the
-   * replacement vector. The driver sees only metadata: (fileName,
-   * relVectorPath, newlyMasked, mergedTotal). Replaced vectors are
-   * reclaimed by vacuum like removed data files. */
-  private def writeDvVectors(
+  /** Discovery, the first job of every verb that changes rows: the
+   * (file path, row index, changed) rows of `probe` grouped by file,
+   * each file's changed indexes unioned with its current vector and
+   * written as its replacement vector on the executors. The driver sees
+   * one record per touched file: (file name, replacement vector path,
+   * rows newly masked, rows masked after). Also reports whether a
+   * (file, row index) pair repeats: a target row two source rows
+   * matched. Replaced vectors are reclaimed by vacuum like removed data
+   * files. */
+  private def discover(
       s: QbeastSnapshot,
-      rows: org.apache.spark.sql.DataFrame,
-      fileCol: String,
-      idxCol: String): Seq[(String, String, Long, Long)] = {
+      probe: org.apache.spark.sql.DataFrame): (Seq[(String, String, Long, Long)], Boolean) = {
     import graft.write.DeletionVectors
-    import spark.implicits._
     val sconf = new org.apache.spark.util.SerializableConfiguration(conf)
     val tp = tablePath
     val existingDvByName: Map[String, String] =
       s.dvs.map { case (p, i) => new Path(p).getName -> i.dvPath }
-    rows
-      .select(col(fileCol), col(idxCol))
-      .groupBy(fileCol).agg(sort_array(collect_list(col(idxCol))).as("_idx"))
-      .as[(String, Array[Long])]
-      .mapPartitions { it =>
-        it.map { case (fullPath, newIdx) =>
-          val name = fullPath.substring(fullPath.lastIndexOf('/') + 1)
-          val merged = existingDvByName.get(name) match {
-            case Some(old) =>
-              DeletionVectors.union(
-                DeletionVectors.read(tp, sconf.value, old), newIdx)
-            case None => newIdx
-          }
-          val rel = DeletionVectors.write(tp, sconf.value, merged)
-          (name, rel, newIdx.length.toLong, merged.length.toLong)
+    val rows = org.apache.spark.sql.GraftShims.executeOnce(probe)
+    val byFile = rows.map { r =>
+      val path = r.getUTF8String(0).toString
+      (path.substring(path.lastIndexOf('/') + 1), (r.getLong(1), r.getBoolean(2)))
+    }.groupByKey(math.max(1,
+      math.min(rows.getNumPartitions, spark.conf.get("spark.sql.shuffle.partitions").toInt)))
+    val found = byFile.map { case (name, ixs) =>
+      val all = ixs.iterator.map(_._1).toArray
+      java.util.Arrays.sort(all)
+      val repeated = (1 until all.length).exists(i => all(i) == all(i - 1))
+      val newIdx = ixs.iterator.collect { case (i, true) => i }.toArray.distinct
+      java.util.Arrays.sort(newIdx)
+      if (newIdx.isEmpty) (name, null, 0L, 0L, repeated)
+      else {
+        val merged = existingDvByName.get(name) match {
+          case Some(old) =>
+            DeletionVectors.union(DeletionVectors.read(tp, sconf.value, old), newIdx)
+          case None => newIdx
         }
-      }.collect().toSeq
+        val rel = DeletionVectors.write(tp, sconf.value, merged)
+        (name, rel, newIdx.length.toLong, merged.length.toLong, repeated)
+      }
+    }.collect()
+    (found.collect { case (name, rel, n, total, _) if rel != null => (name, rel, n, total) }.toSeq,
+      found.exists(_._5))
+  }
+
+  /** A change's feed, built from the frames in hand, never from a
+   * re-read of the written files: `before` holds the old images of the
+   * changed and dropped rows, `after` the written rows. A mask deletes
+   * every old row whatever replaces it, so the old rows are the deletes
+   * and the written rows the inserts. A rewrite (`diff`) copied the
+   * unchanged rows verbatim, so the file diff reduces to the multiset
+   * differences (after ∖ before, before ∖ after): an identical old and
+   * new row cancel. One signed group-by gives both sides (Spark's own
+   * EXCEPT ALL rewrite); its exchange runs inside the one job that
+   * writes the feed. `rows` is the number of old and written rows. */
+  private def changeFeed(
+      before: Option[org.apache.spark.sql.DataFrame],
+      after: Option[org.apache.spark.sql.DataFrame],
+      diff: Boolean,
+      rows: Long): org.apache.spark.sql.DataFrame = (before, after) match {
+    case (Some(b), Some(a)) if diff =>
+      val cols = a.columns.toSeq.map(c => col(Assignments.quoted(c)))
+      val Seq(sign, net) = freshNames(a.columns.toSeq, "__sign", "__net")
+      val signed = a.withColumn(sign, lit(1L)).unionByName(b.withColumn(sign, lit(-1L)))
+      val feed = signed.groupBy(cols: _*).agg(sum(sign).as(net)).filter(col(net) =!= 0L)
+        .select(cols :+ when(col(net) > 0L, lit("insert")).otherwise(lit("delete"))
+          .as("_change_type") :+ explode(sequence(lit(1L), abs(col(net)))).as(net): _*)
+        .drop(net)
+      val out = org.apache.spark.sql.GraftShims.executeOnce(feed)
+      // about as many files as adaptive execution would coalesce the
+      // group-by's output to
+      val advisory = org.apache.spark.sql.internal.SQLConf.get
+        .getConf(org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+      val bytes = BigInt(rows) * a.schema.defaultSize
+      val files = ((bytes + advisory - 1) / advisory)
+        .min(BigInt(out.getNumPartitions)).max(BigInt(1)).toInt
+      org.apache.spark.sql.GraftShims.frameOf(spark, out.coalesce(files), feed.schema)
+    case _ =>
+      (before.map(_.withColumn("_change_type", lit("delete"))).toSeq ++
+        after.map(_.withColumn("_change_type", lit("insert")))).reduce(_ unionByName _)
   }
 
   /** Best-effort reclamation of replacement vectors no commit will
@@ -1439,21 +1499,6 @@ class QbeastTable private (spark: SparkSession, tablePath: String) {
     written.foreach { case (_, rel, _, _) =>
       try fs.delete(new Path(tablePath, rel), false)
       catch { case scala.util.control.NonFatal(_) => }
-    }
-  }
-
-  /** True when any touched file's post-operation masked fraction would
-   * exceed the configured threshold — the merge-on-read budget gate. */
-  private def overMaskBudget(
-      written: Seq[(String, String, Long, Long)],
-      affected: Vector[IndexFile]): Boolean = {
-    val maxFraction = spark.conf
-      .getOption("spark.qbeast.dv.maxDeletedFraction").map(_.toDouble)
-      .getOrElse(graft.write.DeletionVectors.MaxMaskedFraction)
-    val byName = affected.map(f => new Path(f.path).getName -> f).toMap
-    written.exists { case (name, _, _, total) =>
-      byName.get(name).exists(f =>
-        f.elementCount > 0 && total.toDouble / f.elementCount > maxFraction)
     }
   }
 

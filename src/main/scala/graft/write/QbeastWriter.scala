@@ -543,7 +543,39 @@ object QbeastWriter {
       bloomSpec: Option[BloomWriteSpec] = None,
       hllSpec: Option[HllWriteSpec] = None,
       kllSpec: Option[KllWriteSpec] = None,
+      mappingSchema: Option[StructType] = None): Seq[IndexFile] =
+    indexParts(spark, tablePath,
+      Seq(IndexPart(data0, revision, existingStatus, numElements, frozenWeights)),
+      rollupSize, constraints, bloomSpec, hllSpec, kllSpec, mappingSchema)
+
+  /** One revision's rows in an [[indexParts]] write. Cube weights come
+   * from `frozenWeights` (rows rewritten into the cubes of their own
+   * revision), else from `domains` (a domain pass [[analyze]] already
+   * ran), else from a domain pass over `data`. The write's constraints
+   * gate the rows of `checked` parts only. */
+  final case class IndexPart(
+      data: DataFrame,
+      revision: Revision,
+      existingStatus: Option[IndexStatus],
+      numElements: Long,
+      frozenWeights: Option[Map[CubeId, Weight]] = None,
+      domains: Option[Map[CubeId, Long]] = None,
+      checked: Boolean = true)
+
+  /** Index every part into its own revision and write them all through
+   * ONE exchange and one writer stage (no commit); each file records its
+   * part's revision. The parts share the table's schema. */
+  def indexParts(
+      spark: SparkSession,
+      tablePath: String,
+      parts: Seq[IndexPart],
+      rollupSize: Option[Long] = None,
+      constraints: Seq[(String, String)] = Nil,
+      bloomSpec: Option[BloomWriteSpec] = None,
+      hllSpec: Option[HllWriteSpec] = None,
+      kllSpec: Option[KllWriteSpec] = None,
       mappingSchema: Option[StructType] = None): Seq[IndexFile] = {
+    require(parts.nonEmpty, "indexParts needs at least one part")
 
     lazy val tableSnap = QbeastLog
       .lightSnapshot(tablePath, spark.sparkContext.hadoopConfiguration)
@@ -561,9 +593,9 @@ object QbeastWriter {
       .filter(graft.core.model.ColumnMapping.isEnabled)
     val physMap = mschema
       .map(graft.core.model.ColumnMapping.toPhysicalMap).getOrElse(Map.empty)
-    val data =
-      if (physMap.isEmpty) data0
-      else graft.core.model.ColumnMapping.toPhysicalDf(data0, mschema.get)
+    val physical = parts.map(p =>
+      if (physMap.isEmpty) p.data
+      else graft.core.model.ColumnMapping.toPhysicalDf(p.data, mschema.get))
     val constraintsPhys =
       if (physMap.isEmpty) constraints
       else constraints.map { case (n, sql) =>
@@ -591,123 +623,109 @@ object QbeastWriter {
     // resolve case-insensitively against the written schema; a column
     // this batch doesn't carry (schema evolution) or an ineligible
     // type is skipped — readers treat a missing filter conservatively
+    val dataSchema = physical.head.schema
     val bloomCols: Seq[String] = bloom.cols.flatMap(c =>
-      data.schema.fields.find(f => f.name.equalsIgnoreCase(physCol(c)) &&
+      dataSchema.fields.find(f => f.name.equalsIgnoreCase(physCol(c)) &&
         bloomEligible(f.dataType)).map(_.name)).distinct
     val hllCols: Seq[String] = hll.cols.flatMap(c =>
-      data.schema.fields.find(f => f.name.equalsIgnoreCase(physCol(c)) &&
+      dataSchema.fields.find(f => f.name.equalsIgnoreCase(physCol(c)) &&
         hllEligible(f.dataType)).map(_.name)).distinct
     val kllCols: Seq[String] = kll.cols.flatMap(c =>
-      data.schema.fields.find(f => f.name.equalsIgnoreCase(physCol(c)) &&
+      dataSchema.fields.find(f => f.name.equalsIgnoreCase(physCol(c)) &&
         KllCollector.eligible(f.dataType)).map(_.name)).distinct
+    val checks = if (parts.exists(_.checked)) constraintsPhys else Nil
 
-    val dims = revision.dimensionCount
-    val coordCols = revision.columnTransformers.lazyZip(revision.transformations)
-      .map((t, tr) => ColumnIndexer.coordinateColumn(t, tr))
-    val weightCol = ColumnIndexer.weightColumn(revision.columnNames)
+    // the target files of every part, indexed by the INT each row
+    // carries: the index is what rides the write exchange and sort (4 B
+    // vs 36 B per row, and int comparisons in the sort), the writer task
+    // resolves index → name, revision and layout once per file
+    val targets = mutable.ArrayBuffer.empty[FileTarget]
+    val taggedParts = parts.lazyZip(physical).map { (part, data) =>
+      val revision = part.revision
+      val dims = revision.dimensionCount
+      val coordCols = revision.columnTransformers.lazyZip(revision.transformations)
+        .map((t, tr) => ColumnIndexer.coordinateColumn(t, tr))
+      val weightCol = ColumnIndexer.weightColumn(revision.columnNames)
+      val (cubeWeights, estCounts) = part.frozenWeights match {
+        case Some(w) =>
+          val counts = part.existingStatus
+            .map(_.cubeStatuses.map { case (c, s) => c -> s.elementCount })
+            .getOrElse(Map.empty[CubeId, Long])
+          (w, counts.toMap)
+        case None =>
+          val domains = part.domains.getOrElse(
+            domainPass(spark, data, revision, part.numElements))
+          val existingCounts = part.existingStatus.map(_.subtreeCounts).getOrElse(Map.empty)
+          OTreeAlgorithm.estimateCubeWeights(domains, existingCounts,
+            revision.desiredCubeSize)
+      }
 
-    val (cubeWeights, estCounts) = frozenWeights match {
-      case Some(w) =>
-        val counts = existingStatus.map(_.cubeStatuses.map { case (c, s) => c -> s.elementCount })
-          .getOrElse(Map.empty[CubeId, Long])
-        (w, counts.toMap)
-      case None =>
-        // ---- pass 1: per-partition local trees → global cube domains ----
-        val prepared = data.select((coordCols :+ weightCol).map(c => c.cast("double")): _*)
-        val numPartitions = math.max(1, classic(prepared).rdd.getNumPartitions)
-        // reference knob: spark.qbeast.index.cubeDomainsBufferCapacity
-        val bufferCapacity = spark.conf
-          .getOption("spark.qbeast.index.cubeDomainsBufferCapacity")
-          .map(_.toLong).getOrElse(QbeastOptions.DefaultBufferCapacity)
-        // validated on the DRIVER: a bad value (≤ 0, or past Int range
-        // where .toInt truncates negative) must fail the write here
-        // with the config named, not as a per-task executor crash
-        require(bufferCapacity > 0 && bufferCapacity <= Int.MaxValue,
-          "spark.qbeast.index.cubeDomainsBufferCapacity must be in " +
-            s"(0, ${Int.MaxValue}], got $bufferCapacity")
-        val groupSize = OTreeAlgorithm.groupCubeSize(revision.desiredCubeSize,
-          numPartitions, numElements, bufferCapacity)
-        val domainsRdd = classic(prepared).queryExecution.toRdd.mapPartitions { rows =>
-          val builder = new LocalOTreeBuilder(dims, groupSize, bufferCapacity.toInt)
-          rows.foreach { row =>
-            val point = new Array[Double](dims)
-            var d = 0
-            var anyNull = false
-            while (d < dims) {
-              if (row.isNullAt(d)) anyNull = true else point(d) = row.getDouble(d)
-              d += 1
-            }
-            // the weight is murmur3 over the indexed columns — never null
-            if (!anyNull) builder.add(point, row.getDouble(dims).toInt)
-          }
-          builder.result()
-        }
-        val domains = domainsRdd.reduceByKey(_ + _).collect()
-          .map { case (s, d) => CubeId.fromString(dims, s) -> d }.toMap
+      // ---- cube assignment + rollup target file (one expr/row) ----
+      val groups = OTreeAlgorithm.computeRollupGroups(
+        if (estCounts.nonEmpty) estCounts
+        else Map(CubeId.root(dims) -> math.max(part.numElements, 1L)),
+        rollupSize.getOrElse(revision.desiredCubeSize.toLong))
+      // rollup groups seal at up to ~2x the target rows — size the
+      // filters for that worst case, or the real bits/key halves and the
+      // fp rate blows up. VIABILITY gate: when the per-file byte cap
+      // clamps the filter below ~3 bits per expected key, the fp rate is
+      // so high it prunes nothing while still bloating every log entry —
+      // skip building filters for these files (readers treat missing
+      // filters conservatively). Hit with the default 5M cubeSize: set a
+      // smaller rollupSize or lower bloomFilterBits to re-enable.
+      val bloomExpectedRows = 2L * rollupSize.getOrElse(revision.desiredCubeSize.toLong)
+      val bloomNumBits = BloomCollector.numBitsFor(bloomExpectedRows, bloom.bitsPerKey)
+      val bloomBits =
+        if (bloomCols.isEmpty || bloomNumBits < 3L * bloomExpectedRows) 0L else bloomNumBits
+      // one file per GROUP (a heavily-subdivided parent may seal several
+      // groups — distinct files keep sizes < 2×rollupSize at any
+      // dimension count)
+      def mintFile(): Int = {
+        targets += FileTarget(java.util.UUID.randomUUID().toString, revision.revisionID,
+          dims, bloomBits)
+        targets.length - 1
+      }
+      val fileByCube: Map[CubeId, Int] = groups.flatMap { case (_, ms) =>
+        val idx = mintFile()
+        ms.map(_ -> idx)
+      }.toMap
+      val defaultFile = fileByCube.getOrElse(CubeId.root(dims), mintFile())
+      val bWeights = spark.sparkContext.broadcast(cubeWeights)
+      val bFiles = spark.sparkContext.broadcast(fileByCube)
 
-        val existingCounts = existingStatus.map(_.subtreeCounts).getOrElse(Map.empty)
-        OTreeAlgorithm.estimateCubeWeights(domains, existingCounts,
-          revision.desiredCubeSize)
-    }
-
-    // ---- pass 2: cube assignment + rollup target file (one expr/row) ----
-    val groups = OTreeAlgorithm.computeRollupGroups(
-      if (estCounts.nonEmpty) estCounts
-      else Map(CubeId.root(dims) -> math.max(numElements, 1L)),
-      rollupSize.getOrElse(revision.desiredCubeSize.toLong))
-    // one file per GROUP (a heavily-subdivided parent may seal several
-    // groups — distinct files keep sizes < 2×rollupSize at any
-    // dimension count). Rows carry an INT index into `fileNames`, not
-    // the 36-char UUID string: the index is what rides the write
-    // exchange and sort (4 B vs 36 B per row, and int comparisons in
-    // the sort), the writer task resolves index → name once per file.
-    val fileNamesBuf = scala.collection.mutable.ArrayBuffer.empty[String]
-    def mintFile(): Int = {
-      fileNamesBuf += java.util.UUID.randomUUID().toString
-      fileNamesBuf.length - 1
-    }
-    val fileByCube: Map[CubeId, Int] = groups.flatMap { case (_, ms) =>
-      val idx = mintFile()
-      ms.map(_ -> idx)
-    }.toMap
-    val defaultFile = fileByCube.getOrElse(CubeId.root(dims), mintFile())
-    val fileNames = fileNamesBuf.toArray
-    val bWeights = spark.sparkContext.broadcast(cubeWeights)
-    val bFiles = spark.sparkContext.broadcast(fileByCube)
-
-    // one pass per row: target cube + rollup file together, as a native
-    // codegen expression (graft.expressions.CubeFileAssign) — the write
-    // projection stays inside whole-stage codegen, no Seq[Double]
-    // boxing or tuple-encoder hop per row
-    val assigner = new graft.expressions.CubeFileAssigner(bWeights, bFiles, defaultFile)
-    val shims = org.apache.spark.sql.GraftShims
-    val assignCol = shims.column(graft.expressions.CubeFileAssign(
-      shims.expression(array(coordCols.map(_.cast("double")): _*)),
-      shims.expression(weightCol),
-      assigner))
-
-    val dataSchema = data.schema
-    val tagged0 = data
-      .withColumn("_qbeastAssign", assignCol)
-      .withColumn(QbeastColumns.cubeColumnName, col("_qbeastAssign.cube"))
-      .withColumn(QbeastColumns.weightColumnName, weightCol)
-      .withColumn(QbeastColumns.fileUUIDColumnName, col("_qbeastAssign.file"))
-      .drop("_qbeastAssign")
-    // CHECK-constraint enforcement column: index of the first violated
-    // constraint, -1 when the row passes (TRUE or NULL = pass, SQL
-    // semantics). Evaluated map-side in the SAME execution as the
-    // write, so the rows checked are exactly the rows written — a
-    // separate validation job would let a nondeterministic input pass
-    // validation yet write violating rows. The write task throws on the
-    // first >= 0 it sees (see writeFiles); the column itself is never
-    // written to parquet (the writer projects only dataSchema columns).
-    val checked =
-      if (constraintsPhys.isEmpty) tagged0
+      // one pass per row: target cube + rollup file together, as a native
+      // codegen expression (graft.expressions.CubeFileAssign) — the write
+      // projection stays inside whole-stage codegen, no Seq[Double]
+      // boxing or tuple-encoder hop per row
+      val assigner = new graft.expressions.CubeFileAssigner(bWeights, bFiles, defaultFile)
+      val shims = org.apache.spark.sql.GraftShims
+      val assignCol = shims.column(graft.expressions.CubeFileAssign(
+        shims.expression(array(coordCols.map(_.cast("double")): _*)),
+        shims.expression(weightCol),
+        assigner))
+      val tagged0 = data
+        .withColumn("_qbeastAssign", assignCol)
+        .withColumn(QbeastColumns.cubeColumnName, col("_qbeastAssign.cube"))
+        .withColumn(QbeastColumns.weightColumnName, weightCol)
+        .withColumn(QbeastColumns.fileUUIDColumnName, col("_qbeastAssign.file"))
+        .drop("_qbeastAssign")
+      // CHECK-constraint enforcement column: index of the first violated
+      // constraint, -1 when the row passes (TRUE or NULL = pass, SQL
+      // semantics). Evaluated map-side in the SAME execution as the
+      // write, so the rows checked are exactly the rows written — a
+      // separate validation job would let a nondeterministic input pass
+      // validation yet write violating rows. The write task throws on the
+      // first >= 0 it sees (see writeFiles); the column itself is never
+      // written to parquet (the writer projects only dataSchema columns).
+      if (checks.isEmpty) tagged0
       else tagged0.withColumn("_qbeastCheck",
-        constraintsPhys.zipWithIndex.foldRight(lit(-1)) { case (((_, sql), i), acc) =>
+        if (!part.checked) lit(-1)
+        else checks.zipWithIndex.foldRight(lit(-1)) { case (((_, sql), i), acc) =>
           when(not(coalesce(expr(sql), lit(true))), lit(i)).otherwise(acc)
         })
-    val shuffled = checked.repartition(col(QbeastColumns.fileUUIDColumnName))
+    }
+    val shuffled = taggedParts.reduce(_ union _)
+      .repartition(col(QbeastColumns.fileUUIDColumnName))
     // Rows are ALWAYS clustered by target file within each partition:
     // the physical writer streams ONE open parquet writer per task,
     // closing each file when its run of rows ends (the same discipline
@@ -732,22 +750,10 @@ object QbeastWriter {
         col(QbeastColumns.cubeColumnName),
         col(QbeastColumns.weightColumnName))
 
-    // rollup groups seal at up to ~2x the target rows — size the
-    // filters for that worst case, or the real bits/key halves and the
-    // fp rate blows up. VIABILITY gate: when the per-file byte cap
-    // clamps the filter below ~3 bits per expected key, the fp rate is
-    // so high it prunes nothing while still bloating every log entry —
-    // skip building filters for this write (readers treat missing
-    // filters conservatively). Hit with the default 5M cubeSize: set a
-    // smaller rollupSize or lower bloomFilterBits to re-enable.
-    val bloomExpectedRows = 2L * rollupSize.getOrElse(revision.desiredCubeSize.toLong)
-    val bloomNumBits = BloomCollector.numBitsFor(bloomExpectedRows, bloom.bitsPerKey)
-    val bloomCols1 =
-      if (bloomNumBits < 3L * bloomExpectedRows) Nil else bloomCols
-
     // bloom keys as extra codegen columns AFTER the shuffle+sort (a
     // projection preserves both), so the 8-byte hashes never ride the
     // exchange and the writer's per-row cost is one getLong
+    val bloomCols1 = if (targets.exists(_.bloomBits > 0)) bloomCols else Nil
     val taggedB = bloomCols1.zipWithIndex.foldLeft(tagged) { case (df, (c, j)) =>
       df.withColumn(s"_qbeastBloomH$j", xxhash64(col(c)))
     }
@@ -763,10 +769,155 @@ object QbeastWriter {
         graft.ops.Sketch.portableHash32(col(c).cast("string")))
     }
 
-    // ---- pass 3: physical write with per-cube block accounting ----
-    writeFiles(spark, tablePath, taggedH, dataSchema, dims, revision.revisionID,
-      spark.sparkContext.broadcast(fileNames),
-      constraintsPhys, bloomCols1, bloomNumBits, hllCols, kllCols, kll.k)
+    // ---- physical write with per-cube block accounting ----
+    writeFiles(spark, tablePath, taggedH, dataSchema,
+      spark.sparkContext.broadcast(targets.toArray),
+      checks, bloomCols1, hllCols, kllCols, kll.k)
+  }
+
+  /** A target file of a write: its name, revision, index dimensions and
+   * bloom filter size (0 = no filter). */
+  final case class FileTarget(name: String, revisionId: Long, dims: Int, bloomBits: Long)
+
+  /** Cube domains of `data` (physical names) under `revision`:
+   * per-partition local trees, reduced by cube. */
+  private def domainPass(
+      spark: SparkSession,
+      data: DataFrame,
+      revision: Revision,
+      numElements: Long): Map[CubeId, Long] = {
+    val prepared = data.select(
+      (domainInputs(revision) :+ ColumnIndexer.weightColumn(revision.columnNames))
+        .map(_.cast("double")): _*)
+    val numPartitions = math.max(1, classic(prepared).rdd.getNumPartitions)
+    val bufferCapacity = domainsBufferCapacity(spark)
+    val dims = revision.dimensionCount
+    val groupSize = OTreeAlgorithm.groupCubeSize(revision.desiredCubeSize,
+      numPartitions, numElements, bufferCapacity)
+    val domainsRdd = classic(prepared).queryExecution.toRdd.mapPartitions { rows =>
+      val builder = new LocalOTreeBuilder(dims, groupSize, bufferCapacity.toInt)
+      rows.foreach(row => addPoint(builder, row, 0, dims))
+      builder.result()
+    }
+    domainsRdd.reduceByKey(_ + _).collect()
+      .map { case (s, d) => CubeId.fromString(dims, s) -> d }.toMap
+  }
+
+  private def domainInputs(revision: Revision): Seq[org.apache.spark.sql.Column] =
+    revision.columnTransformers.lazyZip(revision.transformations)
+      .map((t, tr) => ColumnIndexer.coordinateColumn(t, tr))
+
+  /** reference knob: spark.qbeast.index.cubeDomainsBufferCapacity.
+   * Validated on the DRIVER: a bad value (≤ 0, or past Int range where
+   * .toInt truncates negative) must fail the write here with the config
+   * named, not as a per-task executor crash. */
+  private def domainsBufferCapacity(spark: SparkSession): Long = {
+    val bufferCapacity = spark.conf
+      .getOption("spark.qbeast.index.cubeDomainsBufferCapacity")
+      .map(_.toLong).getOrElse(QbeastOptions.DefaultBufferCapacity)
+    require(bufferCapacity > 0 && bufferCapacity <= Int.MaxValue,
+      "spark.qbeast.index.cubeDomainsBufferCapacity must be in " +
+        s"(0, ${Int.MaxValue}], got $bufferCapacity")
+    bufferCapacity
+  }
+
+  /** Add the point at `row(at ..< at + dims)` with the weight at
+   * `row(at + dims)` (all doubles) to a domain pass; rows with a null
+   * coordinate are left out. */
+  private def addPoint(builder: LocalOTreeBuilder, row: InternalRow, at: Int, dims: Int): Unit = {
+    val point = new Array[Double](dims)
+    var d = 0
+    var anyNull = false
+    while (d < dims) {
+      if (row.isNullAt(at + d)) anyNull = true else point(d) = row.getDouble(at + d)
+      d += 1
+    }
+    // the weight is murmur3 over the indexed columns — never null
+    if (!anyNull) builder.add(point, row.getDouble(at + dims).toInt)
+  }
+
+  /** What writing `data0` (logical names) into `existing`'s space takes,
+   * from ONE pass over its rows (one Spark job): the row count, the
+   * indexed columns' min/max and so the revision the rows land in, the
+   * first constraint a row violates, and the cube domains under
+   * `existing`. When the rows keep that revision (the common DML case)
+   * [[indexParts]] reuses the domains; a new revision, or a row count
+   * that changes the domain pass's group size, leaves `domains` empty
+   * and the write re-runs only the domain pass. */
+  final case class Analysis(
+      revision: Revision,
+      isNew: Boolean,
+      numElements: Long,
+      domains: Option[Map[CubeId, Long]],
+      violated: Option[(String, String)])
+
+  def analyze(
+      spark: SparkSession,
+      tablePath: String,
+      data0: DataFrame,
+      existing: Revision,
+      constraints: Seq[(String, String)],
+      mappingSchema: Option[StructType]): Analysis = {
+    val mschema = mappingSchema.filter(graft.core.model.ColumnMapping.isEnabled)
+    val data = mschema.map(graft.core.model.ColumnMapping.toPhysicalDf(data0, _))
+      .getOrElse(data0)
+    val check = constraints.zipWithIndex.foldRight(lit(-1)) { case (((_, sql), i), acc) =>
+      val phys = mschema.map(graft.core.model.ColumnMapping.toPhysicalSql(spark, sql, _))
+        .getOrElse(sql)
+      when(not(coalesce(expr(phys), lit(true))), lit(i)).otherwise(acc)
+    }
+    val statsInputs = existing.columnTransformers.flatMap(_.statsInput)
+    val nStats = statsInputs.length
+    val dims = existing.dimensionCount
+    val rows = org.apache.spark.sql.GraftShims.executeOnce(data.select(
+      (statsInputs ++ domainInputs(existing).map(_.cast("double")) :+
+        ColumnIndexer.weightColumn(existing.columnNames).cast("double") :+ check): _*))
+    val numPartitions = math.max(1, rows.getNumPartitions)
+    val bufferCapacity = domainsBufferCapacity(spark)
+    // the group size the domain pass would take for a write this small;
+    // checked against the real row count below
+    val groupSize = OTreeAlgorithm.groupCubeSize(existing.desiredCubeSize,
+      numPartitions, 0L, bufferCapacity)
+    val partials = rows.mapPartitions { it =>
+      var n = 0L
+      val lo = Array.fill(nStats)(Double.PositiveInfinity)
+      val hi = Array.fill(nStats)(Double.NegativeInfinity)
+      val seen = new Array[Boolean](nStats)
+      var violated = Int.MaxValue
+      val builder = new LocalOTreeBuilder(dims, groupSize, bufferCapacity.toInt)
+      it.foreach { row =>
+        n += 1
+        var i = 0
+        while (i < nStats) {
+          if (!row.isNullAt(i)) {
+            val v = row.getDouble(i)
+            if (v < lo(i)) lo(i) = v
+            if (v > hi(i)) hi(i) = v
+            seen(i) = true
+          }
+          i += 1
+        }
+        val c = row.getInt(nStats + dims + 1)
+        if (c >= 0 && c < violated) violated = c
+        addPoint(builder, row, nStats, dims)
+      }
+      Iterator.single((n, lo, hi, seen, violated, builder.result().toArray))
+    }.collect()
+    val n = partials.map(_._1).sum
+    val stats = (0 until nStats).flatMap { i =>
+      val ps = partials.filter(_._4(i))
+      if (ps.isEmpty) Seq(null, null) else Seq(ps.map(_._2(i)).min, ps.map(_._3(i)).max)
+    }
+    val (revision, isNew, _) = RevisionFactory.forExisting(existing, tablePath, mschema,
+      org.apache.spark.sql.Row.fromSeq(stats :+ n))
+    val violated = partials.map(_._5).minOption.filter(_ < Int.MaxValue).map(constraints)
+    val sameGroups = OTreeAlgorithm.groupCubeSize(existing.desiredCubeSize, numPartitions,
+      n, bufferCapacity) == groupSize
+    val domains =
+      if (isNew || !sameGroups) None
+      else Some(partials.iterator.flatMap(_._6).toSeq.groupMapReduce(_._1)(_._2)(_ + _)
+        .map { case (c, d) => CubeId.fromString(dims, c) -> d })
+    Analysis(revision, isNew, n, domains, violated)
   }
 
   private[graft] def classic(df: DataFrame): org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row] =
@@ -780,12 +931,9 @@ object QbeastWriter {
       tablePath: String,
       tagged: DataFrame,
       dataSchema: StructType,
-      dims: Int,
-      revisionId: Long,
-      fileNames: org.apache.spark.broadcast.Broadcast[Array[String]],
+      targets: org.apache.spark.broadcast.Broadcast[Array[FileTarget]],
       constraints: Seq[(String, String)] = Nil,
       bloomCols: Seq[String] = Nil,
-      bloomNumBits: Long = 0L,
       hllCols: Seq[String] = Nil,
       kllCols: Seq[String] = Nil,
       kllK: Int = KllCollector.DefaultK): Seq[IndexFile] = {
@@ -838,8 +986,9 @@ object QbeastWriter {
       if (!rows.hasNext) Iterator.empty
       else {
         val conf = serConf.value
+        val files = targets.value
         val attemptId = new TaskAttemptID(
-          new TaskID(new JobID("qbeast", revisionId.toInt), TaskType.MAP, pid), 0)
+          new TaskID(new JobID("qbeast", files.head.revisionId.toInt), TaskType.MAP, pid), 0)
         val context = new TaskAttemptContextImpl(conf, attemptId)
         val project = UnsafeProjection.create(
           fields.zipWithIndex.map { case (f, i) =>
@@ -861,7 +1010,6 @@ object QbeastWriter {
             hll: HllCollector,
             kll: KllCollector)
         val fs = new Path(tablePath).getFileSystem(conf)
-        val names = fileNames.value
         val done = Vector.newBuilder[IndexFile]
         val closed = mutable.HashSet.empty[Int]
         var of: OpenFile = null
@@ -869,11 +1017,13 @@ object QbeastWriter {
         def closeCurrent(): Unit = if (of != null) {
           of.writer.close()
           val status = fs.getFileStatus(of.path)
+          org.apache.spark.sql.GraftShims.addTaskOutput(status.getLen,
+            of.blocks.valuesIterator.map(_._3).sum)
           done += IndexFile(
             path = of.path.getName,
             size = status.getLen,
             modificationTime = status.getModificationTime,
-            revisionId = revisionId,
+            revisionId = files(of.idx).revisionId,
             blocks = of.blocks.iterator.map { case (cube, (mn, mx, cnt)) =>
               Block(cube, Weight(mn), Weight(mx), cnt)
             }.toVector.sortBy(_.cube),
@@ -903,12 +1053,11 @@ object QbeastWriter {
                   s"CHECK constraint $name ($sql) violated by written data")
               }
             }
-            val cube = CubeId.fromBytes(dims, row.getBinary(n))
             val weight = row.getInt(n + 1)
             val fileIdx = row.getInt(n + 2)
             if (of == null || fileIdx != currentIdx) {
               closeCurrent()
-              val uuid = names(fileIdx)
+              val uuid = files(fileIdx).name
               currentIdx = fileIdx
               // the sort invariant is what bounds memory — fail loudly if
               // a plan change ever breaks the contiguous-run contract
@@ -926,9 +1075,9 @@ object QbeastWriter {
                 factory.newInstance(path.toString, dataSchema, context), path,
                 mutable.HashMap.empty,
                 if (collectStats) new FileStatsCollector(dataSchema) else null,
-                if (bloomNames.nonEmpty)
+                if (bloomNames.nonEmpty && files(fileIdx).bloomBits > 0)
                   new BloomCollector(bloomNames, bloomSrcIdx, bloomHashIdx,
-                    bloomNumBits, BloomCollector.NumHashes)
+                    files(fileIdx).bloomBits, BloomCollector.NumHashes)
                 else null,
                 if (hllNames.nonEmpty)
                   new HllCollector(hllNames, hllSrcIdx, hllHashIdx)
@@ -937,6 +1086,7 @@ object QbeastWriter {
                   new KllCollector(kllNames, kllSrcIdx, kllKinds, kllK)
                 else null)
             }
+            val cube = CubeId.fromBytes(files(fileIdx).dims, row.getBinary(n))
             of.writer.write(project(row))
             if (of.stats != null) of.stats.update(row)
             if (of.bloom != null) of.bloom.update(row)

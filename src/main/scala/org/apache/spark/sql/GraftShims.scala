@@ -50,6 +50,33 @@ object GraftShims {
   def expression(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
     classic.ExpressionUtils.expression(c)
 
+  /** Add a closed file's bytes and rows to the running task's output
+   * metrics (their setters are `private[spark]`). A writer that drives
+   * an `OutputWriter` from its own tasks bypasses `FileFormatWriter`,
+   * which is what records them for listeners and the UI otherwise. */
+  def addTaskOutput(bytes: Long, records: Long): Unit =
+    Option(org.apache.spark.TaskContext.get()).foreach { tc =>
+      val m = tc.taskMetrics().outputMetrics
+      m.setBytesWritten(m.bytesWritten + bytes)
+      m.setRecordsWritten(m.recordsWritten + records)
+    }
+
+  /** `df`'s rows from a physical plan prepared WITHOUT adaptive
+   * execution. Adaptive execution runs every exchange as a Spark job of
+   * its own before the job that consumes the result; here each exchange
+   * is a stage of the one job that consumes the returned RDD. Cached
+   * relations the plan reads are built inside that job too. */
+  def executeOnce(df: DataFrame): RDD[InternalRow] = {
+    val c = df.asInstanceOf[classic.Dataset[Row]]
+    org.apache.spark.sql.execution.QueryExecution
+      .prepareExecutedPlan(c.sparkSession, c.queryExecution.optimizedPlan).execute()
+  }
+
+  /** A batch DataFrame over already-computed rows of `schema`. */
+  def frameOf(spark: SparkSession, rows: RDD[InternalRow], schema: StructType): DataFrame =
+    spark.asInstanceOf[classic.SparkSession]
+      .internalCreateDataFrame(rows, schema, isStreaming = false)
+
   /** Wrap an analyzed LogicalPlan as a DataFrame (`Dataset.ofRows` is
    * `private[sql]`) — the MERGE source side arrives as a plan. */
   def ofRows(

@@ -317,6 +317,22 @@ class PipelineOpsSpec extends AnyFunSuite {
     assert(!plan.contains("minhash_sig"), s"signature UDF re-planned:\n$plan")
   }
 
+  test("editDistanceVerifiedPairs runs the bounded edit distance at most twice per pair") {
+    val base = "the quick brown fox jumps over the lazy dog and runs far away"
+    val docs = Seq((1L, base), (2L, base + " now"), (3L, base + " again and again"),
+      (4L, "completely different words make up this other sentence here"))
+      .toDF("doc_id", "text")
+    val out = ops.Dedup.editDistanceVerifiedPairs(docs, "doc_id", "text",
+      threshold = 0.1, maxDist = 5)
+    val got = out.select("id_a", "id_b", "edit_dist").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    assert(got == Set((1L, 2L, 4L)), got)
+    // the thresholded levenshtein already returns -1 past the bound, so
+    // the filter and the output each evaluate it once
+    val plan = out.queryExecution.executedPlan.toString
+    assert("levenshtein\\(".r.findAllMatchIn(plan).size <= 2, plan)
+  }
+
   test("simHashPairs finds every pair within the requested radius (pigeonhole recall)") {
     import spark.implicits._
     // perturbed copies of a base document → plenty of pairs with

@@ -38,6 +38,37 @@ class RoundtripSpec extends AnyFunSuite {
     assert(li.exceptAll(back).count() === 0)
   }
 
+  test("an append reports the bytes and rows it wrote to Spark's task metrics") {
+    import spark.implicits._
+    val dir = TestSpark.tmpDir("qbeast-output-metrics")
+    (1 to 2000).map(i => (i.toLong, i * 0.5)).toDF("a", "b").write.format("qbeast")
+      .option("columnsToIndex", "a,b").option("cubeSize", "300").save(dir)
+    val before = graft.log.QbeastLog.snapshot(dir, spark.sparkContext.hadoopConfiguration)
+      .files.map(_.path).toSet
+    val bytes = new java.util.concurrent.atomic.AtomicLong
+    val records = new java.util.concurrent.atomic.AtomicLong
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach { m =>
+          bytes.addAndGet(m.outputMetrics.bytesWritten)
+          records.addAndGet(m.outputMetrics.recordsWritten)
+        }
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.sql.GraftTestShims.drainListeners(sc)
+    sc.addSparkListener(listener)
+    try {
+      (2001 to 3000).map(i => (i.toLong, i * 0.5)).toDF("a", "b").write.format("qbeast")
+        .mode("append").save(dir)
+      org.apache.spark.sql.GraftTestShims.drainListeners(sc)
+    } finally sc.removeSparkListener(listener)
+    val added = graft.log.QbeastLog.snapshot(dir, sc.hadoopConfiguration)
+      .files.filterNot(f => before.contains(f.path))
+    assert(added.nonEmpty)
+    assert(bytes.get === added.map(_.size).sum)
+    assert(records.get === 1000L)
+  }
+
   test("sampling accuracy within tolerance and deterministic") {
     val li = spark.read.parquet(s"$sf/lineitem.parquet")
     val dir = TestSpark.tmpDir("qbeast-sample")
