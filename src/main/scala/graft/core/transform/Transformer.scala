@@ -19,14 +19,11 @@ sealed trait Transformer extends Serializable {
   def kind: String
 
   /** The per-row value whose min and max are this transformer's stats
-   * (None: it needs none). */
+   * (None: it needs none), gathered by the write's one pass over its rows. */
   def statsInput: Option[Column] = None
 
-  /** Aggregate columns evaluated in the single stats pass. */
-  final def statsColumns: Seq[Column] = statsInput.toSeq.flatMap(v => Seq(min(v), max(v)))
-
-  /** Build the transformation from the stats row; `offset` points at this
-   * transformer's first stat. */
+  /** Build the transformation from the stats row (each `statsInput`'s min
+   * then max); `offset` points at this transformer's first stat. */
   def makeTransformation(stats: Row, offset: Int): Transformation
 
 }

@@ -3,40 +3,28 @@ package graft.index
 import graft.core.model._
 import graft.core.transform._
 
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.Row
 import org.json4s._
 
 /**
  * Decides the revision a write lands in: reuse the existing one, or cut
- * a new revision with a (merged) wider space. All data statistics are
- * gathered in ONE aggregate job (reference:
- * `core/.../index/SparkRevisionFactory.scala:73-110,191-197`).
+ * a new revision with a (merged) wider space. The data statistics come
+ * from the write's one pass over its rows ([[graft.write.QbeastWriter.analyze]];
+ * reference: `core/.../index/SparkRevisionFactory.scala:73-110,191-197`).
  */
 object RevisionFactory {
 
-  /** @return (revision to write into, isNewRevision, numElements)
+  /** The transformers (PHYSICAL names) and cube size a write asks for.
    *
-   * `mappingSchema` is the table's LOGICAL schema carrying the
-   * logical→physical column mapping (None → loaded from the log;
-   * identity tables no-op everywhere). Revisions and transformers are
-   * keyed by PHYSICAL names — immutable across RENAME COLUMN — so the
-   * incoming frame (logical names) is renamed here and `columnsToIndex`
-   * specs are translated; user `columnStats` keys stay LOGICAL. */
-  def computeRevisionChanges(
+   * `physMap` is the table's logical→physical column mapping (empty on
+   * identity tables). Revisions and transformers are keyed by PHYSICAL
+   * names — immutable across RENAME COLUMN — so `columnsToIndex` specs
+   * are translated against `schema`, the physical-named frame's schema. */
+  def spaceOf(
       existing: Option[Revision],
       options: QbeastOptions,
-      tableID: String,
-      data0: DataFrame,
-      mappingSchema: Option[org.apache.spark.sql.types.StructType] = None): (Revision, Boolean, Long) = {
-
-    val mschema = mappingSchema.orElse {
-      scala.util.Try(graft.log.QbeastLog.lightSnapshot(tableID,
-        org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration)
-        .schema).toOption.flatten
-    }.filter(ColumnMapping.isEnabled)
-    val physMap = mschema.map(ColumnMapping.toPhysicalMap).getOrElse(Map.empty)
-    val data = if (physMap.isEmpty) data0 else ColumnMapping.toPhysicalDf(data0, mschema.get)
+      schema: org.apache.spark.sql.types.StructType,
+      physMap: Map[String, String]): (Vector[Transformer], Int) = {
     def translateSpec(spec: String): String =
       if (physMap.isEmpty) spec
       else spec.split(":") match {
@@ -45,11 +33,6 @@ object RevisionFactory {
           physMap.getOrElse(n.trim.toLowerCase(java.util.Locale.ROOT), n.trim) + ":" + k.trim
         case _ => spec
       }
-    // columnStats are keyed by the names the USER writes — logical
-    val statKey: Transformer => String = t =>
-      mschema.map(ColumnMapping.logicalOf(_, t.columnName)).getOrElse(t.columnName)
-
-    val schema = data.schema
     // cubeSize: an append that does NOT explicitly set it inherits the
     // table's configured size — filling in the global default here
     // would fail the revision-reuse checks below and silently reset the
@@ -69,41 +52,34 @@ object RevisionFactory {
           throw new IllegalArgumentException(
             "columnsToIndex is required for the first write of a qbeast table")
       }
-
-    // one job: every transformer's aggregates + the row count
-    val statsCols = transformers.flatMap(_.statsColumns) :+ count(lit(1))
-    decide(existing, options, tableID, cubeSize, transformers, statKey,
-      data.select(statsCols: _*).first())
+    (transformers, cubeSize)
   }
 
-  /** [[computeRevisionChanges]] for rows written into `existing`'s index
-   * space without write options (the DML case), from a stats row the
-   * caller gathered: every transformer's `statsColumns`, then the row
-   * count. */
-  def forExisting(
-      existing: Revision,
-      tableID: String,
-      mappingSchema: Option[org.apache.spark.sql.types.StructType],
-      statsRow: Row): (Revision, Boolean, Long) = {
-    val mschema = mappingSchema.filter(ColumnMapping.isEnabled)
-    decide(Some(existing), QbeastOptions(Map.empty[String, String],
-      defaultCubeSize = existing.desiredCubeSize), tableID, existing.desiredCubeSize,
-      existing.columnTransformers,
-      t => mschema.map(ColumnMapping.logicalOf(_, t.columnName)).getOrElse(t.columnName),
-      statsRow)
-  }
+  /** True when rows indexed by `transformers` at `cubeSize` may keep
+   * `rev`'s space: same columns, kinds and cube size. */
+  def sameSpace(rev: Revision, transformers: Vector[Transformer], cubeSize: Int): Boolean =
+    !rev.isStaging && rev.desiredCubeSize == cubeSize &&
+      rev.columnTransformers.map(t => (t.columnName, t.kind)) ==
+        transformers.map(t => (t.columnName, t.kind))
 
-  /** The revision rows with the stats in `statsRow` land in: `existing`
-   * reused, its space widened under the next ID, or a fresh space. */
-  private def decide(
+  /** The revision rows with the stats in `statsRow` (every transformer's
+   * `statsInput` min and max, then the row count) land in: `existing` reused, its
+   * space widened under the next ID, or a fresh space.
+   * @return (revision to write into, isNewRevision)
+   *
+   * User `columnStats` keys stay LOGICAL: `mschema` maps them. */
+  def decide(
       existing: Option[Revision],
       options: QbeastOptions,
       tableID: String,
-      cubeSize: Int,
       transformers: Vector[Transformer],
-      statKey: Transformer => String,
-      statsRow: Row): (Revision, Boolean, Long) = {
+      cubeSize: Int,
+      mschema: Option[org.apache.spark.sql.types.StructType],
+      statsRow: Row): (Revision, Boolean) = {
     val numElements = statsRow.getLong(statsRow.length - 1)
+    // columnStats are keyed by the names the USER writes — logical
+    val statKey: Transformer => String = t =>
+      mschema.map(ColumnMapping.logicalOf(_, t.columnName)).getOrElse(t.columnName)
 
     var offset = 0
     val newTransformations: Vector[Transformation] = transformers.map { t =>
@@ -120,34 +96,28 @@ object RevisionFactory {
           if (numElements == 0) IdentityTransformation(None)
           else t.makeTransformation(statsRow, offset)
       }
-      offset += t.statsColumns.size
+      offset += 2 * t.statsInput.size
       // user columnStats widen data-derived ranges
       fromStats
     }
 
     existing match {
-      case Some(rev) if !rev.isStaging &&
-          rev.columnTransformers.map(t => (t.columnName, t.kind)) ==
-            transformers.map(t => (t.columnName, t.kind)) &&
-          rev.desiredCubeSize == cubeSize &&
+      case Some(rev) if sameSpace(rev, transformers, cubeSize) &&
           !rev.isSupersededBy(newTransformations) =>
-        (rev, false, numElements)
-      case Some(rev) if !rev.isStaging &&
-          rev.columnTransformers.map(t => (t.columnName, t.kind)) ==
-            transformers.map(t => (t.columnName, t.kind)) &&
-          rev.desiredCubeSize == cubeSize =>
+        (rev, false)
+      case Some(rev) if sameSpace(rev, transformers, cubeSize) =>
         // same space definition, wider domain → merge ranges, bump ID
         val merged = rev.transformations.lazyZip(newTransformations)
           .map((old, nu) => if (old.isSupersededBy(nu)) old.merge(nu) else old)
         (rev.copy(revisionID = rev.revisionID + 1, timestamp = System.currentTimeMillis(),
-          transformations = merged.toVector), true, numElements)
+          transformations = merged.toVector), true)
       case Some(rev) if !rev.isStaging =>
         // different columns / kinds / cube size → fresh space, next ID
         (Revision(rev.revisionID + 1, System.currentTimeMillis(), tableID,
-          cubeSize, transformers, newTransformations), true, numElements)
+          cubeSize, transformers, newTransformations), true)
       case _ =>
         (Revision.firstRevision(tableID, cubeSize, transformers,
-          newTransformations), true, numElements)
+          newTransformations), true)
     }
   }
 

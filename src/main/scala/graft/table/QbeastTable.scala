@@ -1,7 +1,6 @@
 package graft.table
 
 import graft.core.model._
-import graft.index.RevisionFactory
 import graft.log._
 import graft.write.QbeastWriter
 
@@ -436,18 +435,7 @@ class QbeastTable private (spark: SparkSession, tablePath: String)
     val candidates =
       if (s.filesComplete) s.filesOfRevision(rid).filter(f => f.minWeight.fraction <= fraction)
       else DistributedMetadata.selectFiles(spark, s, rid, fraction)
-    if (candidates.isEmpty) return
-
-    val status = statusOf(s, rid)
-    val frozen = status.cubeStatuses.map { case (c, st) => c -> st.maxWeight }.toMap
-    val data = readTableFiles(s, candidates)
-    val numElements = candidates.map(_.elementCount).sum
-
-    val newFiles = QbeastWriter.index(spark, tablePath, data, revision,
-      Some(status), numElements, frozenWeights = Some(frozen))
-
-    if (hooks.nonEmpty) graft.write.PreCommitHook.runHooks(hooks, spark, newFiles)
-    commitRewrite(s, newFiles, candidates)
+    if (candidates.nonEmpty) rewrite(s, candidates, _ => revision, hooks)
   }
 
   /**
@@ -466,14 +454,7 @@ class QbeastTable private (spark: SparkSession, tablePath: String)
     val candidates =
       if (s.filesComplete) s.files.filter(f => oldIds.contains(f.revisionId))
       else DistributedMetadata.filesOfRevisions(spark, s, oldIds)
-    if (candidates.isEmpty) return
-
-    val data = readTableFiles(s, candidates)
-    val numElements = candidates.map(_.elementCount).sum
-    val status = statusOf(s, latest.revisionID)
-    val newFiles = QbeastWriter.index(spark, tablePath, data, latest,
-      Some(status), numElements)
-    commitRewrite(s, newFiles, candidates)
+    if (candidates.nonEmpty) rewrite(s, candidates, _ => latest)
   }
 
   /** Index the staging (revision-0) files into the latest revision
@@ -490,13 +471,7 @@ class QbeastTable private (spark: SparkSession, tablePath: String)
     val revision = s.lastRevision.filterNot(_.isStaging).getOrElse(
       throw new IllegalStateException(
         "no indexed revision to optimize staging files into; append indexed data first"))
-    val data = readTableFiles(s, staging)
-    val numElements = data.count()
-    val status = statusOf(s, revision.revisionID)
-    val newFiles = QbeastWriter.index(spark, tablePath, data, revision,
-      Some(status), numElements)
-    if (hooks.nonEmpty) graft.write.PreCommitHook.runHooks(hooks, spark, newFiles)
-    commitRewrite(s, newFiles, staging)
+    rewrite(s, staging, _ => revision, hooks)
   }
 
   /** Materialize every deletion vector without a full repack (Delta's
@@ -528,26 +503,10 @@ class QbeastTable private (spark: SparkSession, tablePath: String)
       if (s.filesComplete) s.files.filter(f => wanted.contains(f.path))
       else DistributedMetadata.filesWithPaths(spark, s, wanted)
     if (candidates.isEmpty) return
-    val latest = s.lastRevision.filterNot(_.isStaging)
-    val adds = candidates.groupBy(_.revisionId).toSeq.flatMap { case (rid, group) =>
-      val data = readTableFiles(s, group)
-      val staging = rid == Revision.StagingID
-      val revision =
-        if (staging)
-          latest.getOrElse(throw new IllegalStateException(
-            "no indexed revision to optimize staging files into; append indexed data first"))
-        else s.revisions(rid)
-      val status = statusOf(s, revision.revisionID)
-      // indexed files keep their revision's weights (pure re-pack);
-      // staging data gets weighted fresh, like optimizeUnindexed
-      val frozen =
-        if (staging) None
-        else Some(status.cubeStatuses.map { case (c, st) => c -> st.maxWeight }.toMap)
-      val n = if (staging) data.count() else group.map(_.elementCount).sum
-      QbeastWriter.index(spark, tablePath, data, revision, Some(status), n,
-        frozenWeights = frozen)
-    }
-    commitRewrite(s, adds, candidates)
+    rewrite(s, candidates, rid =>
+      if (rid != Revision.StagingID) s.revisions(rid)
+      else s.lastRevision.filterNot(_.isStaging).getOrElse(throw new IllegalStateException(
+        "no indexed revision to optimize staging files into; append indexed data first")))
   }
 
   /**
@@ -741,32 +700,44 @@ class QbeastTable private (spark: SparkSession, tablePath: String)
       if (f.elementCount > 0) f.elementCount else rollupTarget).sum
     val estOut = math.max(1L, (estRows + rollupTarget - 1) / rollupTarget)
     if (estOut * 2 > small.length) return
-
-    // Latest-revision smalls repack FROZEN (their rows are already in
-    // the revision's subtree counts — re-estimating would double-count
-    // them and wrongly subdivide, the optimize() argument); smalls of
-    // other revisions and staging fold INTO latest with fresh
-    // estimation (their rows are new to it, the compactRevisions
-    // argument).
-    val (inLatest, others) = small.partition(_.revisionId == latest.revisionID)
-    val status = statusOf(s, latest.revisionID)
-    val adds = Seq.newBuilder[IndexFile]
-    if (others.nonEmpty) {
-      val data = readTableFiles(s, others)
-      val known = others.map(_.elementCount)
-      val n = if (known.forall(_ > 0)) known.sum else data.count()
-      adds ++= QbeastWriter.index(spark, tablePath, data, latest,
-        Some(status), n)
-    }
-    if (inLatest.nonEmpty) {
-      val data = readTableFiles(s, inLatest)
-      val frozen = status.cubeStatuses.map { case (c, st) => c -> st.maxWeight }.toMap
-      adds ++= QbeastWriter.index(spark, tablePath, data, latest,
-        Some(status), inLatest.map(_.elementCount).sum,
-        frozenWeights = Some(frozen))
-    }
-    commitRewrite(s, adds.result(), small)
+    rewrite(s, small, _ => latest)
   }
+
+  /** The one maintenance rewrite: re-index `files` of `s` (each into the
+   * revision `into` maps its revision ID to) in ONE write, run the
+   * pre-commit `hooks` on the new files, and commit them in place of
+   * `files` as a layout-only change. */
+  private def rewrite(
+      s: QbeastSnapshot,
+      files: Seq[IndexFile],
+      into: Long => Revision,
+      hooks: Seq[graft.write.PreCommitHook] = Nil): Unit = {
+    val adds = QbeastWriter.indexParts(spark, tablePath, rewriteParts(s, files, into))
+    if (hooks.nonEmpty) graft.write.PreCommitHook.runHooks(hooks, spark, adds)
+    commitRewrite(s, adds, files)
+  }
+
+  /** The [[QbeastWriter.IndexPart]]s that re-index `files` of `s`, read
+   * through the replacement vectors `masks` when given, into the
+   * revision `into` maps each file's revision ID to. One rule: rows that
+   * stay in their own revision keep its FROZEN cube weights (they are
+   * already in its subtree counts; re-estimating would double-count them
+   * and wrongly subdivide), rows that move into another revision (staging
+   * files, an older revision) are new to it and are estimated fresh,
+   * their row count coming from the write's domain pass. */
+  private def rewriteParts(
+      s: QbeastSnapshot,
+      files: Seq[IndexFile],
+      into: Long => Revision,
+      masks: Option[Map[String, String]] = None): Seq[QbeastWriter.IndexPart] =
+    files.groupBy { f =>
+      val target = into(f.revisionId).revisionID
+      (target, f.revisionId == target)
+    }.toSeq.map { case ((target, frozen), group) =>
+      QbeastWriter.IndexPart(readTableFiles(s, group, masks), into(group.head.revisionId),
+        Some(statusOf(s, target)), group.map(_.elementCount).sum, frozen = frozen,
+        checked = false)
+    }
 
   private def commitRewrite(
       s: QbeastSnapshot,
@@ -899,8 +870,8 @@ class QbeastTable private (spark: SparkSession, tablePath: String)
     val nondetCond = analyzedFilter.expressions.exists(!_.deterministic)
     require(!nondetCond,
       "DELETE/UPDATE conditions must be deterministic (e.g. no rand()): " +
-        "the condition is evaluated once to find affected files and again " +
-        "to rewrite them, and the two runs must agree")
+        "the change feed, the written row images and a later re-run of the " +
+        "statement must all agree on which rows it matched")
     assignments.foreach { asgn =>
       val analyzedAssign =
         table.select(Assignments(table.schema, asgn): _*).queryExecution.analyzed
@@ -968,7 +939,7 @@ class QbeastTable private (spark: SparkSession, tablePath: String)
     keyedChange(s, source.select(keys.map(col): _*), keys, "DELETE", None)._1
   }
 
-  /** Table CHECK constraints in the ordered shape QbeastWriter.index
+  /** Table CHECK constraints in the ordered shape QbeastWriter.indexParts
    * expects for PER-ROW enforcement inside the write task — the
    * backstop that makes changed-row writes safe even when the driver-side
    * pre-validation ran against a different execution of the plan. */
@@ -1347,20 +1318,15 @@ class QbeastTable private (spark: SparkSession, tablePath: String)
           "table: append indexed data or optimize() first so written rows have an " +
           "index space to land in"))
       val replacements = vectors.map { case (name, rel, _, _) => name -> rel }.toMap
-      val kept = if (masked) Nil else touched.groupBy(_.revisionId).toSeq.map {
-        case (rid, files) =>
-          // staging (unindexed) survivors fold into the latest indexed
-          // revision — same move optimizeUnindexed makes
-          val revision = if (rid == Revision.StagingID) indexSpace else s.revisions(rid)
-          val status = s.indexStatus(revision.revisionID)
-          val frozen = status.cubeStatuses.map { case (c, st) => c -> st.maxWeight }.toMap
-          QbeastWriter.IndexPart(readTableFiles(s, files, Some(replacements)), revision,
-            Some(status), files.map(_.elementCount).sum, frozenWeights = Some(frozen),
-            checked = false)
-      }
+      // staging (unindexed) survivors fold into the latest indexed
+      // revision — same move optimizeUnindexed makes
+      val kept = if (masked) Nil else rewriteParts(s, touched,
+        rid => if (rid == Revision.StagingID) indexSpace else s.revisions(rid),
+        Some(replacements))
       val checks = constraintsFor(s)
       val analysis = written.map { df =>
-        val a = QbeastWriter.analyze(spark, tablePath, df, indexSpace, checks, s.schema)
+        val a = QbeastWriter.analyze(spark, tablePath, df, Some(indexSpace),
+          QbeastOptions(Map.empty[String, String]), checks, s.schema)
         a.violated.foreach { case (name, sql) =>
           throw new IllegalArgumentException(
             s"CHECK constraint $name ($sql) violated by $writtenLabel data")

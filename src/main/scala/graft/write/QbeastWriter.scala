@@ -158,7 +158,7 @@ object QbeastWriter {
       s"column name(s) ${reserved.mkString(", ")} are reserved by the qbeast " +
         "writer; rename them before writing")
     // appending WITHOUT an indexed column fails here with the column
-    // named, instead of deep in the stats job after a full scan
+    // named, instead of deep in the write's pass after a full scan
     snapshot.lastRevision.filterNot(_.isStaging).foreach { rev =>
       if (mode == SaveMode.Append) {
         val have = data.schema.fieldNames.map(_.toLowerCase).toSet
@@ -197,7 +197,7 @@ object QbeastWriter {
     val dataAligned = SchemaEvolution.alignTypes(data, tableSchema)
     // CHECK constraints recorded on the table gate every written row
     // (appends, overwrites, streaming batches). Enforced PER ROW inside
-    // the write task (Delta's invariant-check discipline, see index()):
+    // the write task (Delta's invariant-check discipline, see indexParts):
     // a separate validation job would execute the input plan twice, and
     // a nondeterministic input (rand(), a source re-read between jobs)
     // could pass the validation run yet write violating rows — the rows
@@ -284,7 +284,7 @@ object QbeastWriter {
     // revision's transformers keyed by the OLD physical names — absent
     // from the new frame once an indexed column was renamed. Re-express
     // them as the OLD logical names (the ones the user knows) so the
-    // stats job resolves or fails NAMED; the revision is fresh either
+    // write's one pass resolves or fails NAMED; the revision is fresh either
     // way (different key names never reuse the old space).
     val options2 =
       if (isOverwrite && boolOpt("overwriteSchema") && options1.columnsToIndex.isEmpty)
@@ -295,21 +295,28 @@ object QbeastWriter {
           case _ => options1
         }
       else options1
-    val (revision, isNewRevision0, numElements) =
-      RevisionFactory.computeRevisionChanges(existingRevision, options2, tablePath,
-        dataAligned, mappingSchema = Some(tableSchema))
+    // one pass over the rows: count, indexed min/max and, when they keep
+    // the existing space, cube domains. CHECK constraints are not part of
+    // it: they gate the written rows inside the write task (see above)
+    val analysis = analyze(spark, tablePath, dataAligned, existingRevision, options2,
+      constraints = Nil, mappingSchema = Some(tableSchema))
+    val revision = analysis.revision
     // never collide with IDs already in the log after an overwrite
     val revision1 =
       if (isOverwrite && snapshot.lastRevisionID >= revision.revisionID)
         revision.copy(revisionID = snapshot.lastRevisionID + 1)
       else revision
-    val isNewRevision = isNewRevision0 || (revision1 ne revision)
+    val isNewRevision = analysis.isNew || (revision1 ne revision)
 
     val existingStatus =
       if (!isNewRevision && !isOverwrite) Some(snapshot.indexStatus(revision1.revisionID))
       else None
 
-    val files0 = index(spark, tablePath, dataAligned, revision1, existingStatus, numElements,
+    // the domains stay valid under an overwrite's renumbered revision:
+    // its space is the analyzed one
+    val files0 = indexParts(spark, tablePath,
+      Seq(IndexPart(dataAligned, revision1, existingStatus, analysis.numElements,
+        domains = analysis.domains)),
       rollupSize = options1.rollupSize, constraints = tableConstraints,
       bloomSpec = Some(BloomWriteSpec(bloomCols, bloomBits)),
       hllSpec = Some(HllWriteSpec(hllCols)),
@@ -525,46 +532,29 @@ object QbeastWriter {
 
   final case class KllWriteSpec(cols: Seq[String], k: Int)
 
-  /** Index `data` into `revision` and write the parquet files (no
-   * commit). Shared by write and optimize. `bloomSpec` None = derive
-   * from the table's persisted config (the DML/optimize paths, which
-   * must keep rebuilding filters the table was configured with);
-   * Some(BloomWriteSpec(Nil, _)) = explicitly none. */
-  def index(
-      spark: SparkSession,
-      tablePath: String,
-      data0: DataFrame,
-      revision: Revision,
-      existingStatus: Option[IndexStatus],
-      numElements: Long,
-      frozenWeights: Option[Map[CubeId, Weight]] = None,
-      rollupSize: Option[Long] = None,
-      constraints: Seq[(String, String)] = Nil,
-      bloomSpec: Option[BloomWriteSpec] = None,
-      hllSpec: Option[HllWriteSpec] = None,
-      kllSpec: Option[KllWriteSpec] = None,
-      mappingSchema: Option[StructType] = None): Seq[IndexFile] =
-    indexParts(spark, tablePath,
-      Seq(IndexPart(data0, revision, existingStatus, numElements, frozenWeights)),
-      rollupSize, constraints, bloomSpec, hllSpec, kllSpec, mappingSchema)
-
-  /** One revision's rows in an [[indexParts]] write. Cube weights come
-   * from `frozenWeights` (rows rewritten into the cubes of their own
-   * revision), else from `domains` (a domain pass [[analyze]] already
-   * ran), else from a domain pass over `data`. The write's constraints
-   * gate the rows of `checked` parts only. */
+  /** One revision's rows in an [[indexParts]] write. A `frozen` part
+   * (rows rewritten into the cubes of their own revision) keeps the cube
+   * weights of `existingStatus`; any other part is estimated fresh from
+   * `domains` (a domain pass [[analyze]] already ran), else from a
+   * domain pass over `data`. `numElements` is the part's row count, 0
+   * when unknown; it only sizes that domain pass. The write's
+   * constraints gate the rows of `checked` parts only. */
   final case class IndexPart(
       data: DataFrame,
       revision: Revision,
       existingStatus: Option[IndexStatus],
       numElements: Long,
-      frozenWeights: Option[Map[CubeId, Weight]] = None,
+      frozen: Boolean = false,
       domains: Option[Map[CubeId, Long]] = None,
       checked: Boolean = true)
 
   /** Index every part into its own revision and write them all through
    * ONE exchange and one writer stage (no commit); each file records its
-   * part's revision. The parts share the table's schema. */
+   * part's revision. The parts share the table's schema. `bloomSpec`
+   * None = derive from the table's persisted config (the DML and rewrite
+   * paths, which must keep rebuilding the filters the table was
+   * configured with); Some(BloomWriteSpec(Nil, _)) = explicitly none;
+   * likewise `hllSpec` and `kllSpec`. */
   def indexParts(
       spark: SparkSession,
       tablePath: String,
@@ -646,19 +636,18 @@ object QbeastWriter {
       val coordCols = revision.columnTransformers.lazyZip(revision.transformations)
         .map((t, tr) => ColumnIndexer.coordinateColumn(t, tr))
       val weightCol = ColumnIndexer.weightColumn(revision.columnNames)
-      val (cubeWeights, estCounts) = part.frozenWeights match {
-        case Some(w) =>
-          val counts = part.existingStatus
-            .map(_.cubeStatuses.map { case (c, s) => c -> s.elementCount })
-            .getOrElse(Map.empty[CubeId, Long])
-          (w, counts.toMap)
-        case None =>
+      val (cubeWeights, estCounts) =
+        if (part.frozen) {
+          val cubes = part.existingStatus.toSeq.flatMap(_.cubeStatuses)
+          (cubes.map { case (c, s) => c -> s.maxWeight }.toMap,
+            cubes.map { case (c, s) => c -> s.elementCount }.toMap)
+        } else {
           val domains = part.domains.getOrElse(
             domainPass(spark, data, revision, part.numElements))
           val existingCounts = part.existingStatus.map(_.subtreeCounts).getOrElse(Map.empty)
           OTreeAlgorithm.estimateCubeWeights(domains, existingCounts,
             revision.desiredCubeSize)
-      }
+        }
 
       // ---- cube assignment + rollup target file (one expr/row) ----
       val groups = OTreeAlgorithm.computeRollupGroups(
@@ -779,28 +768,18 @@ object QbeastWriter {
    * bloom filter size (0 = no filter). */
   final case class FileTarget(name: String, revisionId: Long, dims: Int, bloomBits: Long)
 
-  /** Cube domains of `data` (physical names) under `revision`:
-   * per-partition local trees, reduced by cube. */
+  /** Row count and cube domains of `data` (physical names) under
+   * `revision`, from one pass; `numElements` is the row count when known
+   * (0 otherwise). A count whose domain pass takes another group size
+   * runs the pass again with the real count. */
   private def domainPass(
       spark: SparkSession,
       data: DataFrame,
       revision: Revision,
       numElements: Long): Map[CubeId, Long] = {
-    val prepared = data.select(
-      (domainInputs(revision) :+ ColumnIndexer.weightColumn(revision.columnNames))
-        .map(_.cast("double")): _*)
-    val numPartitions = math.max(1, classic(prepared).rdd.getNumPartitions)
-    val bufferCapacity = domainsBufferCapacity(spark)
-    val dims = revision.dimensionCount
-    val groupSize = OTreeAlgorithm.groupCubeSize(revision.desiredCubeSize,
-      numPartitions, numElements, bufferCapacity)
-    val domainsRdd = classic(prepared).queryExecution.toRdd.mapPartitions { rows =>
-      val builder = new LocalOTreeBuilder(dims, groupSize, bufferCapacity.toInt)
-      rows.foreach(row => addPoint(builder, row, 0, dims))
-      builder.result()
-    }
-    domainsRdd.reduceByKey(_ + _).collect()
-      .map { case (s, d) => CubeId.fromString(dims, s) -> d }.toMap
+    val p = pass(spark, data, Nil, Some(revision), lit(-1), numElements)
+    if (p.sameGroups) p.domains
+    else pass(spark, data, Nil, Some(revision), lit(-1), p.n).domains
   }
 
   private def domainInputs(revision: Revision): Seq[org.apache.spark.sql.Column] =
@@ -836,14 +815,107 @@ object QbeastWriter {
     if (!anyNull) builder.add(point, row.getDouble(at + dims).toInt)
   }
 
-  /** What writing `data0` (logical names) into `existing`'s space takes,
-   * from ONE pass over its rows (one Spark job): the row count, the
-   * indexed columns' min/max and so the revision the rows land in, the
-   * first constraint a row violates, and the cube domains under
-   * `existing`. When the rows keep that revision (the common DML case)
-   * [[indexParts]] reuses the domains; a new revision, or a row count
-   * that changes the domain pass's group size, leaves `domains` empty
-   * and the write re-runs only the domain pass. */
+  /** One pass over `data` (physical names; one Spark job): its row
+   * count, the min/max of each `stats` column (null when it has no
+   * value), the index of the first violated `check` (-1 = none), and its
+   * cube domains under `space` (empty without one), built as
+   * per-partition local trees. `sameGroups` is false when the real row
+   * count gives the domain pass another group size than `numElements`
+   * (0 = unknown) did. */
+  private final case class Pass(
+      n: Long,
+      stats: Seq[Any],
+      violated: Int,
+      domains: Map[CubeId, Long],
+      sameGroups: Boolean)
+
+  private def pass(
+      spark: SparkSession,
+      data: DataFrame,
+      stats: Seq[org.apache.spark.sql.Column],
+      space: Option[Revision],
+      check: org.apache.spark.sql.Column,
+      numElements: Long): Pass = {
+    val nStats = stats.length
+    val dims = space.map(_.dimensionCount).getOrElse(0)
+    val domainCols = space.toSeq.flatMap(rev => domainInputs(rev) :+
+      ColumnIndexer.weightColumn(rev.columnNames)).map(_.cast("double"))
+    val rows = org.apache.spark.sql.GraftShims.executeOnce(
+      data.select((stats ++ domainCols :+ check): _*))
+    val numPartitions = math.max(1, rows.getNumPartitions)
+    val bufferCapacity = domainsBufferCapacity(spark)
+    val cubeSize = space.map(_.desiredCubeSize).getOrElse(1)
+    val groupSize = OTreeAlgorithm.groupCubeSize(cubeSize, numPartitions, numElements,
+      bufferCapacity)
+    val checkAt = nStats + domainCols.length
+    val total = rows.mapPartitions { it =>
+      val p = new PassPartial(nStats)
+      val builder =
+        if (dims == 0) null else new LocalOTreeBuilder(dims, groupSize, bufferCapacity.toInt)
+      it.foreach { row =>
+        p.n += 1
+        var i = 0
+        while (i < nStats) {
+          if (!row.isNullAt(i)) {
+            val v = row.getDouble(i)
+            if (v < p.lo(i)) p.lo(i) = v
+            if (v > p.hi(i)) p.hi(i) = v
+          }
+          i += 1
+        }
+        val c = row.getInt(checkAt)
+        if (c >= 0 && c < p.violated) p.violated = c
+        if (builder != null) addPoint(builder, row, nStats, dims)
+      }
+      if (builder != null) builder.result().foreach { case (c, d) => p.addDomain(c, d) }
+      Iterator.single(p)
+    }.treeAggregate(new PassPartial(nStats))(_ merge _, _ merge _)
+    val minMax = (0 until nStats).flatMap { i =>
+      if (total.lo(i) > total.hi(i)) Seq(null, null) else Seq(total.lo(i), total.hi(i))
+    }
+    val sameGroups = OTreeAlgorithm.groupCubeSize(cubeSize, numPartitions, total.n,
+      bufferCapacity) == groupSize
+    Pass(total.n, minMax, if (total.violated == Int.MaxValue) -1 else total.violated,
+      total.domains.iterator.map { case (c, d) => CubeId.fromString(dims, c) -> d }.toMap,
+      sameGroups)
+  }
+
+  /** A [[pass]]'s running result, merged across partitions on the
+   * executors so the driver receives one row count and one domain per
+   * cube. `lo > hi` marks a stats column with no value. */
+  private final class PassPartial(nStats: Int) extends Serializable {
+    var n = 0L
+    val lo: Array[Double] = Array.fill(nStats)(Double.PositiveInfinity)
+    val hi: Array[Double] = Array.fill(nStats)(Double.NegativeInfinity)
+    var violated: Int = Int.MaxValue
+    val domains: mutable.HashMap[String, Long] = mutable.HashMap.empty
+
+    def addDomain(cube: String, d: Long): Unit =
+      domains.update(cube, domains.getOrElse(cube, 0L) + d)
+
+    def merge(o: PassPartial): PassPartial = {
+      n += o.n
+      var i = 0
+      while (i < nStats) {
+        lo(i) = math.min(lo(i), o.lo(i))
+        hi(i) = math.max(hi(i), o.hi(i))
+        i += 1
+      }
+      violated = math.min(violated, o.violated)
+      o.domains.foreach { case (c, d) => addDomain(c, d) }
+      this
+    }
+  }
+
+  /** What writing `data0` (logical names) with `options` takes, from ONE
+   * pass over its rows (one Spark job): the row count, the indexed
+   * columns' min/max and so the revision the rows land in (`existing`
+   * kept, widened, or a fresh space; no `existing` = a first write), the
+   * first of `constraints` a row violates, and the cube domains under
+   * `existing` when the rows keep its space. [[indexParts]] reuses the
+   * domains; a new revision, or a row count that changes the domain
+   * pass's group size, leaves `domains` empty and the write re-runs only
+   * the domain pass. */
   final case class Analysis(
       revision: Revision,
       isNew: Boolean,
@@ -855,69 +927,26 @@ object QbeastWriter {
       spark: SparkSession,
       tablePath: String,
       data0: DataFrame,
-      existing: Revision,
+      existing: Option[Revision],
+      options: QbeastOptions,
       constraints: Seq[(String, String)],
       mappingSchema: Option[StructType]): Analysis = {
     val mschema = mappingSchema.filter(graft.core.model.ColumnMapping.isEnabled)
     val data = mschema.map(graft.core.model.ColumnMapping.toPhysicalDf(data0, _))
       .getOrElse(data0)
+    val (transformers, cubeSize) = RevisionFactory.spaceOf(existing, options, data.schema,
+      mschema.map(graft.core.model.ColumnMapping.toPhysicalMap).getOrElse(Map.empty))
     val check = constraints.zipWithIndex.foldRight(lit(-1)) { case (((_, sql), i), acc) =>
       val phys = mschema.map(graft.core.model.ColumnMapping.toPhysicalSql(spark, sql, _))
         .getOrElse(sql)
       when(not(coalesce(expr(phys), lit(true))), lit(i)).otherwise(acc)
     }
-    val statsInputs = existing.columnTransformers.flatMap(_.statsInput)
-    val nStats = statsInputs.length
-    val dims = existing.dimensionCount
-    val rows = org.apache.spark.sql.GraftShims.executeOnce(data.select(
-      (statsInputs ++ domainInputs(existing).map(_.cast("double")) :+
-        ColumnIndexer.weightColumn(existing.columnNames).cast("double") :+ check): _*))
-    val numPartitions = math.max(1, rows.getNumPartitions)
-    val bufferCapacity = domainsBufferCapacity(spark)
-    // the group size the domain pass would take for a write this small;
-    // checked against the real row count below
-    val groupSize = OTreeAlgorithm.groupCubeSize(existing.desiredCubeSize,
-      numPartitions, 0L, bufferCapacity)
-    val partials = rows.mapPartitions { it =>
-      var n = 0L
-      val lo = Array.fill(nStats)(Double.PositiveInfinity)
-      val hi = Array.fill(nStats)(Double.NegativeInfinity)
-      val seen = new Array[Boolean](nStats)
-      var violated = Int.MaxValue
-      val builder = new LocalOTreeBuilder(dims, groupSize, bufferCapacity.toInt)
-      it.foreach { row =>
-        n += 1
-        var i = 0
-        while (i < nStats) {
-          if (!row.isNullAt(i)) {
-            val v = row.getDouble(i)
-            if (v < lo(i)) lo(i) = v
-            if (v > hi(i)) hi(i) = v
-            seen(i) = true
-          }
-          i += 1
-        }
-        val c = row.getInt(nStats + dims + 1)
-        if (c >= 0 && c < violated) violated = c
-        addPoint(builder, row, nStats, dims)
-      }
-      Iterator.single((n, lo, hi, seen, violated, builder.result().toArray))
-    }.collect()
-    val n = partials.map(_._1).sum
-    val stats = (0 until nStats).flatMap { i =>
-      val ps = partials.filter(_._4(i))
-      if (ps.isEmpty) Seq(null, null) else Seq(ps.map(_._2(i)).min, ps.map(_._3(i)).max)
-    }
-    val (revision, isNew, _) = RevisionFactory.forExisting(existing, tablePath, mschema,
-      org.apache.spark.sql.Row.fromSeq(stats :+ n))
-    val violated = partials.map(_._5).minOption.filter(_ < Int.MaxValue).map(constraints)
-    val sameGroups = OTreeAlgorithm.groupCubeSize(existing.desiredCubeSize, numPartitions,
-      n, bufferCapacity) == groupSize
-    val domains =
-      if (isNew || !sameGroups) None
-      else Some(partials.iterator.flatMap(_._6).toSeq.groupMapReduce(_._1)(_._2)(_ + _)
-        .map { case (c, d) => CubeId.fromString(dims, c) -> d })
-    Analysis(revision, isNew, n, domains, violated)
+    val space = existing.filter(RevisionFactory.sameSpace(_, transformers, cubeSize))
+    val p = pass(spark, data, transformers.flatMap(_.statsInput), space, check, 0L)
+    val (revision, isNew) = RevisionFactory.decide(existing, options, tablePath, transformers,
+      cubeSize, mschema, org.apache.spark.sql.Row.fromSeq(p.stats :+ p.n))
+    Analysis(revision, isNew, p.n, Some(p.domains).filter(_ => p.sameGroups && !isNew),
+      Some(p.violated).filter(_ >= 0).map(constraints))
   }
 
   private[graft] def classic(df: DataFrame): org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row] =
@@ -954,7 +983,7 @@ object QbeastWriter {
     val n = dataSchema.length
     val fields = dataSchema.fields
     // bloom layout: names + source positions (null check) + hash-column
-    // positions (appended after cube/weight/uuid[/check] by index())
+    // positions (appended after cube/weight/uuid[/check] by indexParts)
     val bloomNames = bloomCols.toArray
     val bloomSrcIdx = bloomNames.map(dataSchema.fieldIndex)
     val bloomBase = n + 3 + (if (constraints.nonEmpty) 1 else 0)
@@ -970,17 +999,6 @@ object QbeastWriter {
     val kllSrcIdx = kllNames.map(dataSchema.fieldIndex)
     val kllKinds = kllSrcIdx.map(i => KllCollector.kindOf(fields(i).dataType))
     val plan = classic(tagged).queryExecution.executedPlan
-    // plan-evidence hook (optimization rounds): dump the write
-    // pipeline's formatted plan — the exchange the rows actually ride —
-    // to the configured path; zero cost when unset
-    spark.conf.getOption("spark.qbeast.debug.writePlanDump").foreach { p =>
-      try java.nio.file.Files.writeString(java.nio.file.Paths.get(p),
-        classic(tagged).queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode) +
-          "\n== Write pipeline output schema ==\n" +
-          plan.schema.simpleString + "\n")
-      catch { case scala.util.control.NonFatal(_) => () }
-    }
 
     val filesRdd = plan.execute().mapPartitionsWithIndex { (pid, rows) =>
       if (!rows.hasNext) Iterator.empty
