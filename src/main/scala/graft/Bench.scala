@@ -58,7 +58,7 @@ object Bench {
       // measured a cached-sink read (0.38 s at sf1) while s19 honestly
       // rebuilt (19.4 s) — expect s20 to rise to s19's class in r14
       "orders_dvcdf_stream", "orders_dvcdf_stream_sink",
-      // s23's copy-on-write rewrite twin (the 'x'-unit replay), r15
+      // s23's copy-on-write rewrite twin (the diff-unit replay), r15
       "orders_xcdf_stream", "orders_xcdf_stream_sink")
 
   private def deleteDir(spark: SparkSession, path: String): Unit = {

@@ -409,12 +409,13 @@ object SparkEntry {
       // the change feed as a stream over a MERGE-ON-READ table: the
       // DELETE and UPDATE commits persist no change files, only
       // deletion vectors (builder-asserted), so the source replays each
-      // commit's vector delta as delete rows ('v' units) — same change
-      // multiset as s19's copy-on-write feed, hence the same oracle
+      // commit's vector delta as delete rows (vector-delta units) —
+      // same change multiset as s19's copy-on-write feed, hence the
+      // same oracle
       QTables.ensureExtensions(s)
-      ops.Streaming.streamDvChangeFeed(s, s"$dir/orders.parquet",
+      ops.Streaming.streamChangeFeed(s, s"$dir/orders.parquet",
           QTables.cachePathFor(dir, "orders_dvcdf_stream"),
-          QTables.cachePathFor(dir, "orders_dvcdf_stream_sink"))
+          QTables.cachePathFor(dir, "orders_dvcdf_stream_sink"), strategy = "dv")
         .groupBy("_commit_version", "_change_type")
         .agg(count(lit(1)).as("n"), dec(col("o_totalprice")).as("sum_price"))
     }),
@@ -422,12 +423,12 @@ object SparkEntry {
       // the change feed as a stream over COPY-ON-WRITE DML with no
       // persisted change files: the DELETE and UPDATE are remove+add
       // rewrite commits (builder-asserted), replayed as atomic
-      // whole-commit diff units ('x') — same change multiset as s19,
+      // whole-commit diff units — same change multiset as s19,
       // hence the same oracle
       QTables.ensureExtensions(s)
-      ops.Streaming.streamRewriteChangeFeed(s, s"$dir/orders.parquet",
+      ops.Streaming.streamChangeFeed(s, s"$dir/orders.parquet",
           QTables.cachePathFor(dir, "orders_xcdf_stream"),
-          QTables.cachePathFor(dir, "orders_xcdf_stream_sink"))
+          QTables.cachePathFor(dir, "orders_xcdf_stream_sink"), strategy = "rewrite")
         .groupBy("_commit_version", "_change_type")
         .agg(count(lit(1)).as("n"), dec(col("o_totalprice")).as("sum_price"))
     }),

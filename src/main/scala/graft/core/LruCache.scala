@@ -50,6 +50,15 @@ final class LruCache[K, V](max: Int, onEvict: (K, V) => Unit = (_: K, _: V) => (
     prev
   }
 
+  /** The cached value, or `make` computed outside the lock and cached
+   * (a concurrent racer's value is overwritten: for values that hold
+   * no resource). */
+  def getOrElseUpdate(k: K, make: => V): V = get(k).getOrElse {
+    val v = make
+    put(k, v)
+    v
+  }
+
   def clear(): Unit = map.synchronized(map.clear())
 
 }

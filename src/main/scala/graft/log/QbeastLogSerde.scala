@@ -27,9 +27,9 @@ final case class CommitInfoAction(operation: String, timestamp: Long) extends Lo
 
 /** Change-data file reference (Delta's AddCDCFile shape): a parquet
  * directory under `_change_data/` holding the commit's net row changes
- * (table schema + `_change_type`), written by DML commits so CDF
- * readers — batch `changes()` and the streaming source's
- * `readChangeFeed` mode — consume a plain file read instead of
+ * (table schema + `_change_type`), written by DML commits so the CDF
+ * decoder ([[graft.cdf.ChangeFeed]], which serves batch `changes()` and
+ * the streaming `readChangeFeed` mode) reads a plain file instead of
  * re-diffing the rewritten files. NOT part of the table content:
  * snapshot replay ignores it. `size` = total bytes, for streaming
  * admission control. */

@@ -691,12 +691,21 @@ object Streaming {
   /**
    * Streaming consumption of a table's CHANGE FEED
    * (`readChangeFeed=true` + `startingVersion=0` on the qbeast stream
-   * source): a CDF-enabled orders table goes through write → append →
-   * copy-on-write DELETE → UPDATE, and the stream delivers every
-   * commit's row-level changes — appends as inserts, DML from the
-   * change files persisted at commit time (`_change_data/`, the Delta
-   * AddCDCFile shape) — exactly once across a restart (first drain
-   * consumes v0, the second resumes from the checkpoint for v1..v3).
+   * source): an orders table goes through write → append → DELETE →
+   * UPDATE, and the stream delivers every commit's row-level changes
+   * exactly once across a restart (the first drain consumes v0, the
+   * second resumes from the checkpoint for v1..v3). `strategy` picks how
+   * the DML commits land, and so which [[graft.cdf.FeedUnit]] replays
+   * them; the change multiset is the same under all three:
+   *  - "cdf": copy-on-write with `enableChangeDataFeed`, read from the
+   *    change files persisted at commit time (the Delta AddCDCFile
+   *    shape);
+   *  - "dv": deletion vectors and no change files, replayed as vector
+   *    deltas;
+   *  - "rewrite": copy-on-write with neither, each DML commit replayed
+   *    as one atomic removes-plus-adds diff.
+   * For "dv" and "rewrite" the builder asserts the DML commits decode to
+   * those units, so the oracle-matched result proves that replay.
    * Returns the drained sink: rows of (orders schema + `_change_type`
    * + `_commit_version`).
    */
@@ -704,7 +713,9 @@ object Streaming {
       spark: SparkSession,
       ordersPath: String,
       tableDir: String,
-      sinkDir: String): DataFrame = {
+      sinkDir: String,
+      strategy: String = "cdf"): DataFrame = {
+    import graft.cdf.FeedUnit.{Diff, VectorDelta}
     val conf = spark.sparkContext.hadoopConfiguration
     val sinkPath = new org.apache.hadoop.fs.Path(sinkDir)
     val fs = sinkPath.getFileSystem(conf)
@@ -727,10 +738,14 @@ object Streaming {
         try q.awaitTermination()
         finally q.stop()
       }
+      val options = strategy match {
+        case "cdf" => Map("enableChangeDataFeed" -> "true")
+        case "dv" => Map("deletionVectors" -> "true")
+        case "rewrite" => Map.empty[String, String]
+      }
       def write(slice: DataFrame, mode: String): Unit = slice.write.format("qbeast")
         .option("columnsToIndex", "o_orderkey,o_totalprice")
-        .option("cubeSize", "5000")
-        .option("enableChangeDataFeed", "true")
+        .option("cubeSize", "5000").options(options)
         .mode(mode).save(tableDir)
       write(o.filter("o_orderkey % 10 < 5"), "overwrite") // v0
       drain() // v0 inserts
@@ -738,141 +753,20 @@ object Streaming {
       val t = graft.table.QbeastTable.forPath(spark, tableDir)
       t.delete("o_orderstatus = 'F' AND o_orderkey % 100 < 50") // v2
       t.update("o_orderkey % 7 = 0", Map("o_totalprice" -> "o_totalprice + 1")) // v3
+      val snap = t.snapshot
+      (2L to snap.version).foreach { v =>
+        val units = graft.cdf.ChangeFeed.decode(v, graft.log.QbeastLog.commitActions(
+          tableDir, conf, v, snap.revisions), _ => None).units
+        require(strategy match {
+          case "dv" => units.exists(_.isInstanceOf[VectorDelta])
+          case "rewrite" => units match {
+            case Seq(Diff(_, parts)) => !parts.exists(_.isInstanceOf[VectorDelta])
+            case _ => false
+          }
+          case _ => true
+        }, s"$strategy CDF fixture: commit $v decodes to $units, so its replay would go untested")
+      }
       drain() // restart: v1..v3 exactly once
-      fs.create(marker, true).close() // publish: build is complete
-    }
-    spark.read.parquet(sinkDir)
-  }
-
-  /**
-   * [[streamChangeFeed]]'s merge-on-read twin: the SAME version history
-   * (overwrite, append, DELETE, UPDATE) on a table with deletion
-   * vectors enabled and NO persisted change files — the DML commits
-   * land as dv actions (plus the update's new images), and the stream
-   * source must replay each commit's vector DELTA as delete rows (the
-   * 'v' unit kind) instead of demanding `enableChangeDataFeed`. The
-   * builder asserts the DML commits really persisted no change file
-   * and really masked (dv actions present), so the oracle-matched
-   * result proves the delta replay, not the 'c' path. Same change-type
-   * multiset as the copy-on-write feed, so the s19 oracle applies
-   * verbatim.
-   */
-  def streamDvChangeFeed(
-      spark: SparkSession,
-      ordersPath: String,
-      tableDir: String,
-      sinkDir: String): DataFrame = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val sinkPath = new org.apache.hadoop.fs.Path(sinkDir)
-    val fs = sinkPath.getFileSystem(conf)
-    val marker = new org.apache.hadoop.fs.Path(sinkDir, "_graft_complete")
-    if (!fs.exists(marker)) {
-      fs.delete(sinkPath, true)
-      fs.delete(new org.apache.hadoop.fs.Path(tableDir), true)
-      val o = spark.read.parquet(ordersPath)
-      val ckpt = fastCheckpointDir()
-      def drain(): Unit = {
-        val q = spark.readStream.format("qbeast")
-          .option("readChangeFeed", "true").option("startingVersion", "0")
-          .load(tableDir)
-          .writeStream.format("parquet")
-          .option("checkpointLocation", ckpt).option("path", sinkDir)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-        try q.awaitTermination()
-        finally q.stop()
-      }
-      def write(slice: DataFrame, mode: String): Unit = slice.write.format("qbeast")
-        .option("columnsToIndex", "o_orderkey,o_totalprice")
-        .option("cubeSize", "5000")
-        .option("deletionVectors", "true") // merge-on-read, NO change feed
-        .mode(mode).save(tableDir)
-      write(o.filter("o_orderkey % 10 < 5"), "overwrite") // v0
-      drain() // v0 inserts
-      write(o.filter("o_orderkey % 10 IN (5, 6)"), "append") // v1
-      val t = graft.table.QbeastTable.forPath(spark, tableDir)
-      t.delete("o_orderstatus = 'F' AND o_orderkey % 100 < 50") // v2: dv masks
-      t.update("o_orderkey % 7 = 0", Map("o_totalprice" -> "o_totalprice + 1")) // v3
-      // the fixture must exercise the vector-delta replay: DML commits
-      // carry dv actions and NO change files
-      val snap = t.snapshot
-      require(snap.dvs.nonEmpty, "dv CDF fixture: the DML must mask")
-      (2L to snap.version).foreach { v =>
-        val acts = graft.log.QbeastLog.commitActions(
-          tableDir, conf, v, snap.revisions)
-        require(!acts.exists(_.isInstanceOf[graft.log.CdcFileAction]),
-          s"dv CDF fixture: commit $v persisted a change file — " +
-            "the 'v' replay path would go untested")
-        require(acts.exists(_.isInstanceOf[graft.log.DvFileAction]),
-          s"dv CDF fixture: commit $v carries no dv action")
-      }
-      drain() // restart: v1..v3 exactly once via 'a' + 'v' units
-      fs.create(marker, true).close() // publish: build is complete
-    }
-    spark.read.parquet(sinkDir)
-  }
-
-  /**
-   * [[streamChangeFeed]]'s copy-on-write twin WITHOUT persisted change
-   * files: the same version history (overwrite, append, DELETE,
-   * UPDATE) on a table with neither `enableChangeDataFeed` nor
-   * deletion vectors, so the DML commits land as remove+add REWRITES.
-   * The stream replays each one as ONE atomic whole-commit diff unit
-   * ('x') building the same EXCEPT ALL before/after frames batch
-   * changes() builds. The builder asserts the DML commits really are
-   * rewrites (removes AND dataChange adds, no change file, no dv
-   * action), so the oracle-matched result proves the 'x' replay — the
-   * change multiset equals the s19 feed, so its oracle applies
-   * verbatim.
-   */
-  def streamRewriteChangeFeed(
-      spark: SparkSession,
-      ordersPath: String,
-      tableDir: String,
-      sinkDir: String): DataFrame = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val sinkPath = new org.apache.hadoop.fs.Path(sinkDir)
-    val fs = sinkPath.getFileSystem(conf)
-    val marker = new org.apache.hadoop.fs.Path(sinkDir, "_graft_complete")
-    if (!fs.exists(marker)) {
-      fs.delete(sinkPath, true)
-      fs.delete(new org.apache.hadoop.fs.Path(tableDir), true)
-      val o = spark.read.parquet(ordersPath)
-      val ckpt = fastCheckpointDir()
-      def drain(): Unit = {
-        val q = spark.readStream.format("qbeast")
-          .option("readChangeFeed", "true").option("startingVersion", "0")
-          .load(tableDir)
-          .writeStream.format("parquet")
-          .option("checkpointLocation", ckpt).option("path", sinkDir)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-        try q.awaitTermination()
-        finally q.stop()
-      }
-      def write(slice: DataFrame, mode: String): Unit = slice.write.format("qbeast")
-        .option("columnsToIndex", "o_orderkey,o_totalprice")
-        .option("cubeSize", "5000") // copy-on-write, NO change feed, NO dv
-        .mode(mode).save(tableDir)
-      write(o.filter("o_orderkey % 10 < 5"), "overwrite") // v0
-      drain() // v0 inserts
-      write(o.filter("o_orderkey % 10 IN (5, 6)"), "append") // v1
-      val t = graft.table.QbeastTable.forPath(spark, tableDir)
-      t.delete("o_orderstatus = 'F' AND o_orderkey % 100 < 50") // v2: rewrite
-      t.update("o_orderkey % 7 = 0", Map("o_totalprice" -> "o_totalprice + 1")) // v3
-      // the fixture must exercise the whole-commit diff replay: DML
-      // commits are rewrites with BOTH sides and no cdc/dv shortcut
-      val snap = t.snapshot
-      (2L to snap.version).foreach { v =>
-        val acts = graft.log.QbeastLog.commitActions(
-          tableDir, conf, v, snap.revisions)
-        require(!acts.exists(_.isInstanceOf[graft.log.CdcFileAction]) &&
-          !acts.exists(_.isInstanceOf[graft.log.DvFileAction]),
-          s"rewrite CDF fixture: commit $v took a cdc/dv shortcut — " +
-            "the 'x' replay path would go untested")
-        require(acts.exists { case graft.log.RemoveFileAction(_) => true; case _ => false } &&
-          acts.exists { case graft.log.AddFileAction(_, true) => true; case _ => false },
-          s"rewrite CDF fixture: commit $v is not a remove+add rewrite")
-      }
-      drain() // restart: v1..v3 exactly once via 'a' + 'x' units
       fs.create(marker, true).close() // publish: build is complete
     }
     spark.read.parquet(sinkDir)

@@ -47,7 +47,7 @@ class QbeastDataSource
     val cdf = parameters.collectFirst {
       case (k, v) if k.equalsIgnoreCase("readChangeFeed") => v
     }.exists(_.equalsIgnoreCase("true"))
-    (shortName(), if (cdf) QbeastStreamSource.withCdfColumns(base) else base)
+    (shortName(), if (cdf) graft.cdf.ChangeFeed.withCdfColumns(base) else base)
   }
 
   override def createSource(

@@ -1,5 +1,6 @@
 package graft.table
 
+import graft.cdf.ChangeFeed
 import graft.core.model._
 import graft.log._
 import graft.write.QbeastWriter
@@ -1032,8 +1033,18 @@ class QbeastTable private (spark: SparkSession, tablePath: String)
       unique: Option[String] = None): (Long, Long) = {
     val table = pinnedRead(s)
     val Seq(fileCol, idxCol) = freshNames(table.columns.toSeq, DvFileCol, DvIdxCol)
-    val keyed = withIdentity(table, fileCol, idxCol)
-      .join(srcKeys, keys, if (unique.isDefined) "inner" else "left_semi")
+    val identified = withIdentity(table, fileCol, idxCol)
+    // a deleting verb with one key and a local source (rows in hand)
+    // filters on the key values: the semi join's broadcast would run a
+    // job of its own, since a broadcast collects even a local build side
+    // through a job
+    val localKey = unique.isEmpty && keys.size == 1 &&
+      srcKeys.queryExecution.optimizedPlan.isInstanceOf[
+        org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+    val keyed = (
+      if (localKey) identified.filter(col(Assignments.quoted(keys.head))
+        .isin(srcKeys.collect().map(_.get(0)).distinct.toSeq: _*))
+      else identified.join(srcKeys, keys, if (unique.isDefined) "inner" else "left_semi"))
       .select((table.columns.toSeq :+ fileCol :+ idxCol).map(c => col(Assignments.quoted(c))): _*)
     // a CDF feed reads the old rows in full after the discovery job
     val release = mutable.Buffer.empty[() => Unit]
@@ -1427,23 +1438,17 @@ class QbeastTable private (spark: SparkSession, tablePath: String)
    * every old row whatever replaces it, so the old rows are the deletes
    * and the written rows the inserts. A rewrite (`diff`) copied the
    * unchanged rows verbatim, so the file diff reduces to the multiset
-   * differences (after ∖ before, before ∖ after): an identical old and
-   * new row cancel. One signed group-by gives both sides (Spark's own
-   * EXCEPT ALL rewrite); its exchange runs inside the one job that
-   * writes the feed. `rows` is the number of old and written rows. */
+   * net of the two sides ([[ChangeFeed.net]]): an identical old and new
+   * row cancel. Its exchange runs inside the one job that writes the
+   * feed. `rows` is the number of old and written rows. */
   private def changeFeed(
       before: Option[org.apache.spark.sql.DataFrame],
       after: Option[org.apache.spark.sql.DataFrame],
       diff: Boolean,
       rows: Long): org.apache.spark.sql.DataFrame = (before, after) match {
     case (Some(b), Some(a)) if diff =>
-      val cols = a.columns.toSeq.map(c => col(Assignments.quoted(c)))
-      val Seq(sign, net) = freshNames(a.columns.toSeq, "__sign", "__net")
-      val signed = a.withColumn(sign, lit(1L)).unionByName(b.withColumn(sign, lit(-1L)))
-      val feed = signed.groupBy(cols: _*).agg(sum(sign).as(net)).filter(col(net) =!= 0L)
-        .select(cols :+ when(col(net) > 0L, lit("insert")).otherwise(lit("delete"))
-          .as("_change_type") :+ explode(sequence(lit(1L), abs(col(net)))).as(net): _*)
-        .drop(net)
+      val feed = ChangeFeed.net(a.withColumn(ChangeFeed.ChangeType, lit("insert"))
+        .unionByName(b.withColumn(ChangeFeed.ChangeType, lit("delete"))))
       val out = org.apache.spark.sql.GraftShims.executeOnce(feed)
       // about as many files as adaptive execution would coalesce the
       // group-by's output to
@@ -1808,11 +1813,9 @@ class QbeastTable private (spark: SparkSession, tablePath: String)
 
   /** Persist a DML commit's change frame (table columns +
    * `_change_type`) under `_change_data/` and return its `cdc` log
-   * action — Delta's AddCDCFile shape. Readers then consume a plain file
-   * read: batch [[changes]] skips the file re-diff, and the STREAMING
-   * `readChangeFeed` mode (which cannot run a stateful EXCEPT ALL inside
-   * a micro-batch) becomes possible for DML commits at all. The only
-   * writer under `_change_data/`. */
+   * action — Delta's AddCDCFile shape. Readers ([[graft.cdf.ChangeFeed]])
+   * then consume a plain file read instead of re-diffing the rewritten
+   * files. The only writer under `_change_data/`. */
   private def persistCdc(
       s: QbeastSnapshot,
       changed: org.apache.spark.sql.DataFrame): LogAction = {
@@ -1953,21 +1956,12 @@ class QbeastTable private (spark: SparkSession, tablePath: String)
 
   /**
    * Change data feed: the row-level changes each commit in
-   * `[startVersion, endVersion]` made to the table, derived from the
-   * commit log's file diff — no change files are written at DML time
-   * (Delta's CDF requires opting in BEFORE the change; this replay
-   * works retroactively on any qbeast table).
-   *
-   * Per commit the net multiset change is computed from ONLY the files
-   * that commit touched: rows of added files minus rows of removed
-   * files are the inserts, the reverse are the deletes (an update
-   * appears as one delete + one insert of the same key). Copy-on-write
-   * rewrites carry survivor rows into the new files, and the multiset
-   * `EXCEPT ALL` cancels them exactly — so cost is O(rows in touched
-   * files) per commit, never O(table). Commits whose adds are all
-   * `dataChange = false` (optimize / compact / checkpoint
-   * consolidation) rearrange rows without changing content and emit
-   * nothing, exactly like Delta's CDF.
+   * `[startVersion, endVersion]` made to the table: the union of the
+   * commits' [[graft.cdf.ChangeFeed]] units, with the deletion-vector
+   * state advanced commit by commit. A commit that persisted its change
+   * data reads it; any other commit's feed is derived from its file
+   * diff, so the replay also works retroactively on tables that never
+   * enabled the feed (Delta's CDF requires opting in BEFORE the change).
    *
    * Output: the table schema (pinned at `endVersion`, so columns added
    * by schema evolution read as null from pre-evolution files) plus
@@ -1986,258 +1980,47 @@ class QbeastTable private (spark: SparkSession, tablePath: String)
       else QbeastLog.snapshot(tablePath, conf, asOfVersion = end)
     val schema = endSnap.schema.getOrElse(
       throw new IllegalStateException(s"qbeast table at $tablePath has no schema"))
-    val fs = new Path(tablePath).getFileSystem(conf)
-
-    def readFiles(paths: Seq[String]): org.apache.spark.sql.DataFrame = {
-      val absolute = paths.map { p =>
-        val abs = new Path(tablePath, p)
-        require(fs.exists(abs),
-          s"changes($startVersion, $end): data file $p was vacuumed — " +
-            "the requested range reaches behind the retention window")
-        abs.toString
-      }
-      ColumnMapping.readParquet(spark, schema, absolute)
-    }
-
-    def tagged(df: org.apache.spark.sql.DataFrame, kind: String, v: Long) =
-      df.withColumn("_change_type", lit(kind))
-        .withColumn("_commit_version", lit(v))
-
-    // deletion-vector state BEFORE each replayed commit: a dv commit's
-    // delete rows are (masked by new vector) AND NOT (masked by old),
-    // and a copy-on-write commit's before-image must exclude rows its
-    // files' vectors had already deleted
-    val running = mutable.HashMap.empty[String, graft.log.DvInfo]
-    val preStart: Option[QbeastSnapshot] =
+    val preStart =
       if (startVersion > 0)
-        Some(QbeastLog.snapshot(tablePath, conf, asOfVersion = startVersion - 1))
+        Some(QbeastLog.lightSnapshot(tablePath, conf, asOfVersion = startVersion - 1))
       else None
-    preStart.foreach(s => running ++= s.dvs)
+    var dvs = preStart.fold(Map.empty[String, String])(
+      _.dvs.map { case (p, i) => new Path(p).getName -> i.dvPath })
 
-    // ---- type-widening era guard -------------------------------------
-    // Every file this replay reads must be readable under the END
-    // schema. That holds whenever each commit-era type UPCASTS into the
-    // end type (the normal widen case: narrow-era files read wide). It
-    // BREAKS when a RESTORE inside the range rolled the schema back
-    // past a widen: wide-era files cannot be read (or faithfully
-    // expressed) under the narrowed end schema — refuse NAMED rather
-    // than crash in the scan or silently narrow values (Delta's CDF
-    // refuses read-incompatible ranges the same way).
-    var eraSchema: Option[org.apache.spark.sql.types.StructType] =
-      preStart.flatMap(_.schema)
-    def eraOf(actions: Seq[LogAction]): Unit =
-      actions.collectFirst {
-        case MetaDataAction(sj, _) if sj.nonEmpty =>
-          org.apache.spark.sql.types.DataType.fromJson(sj)
-            .asInstanceOf[org.apache.spark.sql.types.StructType]
-      }.foreach(s => eraSchema = Some(s))
-    def requireEraReadable(v: Long): Unit = eraSchema.foreach { es =>
-      es.fields.foreach { f =>
-        val phys = ColumnMapping.physicalName(f)
-        schema.fields.find(e =>
-          ColumnMapping.physicalName(e).equalsIgnoreCase(phys)).foreach { e =>
-          if (e.dataType != f.dataType &&
-            !TypeWidening.canWiden(f.dataType, e.dataType))
-            throw new UnsupportedOperationException(
-              s"changes($startVersion, $end): version $v wrote column " +
-                s"${f.name} as ${f.dataType.simpleString}, but the end " +
-                s"schema (version $end) reads it as ${e.dataType.simpleString} " +
-                "— the range crosses a type change that cannot upcast (a " +
-                "RESTORE rolled back past a type widening). Replay with " +
-                "endVersion inside the widened era, or read versions " +
-                "individually with versionAsOf.")
-        }
-      }
+    // Type-widening era guard: every file this replay reads must be
+    // readable under the END schema. That holds whenever each era's
+    // types UPCAST into the end types (narrow-era files read wide). It
+    // breaks when a RESTORE inside the range rolled the schema back past
+    // a widening: refuse NAMED rather than crash in the scan or silently
+    // narrow values (Delta's CDF refuses such ranges the same way). A
+    // commit's removed files and kept files' vectors were written under
+    // the era before it; its added files and change files under the era
+    // it sets.
+    var era = preStart.flatMap(_.schema)
+    def requireEraReadable(v: Long): Unit = era.foreach(ChangeFeed.requireUpcast(_, schema) {
+      (f, e) =>
+        s"changes($startVersion, $end): version $v wrote column " +
+          s"${f.name} as ${f.dataType.simpleString}, but the end " +
+          s"schema (version $end) reads it as ${e.dataType.simpleString} " +
+          "— the range crosses a type change that cannot upcast (a " +
+          "RESTORE rolled back past a type widening). Replay with " +
+          "endVersion inside the widened era, or read versions " +
+          "individually with versionAsOf."
+    })
+    val units = (startVersion to end).flatMap { v =>
+      val c = ChangeFeed.decode(v,
+        QbeastLog.commitActions(tablePath, conf, v, endSnap.revisions), dvs.get)
+      import graft.cdf.FeedUnit._
+      if (c.units.exists { case _: ChangeFile | _: Inserted => false; case _ => true })
+        requireEraReadable(v)
+      era = c.schema.orElse(era)
+      if (c.units.exists { case _: Removed | _: VectorDelta => false; case _ => true })
+        requireEraReadable(v)
+      dvs = c.advance(dvs)
+      c.units
     }
-    def dvNamesFor(paths: Seq[String]): Map[String, String] = {
-      val wanted = paths.map(p => new Path(p).getName).toSet
-      running.collect {
-        case (p, i) if wanted.contains(new Path(p).getName) =>
-          new Path(p).getName -> i.dvPath
-      }.toMap
-    }
-    def requireDv(dvPath: String, v: Long): String = {
-      val abs = new Path(tablePath, dvPath)
-      require(fs.exists(abs),
-        s"changes($startVersion, $end): deletion vector $dvPath of commit $v " +
-          "was vacuumed — this range cannot be replayed")
-      dvPath
-    }
-    // rows a commit's dv actions newly MASK (delete feed: new vector
-    // minus the pre-commit state) and newly UNMASK (insert feed: old
-    // minus new — ordinary DML only grows a file's vector, but a
-    // RESTORE can set it back to an earlier, SMALLER one, resurrecting
-    // rows) — shared by the dv-only, dv+adds (merge-on-read UPDATE)
-    // and restore replay branches
-    def dvDeltaFrames(
-        dvActs: Seq[graft.log.DvFileAction],
-        v: Long): Seq[org.apache.spark.sql.DataFrame] = {
-      val dvs = graft.write.DeletionVectors
-      val newByName = dvActs.map(d =>
-        new Path(d.path).getName -> requireDv(d.dvPath, v)).toMap
-      val oldByName = dvNamesFor(dvActs.map(_.path))
-      oldByName.values.foreach(requireDv(_, v))
-      val df = readFiles(dvActs.map(_.path))
-      val newProbe = dvs.probeCol(tablePath, newByName, conf)
-      val cols = schema.fieldNames.map(col)
-      if (oldByName.isEmpty)
-        Seq(tagged(df.filter(newProbe).select(cols: _*), "delete", v))
-      else {
-        val oldProbe = dvs.probeCol(tablePath, oldByName, conf)
-        val deletes =
-          tagged(df.filter(newProbe && !oldProbe).select(cols: _*), "delete", v)
-        // grow-only short-circuit: old ⊆ new per file (driver-side,
-        // over the cached sorted index arrays) proves the resurrect
-        // side empty for every ordinary DML commit — only the files a
-        // RESTORE actually SHRANK pay the second probe-scan, and the
-        // scan reads just those files
-        val shrunkNames = oldByName.keySet.filter { n =>
-          val oldIdx = dvs.cached(tablePath, conf, oldByName(n))
-          newByName.get(n) match {
-            case Some(np) => !dvs.subsetOf(oldIdx, dvs.cached(tablePath, conf, np))
-            case None => oldIdx.nonEmpty
-          }
-        }
-        if (shrunkNames.isEmpty) Seq(deletes)
-        else {
-          val shrunkPaths = dvActs.map(_.path)
-            .filter(p => shrunkNames.contains(new Path(p).getName))
-          Seq(deletes,
-            tagged(readFiles(shrunkPaths).filter(oldProbe && !newProbe)
-              .select(cols: _*), "insert", v))
-        }
-      }
-    }
-    // files RE-ADDED while carrying a running mask (restore clears a
-    // file's dv by re-adding it): only their previously-MASKED rows are
-    // new content, so their live-before image joins the before side —
-    // otherwise the whole file would feed as inserts and every
-    // still-live row would double in the replay
-    def liveBeforeOfMaskedReAdds(
-        dataAdds: Seq[String], v: Long): Option[org.apache.spark.sql.DataFrame] = {
-      val masks = dvNamesFor(dataAdds)
-      if (masks.isEmpty) None
-      else {
-        val masked = dataAdds.filter(p => masks.contains(new Path(p).getName))
-        masks.values.foreach(requireDv(_, v))
-        Some(graft.write.DeletionVectors
-          .maskWith(tablePath, masks, conf, readFiles(masked)))
-      }
-    }
-
-    val frames = (startVersion to end).flatMap { v =>
-      val actions = QbeastLog.commitActions(tablePath, conf, v, endSnap.revisions)
-      val cdcDirs = actions.collect { case CdcFileAction(p, _) => p }
-      val dataAdds = actions.collect { case AddFileAction(f, true) => f.path }
-      val anyAdds = actions.exists { case _: AddFileAction => true; case _ => false }
-      val removes = actions.collect { case RemoveFileAction(r) => r.path }
-      val dvActs = actions.collect { case d: graft.log.DvFileAction => d }
-      // era guard, split around the commit's own MetaDataAction: the
-      // commit's REMOVES and dv references are before-images written
-      // under the PRE-commit era (a RESTORE removing wide-era files
-      // carries a narrow MetaDataAction in the same commit — its
-      // delete feed is still wide), while its ADDS and change files
-      // are written under the POST-commit schema
-      if (removes.nonEmpty || dvActs.nonEmpty) requireEraReadable(v)
-      eraOf(actions)
-      if (cdcDirs.nonEmpty || dataAdds.nonEmpty) requireEraReadable(v)
-      def advanceDvState(): Unit = {
-        actions.foreach {
-          case AddFileAction(f, _) => running.remove(f.path)
-          case RemoveFileAction(r) => running.remove(r.path)
-          case graft.log.DvFileAction(p, dvPath, card) =>
-            running.update(p, graft.log.DvInfo(dvPath, card))
-          case _ =>
-        }
-      }
-      def emit(fs0: Seq[org.apache.spark.sql.DataFrame]) = { advanceDvState(); fs0 }
-      if (cdcDirs.nonEmpty) {
-        // the commit persisted its own change data (CDF-enabled DML):
-        // read it directly — no re-diff of the rewritten files
-        val ctField = org.apache.spark.sql.types.StructField("_change_type",
-          org.apache.spark.sql.types.StringType, nullable = false)
-        val absolute = cdcDirs.map { p =>
-          val abs = new Path(tablePath, p)
-          require(fs.exists(abs),
-            s"changes($startVersion, $end): change file $p was vacuumed")
-          abs.toString
-        }
-        // change files are keyed by PHYSICAL names (stable across
-        // renames — see persistCdc); _change_type is CDF infra
-        emit(Seq(ColumnMapping.readParquetWith(spark, schema, Seq(ctField), absolute)
-          .withColumn("_commit_version", lit(v))))
-      }
-      else if (dvActs.nonEmpty && dataAdds.isEmpty && removes.isEmpty) {
-        // dv-only commit without a change file: newly masked rows feed
-        // as deletes; newly unmasked (restore) as inserts
-        emit(dvDeltaFrames(dvActs, v))
-      }
-      else if (anyAdds && dataAdds.isEmpty) emit(Nil) // optimize/compact: content unchanged
-      else if (dataAdds.isEmpty && removes.isEmpty) emit(Nil) // metadata-only commit
-      else if (removes.isEmpty) {
-        // adds — possibly WITH dv actions in the same commit (a
-        // merge-on-read UPDATE run without CDF): the new images are
-        // the insert feed, the freshly masked rows the delete feed;
-        // dv-clearing re-adds (restore) insert only their resurrected rows.
-        // A dv action on a file ADDED in this same commit (a RESTORE
-        // resurrecting a file that was MASKED at the target version:
-        // add + DvFileAction, the file dead at v-1) is not a vector
-        // delta — it is the add's own mask. Its live rows feed as the
-        // inserts; replaying it through the delta path would pair every
-        // masked row as a spurious same-commit insert+delete.
-        val addSet = dataAdds.toSet
-        val (selfDvs, deltaDvs) = dvActs.partition(d => addSet.contains(d.path))
-        val selfMask = selfDvs.map(d =>
-          new Path(d.path).getName -> requireDv(d.dvPath, v)).toMap
-        val after = graft.write.DeletionVectors
-          .maskWith(tablePath, selfMask, conf, readFiles(dataAdds))
-        val inserts = tagged(
-          liveBeforeOfMaskedReAdds(dataAdds, v)
-            .map(after.exceptAll(_)).getOrElse(after), "insert", v)
-        if (deltaDvs.isEmpty) emit(Seq(inserts))
-        else emit(inserts +: dvDeltaFrames(deltaDvs, v))
-      }
-      else {
-        // the before-image excludes rows the removed files' vectors had
-        // already deleted (they changed in an EARLIER commit); a
-        // stats-proved dv DELETE additionally masks OTHER (straddling)
-        // files in the same commit — their newly masked rows join the
-        // delete feed via the vector delta
-        val maskNames = dvNamesFor(removes)
-        maskNames.values.foreach(requireDv(_, v))
-        val removesBefore = graft.write.DeletionVectors
-          .maskWith(tablePath, maskNames, conf, readFiles(removes))
-        // same-commit add+dv (restore resurrecting a masked file): the
-        // vector belongs to the insert side, not the delta feed
-        val addSet = dataAdds.toSet
-        val (selfDvs, deltaDvs) = dvActs.partition(d => addSet.contains(d.path))
-        val dvDeltas =
-          if (deltaDvs.isEmpty) Nil else dvDeltaFrames(deltaDvs, v)
-        if (dataAdds.isEmpty) emit(tagged(removesBefore, "delete", v) +: dvDeltas)
-        else {
-          // a restore can remove, re-add (dv clear) and resurrect in ONE
-          // commit — masked re-adds' live-before rows join the before side
-          val before = liveBeforeOfMaskedReAdds(dataAdds, v)
-            .map(removesBefore.unionByName(_)).getOrElse(removesBefore)
-          val selfMask = selfDvs.map(d =>
-            new Path(d.path).getName -> requireDv(d.dvPath, v)).toMap
-          val after = graft.write.DeletionVectors
-            .maskWith(tablePath, selfMask, conf, readFiles(dataAdds))
-          emit(Seq(
-            tagged(after.exceptAll(before), "insert", v),
-            tagged(before.exceptAll(after), "delete", v)) ++ dvDeltas)
-        }
-      }
-    }
-    frames.reduceOption(_.union(_)).getOrElse {
-      val full = org.apache.spark.sql.types.StructType(schema.fields ++ Seq(
-        org.apache.spark.sql.types.StructField("_change_type",
-          org.apache.spark.sql.types.StringType, nullable = false),
-        org.apache.spark.sql.types.StructField("_commit_version",
-          org.apache.spark.sql.types.LongType, nullable = false)))
-      spark.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](), full)
-    }
+    new ChangeFeed.Reader(spark, tablePath, conf, schema,
+      msg => new IllegalArgumentException(s"changes($startVersion, $end): $msg")).frame(units)
   }
 
   /** Per-depth tree statistics (reference: IndexMetrics SizeStats per

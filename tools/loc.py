@@ -1,10 +1,12 @@
 #!/usr/bin/env python3
 """Code-line count of the Scala sources under src/main.
 
-  python3 tools/loc.py [--per-file] [ROOT]
+  python3 tools/loc.py [--per-file] [--base REV] [ROOT]
 
 Prints the total, and with --per-file one line per file (largest
-first). A line counts when it holds at least one character of code
+first). With --base REV it also prints the net code-line delta of
+src/main against the git revision REV, whose files are read with
+`git show REV:path` (with --per-file, one line per changed file). A line counts when it holds at least one character of code
 outside a comment: blank lines and lines holding only a `//` comment or
 part of a `/* */` block (Scaladoc included; Scala nests block comments)
 are not counted. A line with code and a trailing comment counts. Comment
@@ -13,6 +15,7 @@ and character literals are code. ROOT defaults to the checkout holding
 this script.
 """
 import os
+import subprocess
 import sys
 
 
@@ -98,9 +101,30 @@ def code_lines(text):
     return count
 
 
+def counts_at(root, rev):
+    """{path: code lines} of the src/main Scala files at git revision `rev`."""
+    git = ["git", "-C", root]
+    names = subprocess.run(git + ["ls-tree", "-r", "--name-only", rev, "--", "src/main"],
+                           check=True, capture_output=True, text=True).stdout.split()
+    out = {}
+    for path in names:
+        if path.endswith(".scala"):
+            text = subprocess.run(git + ["show", f"{rev}:{path}"], check=True,
+                                  capture_output=True).stdout.decode("utf-8")
+            out[path] = code_lines(text)
+    return out
+
+
 def main(argv):
     per_file = "--per-file" in argv
     args = [a for a in argv if a != "--per-file"]
+    base = None
+    if "--base" in args:
+        i = args.index("--base")
+        if i + 1 >= len(args):
+            sys.exit("--base needs a git revision")
+        base = args[i + 1]
+        del args[i:i + 2]
     root = args[0] if args else os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     src = os.path.join(root, "src", "main")
     counts = []
@@ -110,10 +134,20 @@ def main(argv):
                 path = os.path.join(d, name)
                 with open(path, encoding="utf-8") as fh:
                     counts.append((code_lines(fh.read()), os.path.relpath(path, root)))
-    if per_file:
+    total = sum(c for c, _ in counts)
+    if per_file and base is None:
         for c, path in sorted(counts, key=lambda t: (-t[0], t[1])):
             print(f"{c:7d}  {path}")
-    print(f"{sum(c for c, _ in counts):7d}  total ({len(counts)} files under src/main)")
+    print(f"{total:7d}  total ({len(counts)} files under src/main)")
+    if base is not None:
+        old = counts_at(root, base)
+        now = {path: c for c, path in counts}
+        if per_file:
+            deltas = [(now.get(p, 0) - old.get(p, 0), p) for p in set(old) | set(now)]
+            for d, path in sorted((t for t in deltas if t[0]), key=lambda t: (t[0], t[1])):
+                print(f"{d:+7d}  {path}")
+        before = sum(old.values())
+        print(f"{total - before:+7d}  net against {base} ({before} -> {total})")
 
 
 if __name__ == "__main__":
